@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import arrow_stage_partitions
+
 # shifts coordinates non-negative so integer DIV == floor division
 # (Spark DIV truncates toward zero); bounds the exact-arithmetic proof
 _OFF = 1 << 20
@@ -300,7 +302,7 @@ def match_trajectories(
     # the per-row python to plain tuples)
     import pandas as pd
 
-    n_part = max(full.sparkSession.sparkContext.defaultParallelism, 8)
+    n_part = arrow_stage_partitions(full.sparkSession)
     arranged = full.repartition(n_part, "traj_id").sortWithinPartitions(
         "traj_id"
     )

@@ -262,48 +262,6 @@ def _dht_payload(tc: int, th: int, table: tuple[list[int], list[int]]) -> bytes:
 
 # --- bit I/O ---------------------------------------------------------------
 
-class _BitReader:
-    """MSB-first reader over UNSTUFFED entropy bytes. Reads past the end
-    return 1-bits (the spec's pad value), so a final partially-padded
-    byte decodes without bounds branches in the hot loop."""
-
-    __slots__ = ("buf", "i", "n", "acc", "end")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.i = 0
-        self.n = 0
-        self.acc = 0
-        self.end = len(buf)
-
-    def _fill(self, need: int) -> None:
-        buf, i = self.buf, self.i
-        while self.n < need:
-            self.acc = (self.acc << 8) | (buf[i] if i < self.end else 0xFF)
-            i += 1
-            self.n += 8
-        self.i = i
-
-    def peek16(self) -> int:
-        if self.n < 16:
-            self._fill(16)
-        return (self.acc >> (self.n - 16)) & 0xFFFF
-
-    def skip(self, k: int) -> None:
-        self.n -= k
-        self.acc &= (1 << self.n) - 1
-
-    def read(self, k: int) -> int:
-        if k == 0:
-            return 0
-        if self.n < k:
-            self._fill(k)
-        self.n -= k
-        v = (self.acc >> self.n) & ((1 << k) - 1)
-        self.acc &= (1 << self.n) - 1
-        return v
-
-
 class _BitWriter:
     __slots__ = ("buf", "acc", "n")
 
@@ -326,11 +284,6 @@ class _BitWriter:
     def flush(self) -> None:
         if self.n:
             self.write((1 << (8 - self.n)) - 1, 8 - self.n)  # pad with 1s
-
-
-def _extend(v: int, s: int) -> int:
-    """T.81 F.12 EXTEND: s-bit magnitude → signed coefficient."""
-    return v - (1 << s) + 1 if v < (1 << (s - 1)) else v
 
 
 # --- decoder ----------------------------------------------------------------

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators.clip import clip_polyline
 from ..operators.coast_merge import merge_coast_paths
+from ..session import arrow_stage_partitions
 from .codec import decode_image, encode_png, phash64
 from .kernels import (
     _coverage_mask,
@@ -43,60 +44,26 @@ AREA_COLORS = {
 }
 
 
-def buffered_group_map(df, key_col: str, render_group, cols, schema):
-    """Many groups per Arrow batch: repartition on ``key_col`` + sort
-    within partitions, then iterate groups inside mapInPandas, buffering
-    the group that spans a batch boundary. One applyInPandas group per
-    key costs ~4 ms of per-group overhead — at millions of tiles that
-    dominates; this shape amortizes it across whole batches. Shared by
-    render_slippy_tiles, the pyramid rollup, and density_tiles so the
-    boundary-buffering logic can never diverge.
-
-    ``render_group(pdf) -> tuple`` produces one output row (``cols``
-    order) per key group; groups arrive sorted by key."""
-    import pandas as pd  # noqa: F811 — kernel-local import for executors
-
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    arranged = df.repartition(n_part, key_col).sortWithinPartitions(key_col)
-
-    def kernel(batches):
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            last_key = pdf[key_col].iloc[-1]
-            head = pdf[pdf[key_col] != last_key]
-            pending = pdf[pdf[key_col] == last_key]
-            if len(head):
-                out = [
-                    render_group(g) for _k, g in head.groupby(key_col, sort=True)
-                ]
-                yield pd.DataFrame(out, columns=cols)
-        if pending is not None and len(pending):
-            out = [
-                render_group(g) for _k, g in pending.groupby(key_col, sort=True)
-            ]
-            yield pd.DataFrame(out, columns=cols)
-
-    return arranged.mapInPandas(kernel, schema=schema)
-
-
 def buffered_group_flatmap(df, key_col: str, group_rows, cols, schema):
-    """Multi-row sibling of :func:`buffered_group_map`: same
-    repartition-on-key + sort-within-partitions + boundary-buffered
-    batch iteration, but ``group_rows(pdf) -> list[tuple]`` may emit
-    ZERO OR MORE output rows per key group (``cols`` order). Used by
-    operators whose per-group kernel expands (e.g. Viterbi trajectory
-    matching emits one row per sequence point) — one applyInPandas
-    group per key costs ~4 ms of per-group overhead, which dominates
-    when groups are tiny and plentiful (guide §4.5 amortization)."""
+    """The engine's one sorted-run group kernel. Many groups per Arrow
+    batch: repartition on ``key_col`` (one task per core) + sort within
+    partitions, then iterate groups inside mapInPandas, buffering the
+    group that spans a batch boundary. One applyInPandas group per key
+    costs ~4 ms of per-group overhead — at millions of tiles that
+    dominates; this shape amortizes it across whole batches (guide §4.5).
+
+    ``group_rows(pdf) -> list[tuple]`` emits ZERO OR MORE output rows
+    (``cols`` order) per key group; groups arrive sorted by key."""
     import pandas as pd  # noqa: F811 — kernel-local import for executors
 
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    n_part = arrow_stage_partitions(df.sparkSession)
     arranged = df.repartition(n_part, key_col).sortWithinPartitions(key_col)
+
+    def emit(pdf):
+        out: list = []
+        for _k, g in pdf.groupby(key_col, sort=True):
+            out.extend(group_rows(g))
+        return pd.DataFrame(out, columns=cols)
 
     def kernel(batches):
         pending: pd.DataFrame | None = None
@@ -110,17 +77,19 @@ def buffered_group_flatmap(df, key_col: str, group_rows, cols, schema):
             head = pdf[pdf[key_col] != last_key]
             pending = pdf[pdf[key_col] == last_key]
             if len(head):
-                out: list = []
-                for _k, g in head.groupby(key_col, sort=True):
-                    out.extend(group_rows(g))
-                yield pd.DataFrame(out, columns=cols)
+                yield emit(head)
         if pending is not None and len(pending):
-            out = []
-            for _k, g in pending.groupby(key_col, sort=True):
-                out.extend(group_rows(g))
-            yield pd.DataFrame(out, columns=cols)
+            yield emit(pending)
 
     return arranged.mapInPandas(kernel, schema=schema)
+
+
+def buffered_group_map(df, key_col: str, render_group, cols, schema):
+    """:func:`buffered_group_flatmap` with exactly one output row
+    (``render_group(pdf) -> tuple``) per key group."""
+    return buffered_group_flatmap(
+        df, key_col, lambda g: [render_group(g)], cols, schema
+    )
 
 
 # ---------------------------------------------------------------------------

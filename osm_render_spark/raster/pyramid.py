@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import arrow_stage_partitions
 from .codec import decode_png, encode_png
 from .ops import LAND_COLOR, buffered_group_map
 
@@ -45,9 +46,14 @@ def downsample2x(img: np.ndarray) -> np.ndarray:
     h, w, c = img.shape
     if h % 2 or w % 2:
         raise ValueError(f"downsample2x needs even dims, got {h}x{w}")
-    blocks = img.reshape(h // 2, 2, w // 2, 2, c).astype(np.uint16)
-    s = blocks.sum(axis=(1, 3))  # ≤ 4*255 fits uint16
-    return ((s + 2) >> 2).astype(np.uint8)
+    # sum of the four strided quarters; ≤ 4*255 fits uint16
+    s = img[0::2, 0::2].astype(np.uint16)
+    s += img[0::2, 1::2]
+    s += img[1::2, 0::2]
+    s += img[1::2, 1::2]
+    s += 2
+    s >>= 2
+    return s.astype(np.uint8)
 
 
 def _compose_parent(children: list[tuple[int, int, bytes]], tile_px: int) -> bytes:
@@ -243,4 +249,9 @@ def build_tile_pyramid(
     out = levels[0]
     for lvl in levels[1:]:
         out = out.unionByName(lvl)
+    if len(levels) > 1:
+        # a union's partition count is the SUM of its inputs'; coalesce
+        # (no shuffle) so a Python sink over the pyramid runs one task
+        # per core instead of one per level-chunk partition
+        out = out.coalesce(arrow_stage_partitions(out.sparkSession))
     return out

@@ -505,6 +505,8 @@ def contour_tiles(
         raise ValueError(f"unknown mode {mode!r}")
     import pyspark.sql.functions as F
 
+    from .ops import buffered_group_flatmap
+
     keyed = raster_col is not None
     src = (
         tiles.withColumnRenamed(raster_col, "raster")
@@ -517,101 +519,58 @@ def contour_tiles(
     key_sel = (["raster"] if keyed else []) + ["tx", "ty"]
     thrs = list(thresholds)
 
-    if mode == "stats":
-        def kernel(batches):
-            for pdf in batches:
-                rows = []
-                for _k, g in _iter_groups(pdf):
-                    got = _assemble_flags(g, tile_px)
-                    if got is None:
-                        continue
-                    p, has_e, has_s = got
-                    r0 = g.iloc[0]
-                    m = _cell_mask(tile_px, has_e, has_s)
-                    for thr in thrs:
-                        case, *_ = _contour_cells(p, thr)
-                        cut = ((case > 0) & (case < 15) & m).sum()
-                        nseg = int(_MS_NSEG[case][m].sum())
-                        rows.append(
-                            (r0["raster"], int(r0["tx"]), int(r0["ty"]),
-                             thr, int(cut), nseg)
-                        )
-                yield pd.DataFrame(
-                    rows,
-                    columns=["raster", "tx", "ty", "thr", "n_cut",
-                             "n_segments"],
-                )
+    def tile_grid(g):
+        got = _assemble_flags(g, tile_px)
+        if got is None:
+            return None
+        p, has_e, has_s = got
+        r0 = g.iloc[0]
+        m = _cell_mask(tile_px, has_e, has_s)
+        return p, m, r0["raster"], int(r0["tx"]), int(r0["ty"])
 
+    if mode == "stats":
+        def group_rows(g):
+            got = tile_grid(g)
+            if got is None:
+                return []
+            p, m, raster, tx, ty = got
+            rows = []
+            for thr in thrs:
+                case, *_ = _contour_cells(p, thr)
+                cut = ((case > 0) & (case < 15) & m).sum()
+                nseg = int(_MS_NSEG[case][m].sum())
+                rows.append((raster, tx, ty, thr, int(cut), nseg))
+            return rows
+
+        cols = ["raster", "tx", "ty", "thr", "n_cut", "n_segments"]
         schema = (
             "raster string, tx long, ty long, thr long, n_cut long, "
             "n_segments long"
         )
         out_cols = key_sel + ["thr", "n_cut", "n_segments"]
     else:
-        def kernel(batches):
-            for pdf in batches:
-                rows = []
-                for _k, g in _iter_groups(pdf):
-                    got = _assemble_flags(g, tile_px)
-                    if got is None:
-                        continue
-                    p, has_e, has_s = got
-                    r0 = g.iloc[0]
-                    m = _cell_mask(tile_px, has_e, has_s)
-                    for thr in thrs:
-                        for seg in _segments_for_tile(
-                            p, m, thr, int(r0["tx"]), int(r0["ty"]), tile_px
-                        ):
-                            rows.append(
-                                (r0["raster"], int(r0["tx"]), int(r0["ty"]),
-                                 thr, *seg)
-                            )
-                yield pd.DataFrame(
-                    rows,
-                    columns=["raster", "tx", "ty", "thr", "x1_ppm",
-                             "y1_ppm", "x2_ppm", "y2_ppm"],
-                )
+        def group_rows(g):
+            got = tile_grid(g)
+            if got is None:
+                return []
+            p, m, raster, tx, ty = got
+            return [
+                (raster, tx, ty, thr, *seg)
+                for thr in thrs
+                for seg in _segments_for_tile(p, m, thr, tx, ty, tile_px)
+            ]
 
+        cols = ["raster", "tx", "ty", "thr", "x1_ppm", "y1_ppm", "x2_ppm",
+                "y2_ppm"]
         schema = (
             "raster string, tx long, ty long, thr long, x1_ppm long, "
             "y1_ppm long, x2_ppm long, y2_ppm long"
         )
         out_cols = key_sel + ["thr", "x1_ppm", "y1_ppm", "x2_ppm", "y2_ppm"]
 
-    n_part = max(tiles.sparkSession.sparkContext.defaultParallelism, 8)
-    arranged = parts.repartition(n_part, "gkey").sortWithinPartitions("gkey")
-    return arranged.mapInPandas(
-        _group_buffered(kernel, "gkey"), schema=schema
+    return buffered_group_flatmap(
+        parts, "gkey", group_rows, cols, schema
     ).select(*out_cols)
-
-
-def _iter_groups(pdf: pd.DataFrame):
-    return pdf.groupby("gkey", sort=True)
-
-
-def _group_buffered(kernel, key_col: str):
-    """Boundary-buffering wrapper: kernels above consume whole groups
-    per batch; this re-yields batches so the group spanning a batch
-    boundary is processed exactly once (the buffered_group_map shape,
-    but for kernels emitting MANY rows per group)."""
-
-    def wrapped(batches):
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            last = pdf[key_col].iloc[-1]
-            head = pdf[pdf[key_col] != last]
-            pending = pdf[pdf[key_col] == last]
-            if len(head):
-                yield from kernel([head])
-        if pending is not None and len(pending):
-            yield from kernel([pending])
-
-    return wrapped
 
 
 def contour_mvt_tiles(

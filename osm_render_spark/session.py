@@ -9,7 +9,8 @@ knob is the one we would set on a real 1000-executor cluster too:
 * ``spark.sql.shuffle.partitions`` sized to cores locally; on a cluster this
   is overridden to ~2-3× total cores (AQE coalesces down).
 * Arrow enabled — all custom kernels are pandas-on-Arrow (no per-row
-  Python, per BASELINE.json input_hint).
+  Python, per BASELINE.json input_hint). Arrow-UDF stages run one task
+  per core (:func:`arrow_stage_partitions`).
 * ``mapKeyDedupPolicy=LAST_WIN`` — required for the relation→way tag merge
   (J5): the reference merges relation tags *over* way tags
   (``addEntriesFromDictionary``, MapData.m:282), i.e. last write wins.
@@ -64,3 +65,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def arrow_stage_partitions(spark: SparkSession) -> int:
+    """Partition count for an Arrow-UDF (``mapInPandas``) stage: one task
+    per core. Each Python task costs ~0.1-0.2 s of worker hand-off and
+    Arrow setup on top of its pixel work (a no-op one-task
+    ``mapInPandas`` job: 217 ms vs 78 ms JVM-only, 4 vCPU), so any
+    partition floor above the core count only adds a second task wave of
+    overhead. Pass the count explicitly (``repartition(n, cols)``): a
+    bare ``repartition(cols)`` lets AQE coalesce a few KB of row
+    pointers to ONE partition and serialize the kernel."""
+    return spark.sparkContext.defaultParallelism

@@ -54,6 +54,7 @@ from ..raster.geotiff import (
     lzw_decode_tiff,
     packbits_decode,
 )
+from ..session import arrow_stage_partitions
 from .pbf import _open_stream
 
 _I32 = np.dtype("<i4")
@@ -203,9 +204,7 @@ def read_geotiff_tiles(
              lay.tiled, lay.comp, lay.pred, lay.bits, lay.fmt, lay.bo)
             for i, off, cnt in segs
         ]
-    n_part = index_partitions or min(
-        len(rows), spark.sparkContext.defaultParallelism
-    )
+    n_part = index_partitions or min(len(rows), arrow_stage_partitions(spark))
     # explicit partition count: the index rows are pointers to heavy
     # decode work (CLAUDE.md AQE-coalesce trap)
     idx = spark.createDataFrame(rows, _IDX_SCHEMA).repartition(n_part, "path", "seg")

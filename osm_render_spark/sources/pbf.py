@@ -37,6 +37,7 @@ the differential-testing twin.
 from __future__ import annotations
 
 import struct
+import uuid
 import zlib
 
 import numpy as np
@@ -1037,7 +1038,9 @@ def read_pbf(
     actions on any of them — share ONE header scan instead of re-scanning
     per action. The index is ~30 bytes/blob (an 80 GB planet ≈ 2.5 MB),
     so the cache is always driver-trivial; Spark evicts it LRU like any
-    cached plan. Pass False for strict no-side-effect plan building.
+    cached plan. The cache is private to the call: a later ``read_pbf``
+    of the same path (e.g. after the file was rewritten) scans afresh.
+    Pass False for strict no-side-effect plan building.
 
     ``split_bytes`` (index mode only, default 128 MiB): files larger
     than this are indexed in PARALLEL byte-range splits — each split
@@ -1054,21 +1057,34 @@ def read_pbf(
     import pandas as pd
     from pyspark.sql import functions as F
 
-    # explicit partition count: with a bare repartition(cols) over a few
-    # KB of blob pointers, AQE coalesces the shuffle to ONE partition and
-    # the decode runs serially (measured 3.3 s → 0.5 s for 19 blobs)
-    n_part = max(spark.sparkContext.defaultParallelism, 8)
+    from ..session import arrow_stage_partitions
+
+    # explicit partition count, one decode task per core: with a bare
+    # repartition(cols) over a few KB of blob pointers, AQE coalesces the
+    # shuffle to ONE partition and the decode runs serially (measured
+    # 3.3 s → 0.5 s for 19 blobs); more tasks than cores only add
+    # per-task Python overhead
+    n_part = arrow_stage_partitions(spark)
 
     if use_index:
         from pyspark.sql import Window
 
         # metadata-only listing: content is never selected, so the
         # binaryFile scan reads no payload bytes (pinned by test_pbf:
-        # ReadSchema carries only path + length)
+        # ReadSchema carries only path + length). The per-call read_id
+        # literal keeps the plans persisted below private to this call:
+        # Spark's cache manager serves a persisted plan to ANY later
+        # plan with the same result, so a later read of a rewritten file
+        # at the same path would otherwise reuse this call's blob index
+        # (stale counts, or offsets past the new file's end).
         listing = (
             spark.read.format("binaryFile")
             .load(path)
-            .select("path", F.col("length").alias("file_size"))
+            .select(
+                "path",
+                F.col("length").alias("file_size"),
+                F.lit(uuid.uuid4().hex).alias("read_id"),
+            )
         )
         # zero-byte files can't be split (sequence() needs a positive
         # range); they also never appear here — the binaryFile source
@@ -1190,7 +1206,9 @@ def read_pbf(
         # carry them). It rides through the broadcast crossJoin like any
         # data row and is skipped by the decode loop (offset < 0), so the
         # guard subplan is referenced exactly ONCE — no sentinel branch
-        # re-running the aggregation.
+        # re-running the aggregation. It joins the blob rows BEFORE their
+        # repartition: a union after it would add the carrier's own
+        # partitions and run that many more decode tasks per entity.
         carrier = spark.range(1).select(
             F.lit("!guard-carrier").alias("path"),
             F.lit(-1).alias("blob_idx"),
@@ -1200,8 +1218,8 @@ def read_pbf(
         blobs = (
             idx.where(F.col("btype") == "OSMData")
             .select("path", "blob_idx", "offset", "length")
-            .repartition(n_part, "path", "blob_idx")
             .unionByName(carrier)
+            .repartition(n_part, "path", "blob_idx")
             .crossJoin(F.broadcast(guard))
         )
         if cache_index:

@@ -1,0 +1,39 @@
+"""One Python task per core on the Arrow stages of the tile path: the
+outputs feeding pixel, decode and sink kernels never carry more
+partitions than ``defaultParallelism`` — no second task wave from a
+partition floor, and no plan union multiplying partitions in front of a
+Python kernel."""
+
+from __future__ import annotations
+
+from osm_render_spark.fixtures.osm import ALL_SCENES
+from osm_render_spark.raster.ops import render_slippy_tiles
+from osm_render_spark.raster.pyramid import build_tile_pyramid
+from osm_render_spark.session import arrow_stage_partitions
+from osm_render_spark.sources.pbf import read_pbf
+
+from test_pbf import _scene_pbf
+from test_slippy import TILE_PX, ZOOM, _ways
+
+
+def test_helper_is_one_task_per_core(spark):
+    assert arrow_stage_partitions(spark) == spark.sparkContext.defaultParallelism
+
+
+def test_render_and_pyramid_partitions_at_most_cores(spark):
+    cores = spark.sparkContext.defaultParallelism
+    tiles = render_slippy_tiles(_ways(spark), ZOOM, TILE_PX)
+    assert tiles.rdd.getNumPartitions() <= cores
+    # base level + two level chunks: the union alone would hold 3× the
+    # partitions of one level
+    pyramid = build_tile_pyramid(tiles, ZOOM, ZOOM - 6, TILE_PX)
+    assert pyramid.rdd.getNumPartitions() <= cores
+    assert pyramid.select("zoom").distinct().count() == 7
+
+
+def test_read_pbf_decodes_partitions_at_most_cores(spark, tmp_path):
+    cores = spark.sparkContext.defaultParallelism
+    path = _scene_pbf(ALL_SCENES["relations"](), str(tmp_path))
+    for use_index in (True, False):
+        for entity in read_pbf(spark, path, use_index=use_index):
+            assert entity.rdd.getNumPartitions() <= cores

@@ -25,11 +25,18 @@ _SCHEMA = (
 
 def test_downsample2x_exact_block_mean():
     rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, (16, 12, 4), dtype=np.uint8)
-    ref = np.floor(
-        img.astype(np.float64).reshape(8, 2, 6, 2, 4).mean(axis=(1, 3)) + 0.5
-    ).astype(np.uint8)
-    assert np.array_equal(downsample2x(img), ref)
+    for shape in [(16, 12, 4), (256, 256, 4), (256, 256, 3)]:
+        img = rng.integers(0, 256, shape, dtype=np.uint8)
+        h, w, c = shape
+        ref = np.floor(
+            img.astype(np.float64)
+            .reshape(h // 2, 2, w // 2, 2, c)
+            .mean(axis=(1, 3))
+            + 0.5
+        ).astype(np.uint8)
+        assert np.array_equal(downsample2x(img), ref)
+        # all-255 blocks: the uint16 accumulator's largest sum
+        assert (downsample2x(np.full(shape, 255, np.uint8)) == 255).all()
 
 
 def _tile_row(tx, ty, zoom, color, n_ways=1, way_sum=10):
