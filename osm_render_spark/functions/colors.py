@@ -48,12 +48,3 @@ def cache_key(*cols: Column) -> Column:
     parameters that affect the output.
     """
     return F.sha2(F.concat_ws("|", *[c.cast("string") for c in cols]), 256)
-
-
-def cache_key_sql(*exprs: str) -> str:
-    """Same as cache_key but as shared SQL text. DuckDB's sha256() and
-    Spark's sha2(x, 256) both return lowercase hex of the utf-8 input;
-    concat of string casts keeps the byte stream identical.
-    """
-    joined = " , ".join(f"CAST(({e}) AS VARCHAR)" for e in exprs)
-    return f"SHA256(CONCAT_WS('|', {joined}))"

@@ -72,37 +72,7 @@ def bbox_contains(lon: Column, lat: Column, bbox: tuple[float, float, float, flo
     )
 
 
-def bbox_contains_sql(lon: str, lat: str, bbox: tuple[float, float, float, float]) -> str:
-    lat_min, lon_min, lat_max, lon_max = bbox
-    return (
-        f"({lat} >= {lat_min!r} AND {lat} <= {lat_max!r} "
-        f"AND {lon} >= {lon_min!r} AND {lon} <= {lon_max!r})"
-    )
-
-
-def normalize_bbox_sql(lat0: str, lon0: str, lat1: str, lon1: str) -> dict[str, str]:
-    """P11 (OsmRender.m:893-909): swap inverted bounds via least/greatest."""
-    return {
-        "lat_min": f"LEAST({lat0}, {lat1})",
-        "lat_max": f"GREATEST({lat0}, {lat1})",
-        "lon_min": f"LEAST({lon0}, {lon1})",
-        "lon_max": f"GREATEST({lon0}, {lon1})",
-    }
-
-
 def is_cyclic(geometry: Column) -> Column:
     """P5 (OsmRender.m:497-498): first point == last point (exact equality,
     mirroring NSEqualPoints at OsmRender.m:338)."""
     return F.element_at(geometry, 1) == F.element_at(geometry, -1)
-
-
-def endpoint_strictly_inside(
-    pt: Column, bbox_px: tuple[float, float, float, float]
-) -> Column:
-    """P6/F12 (OsmRender.m:368-371): endpoint strictly inside the pixel rect
-    ⇒ the open path cannot be a clipped coastline and is discarded."""
-    x0, y0, x1, y1 = bbox_px
-    return (
-        (pt["x"] > F.lit(x0)) & (pt["x"] < F.lit(x1))
-        & (pt["y"] > F.lit(y0)) & (pt["y"] < F.lit(y1))
-    )

@@ -63,16 +63,6 @@ def affine_py_sql(lat: str, lat_min: float, lat_max: float, height: int) -> str:
     )
 
 
-def affine_px_col(lon: Column | str, lon_min: float, lon_max: float, width: int) -> Column:
-    name = lon if isinstance(lon, str) else lon._jc.toString()
-    return F.expr(affine_px_sql(name, lon_min, lon_max, width))
-
-
-def affine_py_col(lat: Column | str, lat_min: float, lat_max: float, height: int) -> Column:
-    name = lat if isinstance(lat, str) else lat._jc.toString()
-    return F.expr(affine_py_sql(name, lat_min, lat_max, height))
-
-
 # ---------------------------------------------------------------------------
 # Web-Mercator slippy tiles (z/x/y).
 # ---------------------------------------------------------------------------
@@ -128,15 +118,6 @@ def tile_key_sql(lon: str, lat: str, zoom: int) -> str:
 
 def tile_key_col(lon: str, lat: str, zoom: int) -> Column:
     return F.expr(tile_key_sql(lon, lat, zoom))
-
-
-# ---------------------------------------------------------------------------
-# Pixel within tile (generalized P8: each tile is a 256px render box).
-# ---------------------------------------------------------------------------
-
-def pixel_in_tile_sql(merc: str, tile: str, tile_px: int = 256) -> str:
-    """Pixel offset of a continuous mercator coord inside its tile."""
-    return f"CAST(FLOOR(({merc} - {tile}) * {tile_px}) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------

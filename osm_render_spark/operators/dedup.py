@@ -57,16 +57,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _word_keys_batch(text: str) -> "np.ndarray":
-    """Vectorized word keys for one ASCII document — byte-level numpy,
-    EXACTLY the SQL definition in operators.text.word_keys_sql:
-    key = ascii(w[0])*65536 + ascii(w[1])*256 + (len(w) % 256).
-    (Non-ASCII first/second chars would need codepoints, not bytes — the
-    SQL path remains the general definition; this kernel asserts ASCII.)
-    """
-    return _word_keys_bytes(text.encode("ascii"))  # raises on non-ASCII
-
-
 def _word_keys_bytes(raw: bytes) -> "np.ndarray":
     import numpy as np
 

@@ -2,15 +2,17 @@
 into fixed-budget training sequences (token/char budget per sequence).
 
 Scale shape (10^12 docs): greedy packing is inherently sequential, so
-the parallel unit is a deterministic hash BUCKET — docs shard into
-``n_buckets`` groups (one shuffle with an EXPLICIT partition count:
-AQE would coalesce a small shuffle to one partition and serialize every
-bucket kernel — the CLAUDE.md repartition rule), each group packs
-independently inside an applyInPandas kernel, and sequence ids are
-(bucket, seq_idx) pairs so no cross-bucket coordination exists. Bucket
-count is the parallelism/packing-quality dial: more buckets = more
-parallelism and slightly worse packing (greedy never sees docs in other
-buckets) — exactly the tradeoff production packers make. Within a
+the parallel unit is a deterministic BUCKET — an explicit bucket column,
+or ``n_buckets`` hash groups — and each bucket packs independently
+inside an applyInPandas kernel; sequence ids are (bucket, seq_idx) pairs
+so no cross-bucket coordination exists. ``n_buckets`` is the
+packing-quality dial: more buckets = smaller groups and slightly worse
+packing (greedy never sees docs in other buckets) — exactly the
+tradeoff production packers make. It does NOT set the partition count:
+the one shuffle in front of the kernel takes an EXPLICIT count from
+``session.arrow_stage_partitions`` (one Python task per core; AQE would
+coalesce a small shuffle to one partition and serialize every bucket
+kernel), and a partition holds as many buckets as hash to it. Within a
 bucket the order is (id) ascending, so output is reproducible under any
 partitioning, and a single document larger than the budget gets its own
 sequence (never silently dropped or truncated).
@@ -30,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..session import arrow_stage_partitions
 
 
 def pack_sequences(
@@ -114,7 +118,8 @@ def pack_sequences(
     # explicit partition count: rows here are pointers to whole-group
     # kernel work, exactly the case AQE's small-shuffle coalescing to
     # ONE partition would serialize
-    out = work.repartition(n_buckets, "_bucket").groupBy("_bucket").applyInPandas(
+    n_parts = arrow_stage_partitions(df.sparkSession)
+    out = work.repartition(n_parts, "_bucket").groupBy("_bucket").applyInPandas(
         pack,
         schema=(
             f"_id {id_t}, _bucket {bucket_t}, "

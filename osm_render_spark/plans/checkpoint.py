@@ -23,6 +23,17 @@ Two resume granularities:
   the output (SURVEY.md: "resume = anti-join against existing keys");
   only missing partitions are computed and appended. A killed job that
   completed k of n partitions recomputes exactly n−k.
+
+Each stage reads its committed output back ONCE (:func:`_read_output`:
+with the schema from a footer, so no inference job): lineage is one
+``collect()`` of the per-partition aggregate (:func:`_partition_digest`,
+the only copy — resume salvage and ``verify_lineage`` call it too) over
+that DataFrame, and the same DataFrame is what the stage returns. The
+few lineage rows are written from the driver with ``pyarrow.parquet``
+(same columns and types a Spark write would give, ``_SUCCESS`` last),
+not by a second Spark write job with its commit protocol; the store
+already assumes a filesystem the driver can see (``_done``,
+``os.listdir``, ``shutil.rmtree``).
 """
 
 from __future__ import annotations
@@ -30,8 +41,12 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 from collections.abc import Callable
+from urllib.parse import unquote
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,6 +63,50 @@ def _hashable_cols(df: DataFrame) -> list:
         else:
             cols.append(c)
     return cols
+
+
+def _partition_digest(df: DataFrame, partition_col: str | None) -> dict:
+    """{partition_key: (row_count, checksum)} for ``df`` grouped by
+    ``partition_col`` as a string (one group ``"0"`` without one), in one
+    ``collect()``. The checksum is order-independent: the exact DECIMAL
+    sum of row hashes (a LONG sum overflows under ANSI mode), as a
+    string."""
+    group = (
+        F.col(partition_col)
+        if partition_col and partition_col in df.columns
+        else F.lit(0)
+    )
+    rows = (
+        df.groupBy(group.cast("string").alias("partition_key"))
+        .agg(
+            F.count("*").alias("row_count"),
+            F.sum(F.xxhash64(*_hashable_cols(df)).cast("decimal(38,0)"))
+            .cast("string")
+            .alias("checksum"),
+        )
+        .collect()
+    )
+    return _rows_digest(rows)
+
+
+def _rows_digest(rows) -> dict:
+    return {r["partition_key"]: (r["row_count"], r["checksum"]) for r in rows}
+
+
+def _read_output(spark: SparkSession, path: str) -> DataFrame:
+    """Read a committed stage output. An unpartitioned output is read
+    with the Spark schema its writer stored in a data file's footer —
+    the schema inference would pick — so the read runs no Spark job
+    (``spark.read.parquet`` infers it in a one-task job per read)."""
+    for name in sorted(os.listdir(path)):
+        if name.endswith(".parquet") and not name.startswith(("_", ".")):
+            meta = pq.read_metadata(os.path.join(path, name)).metadata or {}
+            stored = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+            if stored:
+                schema = T.StructType.fromJson(json.loads(stored))
+                return spark.read.schema(schema).parquet(path)
+            break
+    return spark.read.parquet(path)
 
 
 def dataframe_token(df: DataFrame) -> str:
@@ -98,11 +157,16 @@ class CheckpointStore:
         key = stage_key(stage, params, input_token)
         path = self._path(stage, key)
         if self._done(path):
-            return spark.read.parquet(path)
-        df = compute()
-        df.write.mode("overwrite").parquet(path)
-        self._write_lineage(spark, stage, key, params, partition_col)
-        return spark.read.parquet(path)
+            df = _read_output(spark, path)
+            # killed between the data commit and the lineage commit: the
+            # hit still serves the data, and lineage comes from this read
+            if not self._done(self._lineage_path(stage, key)):
+                self._write_lineage(spark, stage, key, params, partition_col, df)
+            return df
+        compute().write.mode("overwrite").parquet(path)
+        df = _read_output(spark, path)
+        self._write_lineage(spark, stage, key, params, partition_col, df)
+        return df
 
     # -- partition-level resume -------------------------------------------
 
@@ -135,15 +199,14 @@ class CheckpointStore:
                 .partitionBy(partition_col)
                 .parquet(path)
             )
-        # lineage rewrite re-reads + hashes the ENTIRE output — on a
-        # clean no-op resume that would be the very 100 TB scan the
-        # trusted-fast-path above exists to avoid; only rewrite when the
-        # output changed or no committed lineage exists yet
-        if did_work or not os.path.exists(
-            os.path.join(self._lineage_path(stage, key), "_SUCCESS")
-        ):
-            self._write_lineage(spark, stage, key, params, partition_col)
-        return spark.read.parquet(path)
+        df = _read_output(spark, path)
+        # lineage hashes the ENTIRE output — on a clean no-op resume that
+        # would be the very 100 TB scan the trusted-fast-path above exists
+        # to avoid; only rewrite when the output changed or no committed
+        # lineage exists yet
+        if did_work or not self._done(self._lineage_path(stage, key)):
+            self._write_lineage(spark, stage, key, params, partition_col, df)
+        return df
 
     def _restartable_partitions(
         self, spark: SparkSession, stage: str, key: str, partition_col: str
@@ -166,8 +229,6 @@ class CheckpointStore:
           compare against lineage; only matching partitions are trusted,
           mismatching/extra partition dirs are removed from disk
         """
-        import shutil
-
         path = self._path(stage, key)
         if not os.path.exists(path):
             return None
@@ -184,38 +245,22 @@ class CheckpointStore:
                 return None
         try:
             df = spark.read.option("basePath", path).parquet(path)
-            recomputed = (
-                df.groupBy(F.col(partition_col).cast("string").alias("partition_key"))
-                .agg(
-                    F.count("*").alias("row_count"),
-                    F.sum(F.xxhash64(*_hashable_cols(df)).cast("decimal(38,0)"))
-                    .cast("string")
-                    .alias("checksum"),
-                )
-                .collect()
-            )
+            recomputed = _partition_digest(df, partition_col)
         except Exception:
             # no committed data files (killed before the first task commit)
             shutil.rmtree(path, ignore_errors=True)
             return None
-        lineage_path = self._lineage_path(stage, key)
-        have_lineage = os.path.exists(os.path.join(lineage_path, "_SUCCESS"))
-        if not have_lineage:
+        if not self._done(self._lineage_path(stage, key)):
             if not self._done(path):
                 shutil.rmtree(path, ignore_errors=True)
                 return None
-            committed = {r["partition_key"] for r in recomputed}
+            committed = set(recomputed)
         else:
-            stored = {
-                r["partition_key"]: (r["row_count"], r["checksum"])
-                for r in self.lineage_by_key(spark, stage, key).collect()
-            }
+            stored = _rows_digest(self.lineage_by_key(spark, stage, key).collect())
             # map partition VALUES back to their on-disk dir names via the
             # actual listing (Hive %-escapes special chars in dir names —
             # constructing f"{col}={value}" would miss those and leave
             # partial data behind to be double-counted after recompute)
-            from urllib.parse import unquote
-
             prefix = f"{partition_col}="
             dirs = {
                 unquote(d[len(prefix):]): d
@@ -223,9 +268,8 @@ class CheckpointStore:
                 if d.startswith(prefix)
             }
             committed = set()
-            for r in recomputed:
-                pk = r["partition_key"]
-                if stored.get(pk) == (r["row_count"], r["checksum"]):
+            for pk, digest in recomputed.items():
+                if stored.get(pk) == digest:
                     committed.add(pk)
                 else:
                     # NULL partition values land in the Hive default dir;
@@ -239,12 +283,13 @@ class CheckpointStore:
             if not committed:
                 shutil.rmtree(path, ignore_errors=True)
                 return None
-        sample = spark.read.option("basePath", path).parquet(path).schema[partition_col]
         # None-safe sort: committed may hold the NULL partition key
         return spark.createDataFrame(
             [(k,) for k in sorted(committed, key=lambda k: (k is None, k))],
             "partition_key string",
-        ).select(F.col("partition_key").cast(sample.dataType).alias(partition_col))
+        ).select(
+            F.col("partition_key").cast(df.schema[partition_col].dataType).alias(partition_col)
+        )
 
     # -- lineage ------------------------------------------------------------
 
@@ -255,28 +300,44 @@ class CheckpointStore:
         key: str,
         params: dict,
         partition_col: str | None,
+        df: DataFrame | None = None,
     ) -> None:
-        df = spark.read.parquet(self._path(stage, key))
-        group = (
-            F.col(partition_col)
-            if partition_col and partition_col in df.columns
-            else F.lit(0)
+        """Lineage of the stage output ``df`` (read from the stage path if
+        not given): one aggregate ``collect()``, then the rows go to
+        ``_lineage/<stage>/<key>/`` as one Parquet file written from the
+        driver, ``_SUCCESS`` last."""
+        if df is None:
+            df = _read_output(spark, self._path(stage, key))
+        digest = _partition_digest(df, partition_col)
+        consts = {
+            "stage": stage,
+            "key": key,
+            "partition_col": partition_col or "",
+            "params_json": json.dumps(params, sort_keys=True),
+        }
+        # the columns, types and nullability a Spark write of the same
+        # aggregate records
+        grouped = bool(partition_col) and partition_col in df.columns
+        schema = pa.schema(
+            [
+                pa.field("partition_key", pa.string(), nullable=grouped),
+                pa.field("row_count", pa.int64(), nullable=False),
+                pa.field("checksum", pa.string()),
+            ]
+            + [pa.field(name, pa.string(), nullable=False) for name in consts]
         )
-        # order-independent per-partition checksum: exact DECIMAL sum of
-        # row hashes (a LONG sum overflows under ANSI mode), stored as string
-        row_hash = F.xxhash64(*_hashable_cols(df))
-        lineage = (
-            df.groupBy(group.cast("string").alias("partition_key"))
-            .agg(
-                F.count("*").alias("row_count"),
-                F.sum(row_hash.cast("decimal(38,0)")).cast("string").alias("checksum"),
-            )
-            .withColumn("stage", F.lit(stage))
-            .withColumn("key", F.lit(key))
-            .withColumn("partition_col", F.lit(partition_col or ""))
-            .withColumn("params_json", F.lit(json.dumps(params, sort_keys=True)))
+        table = pa.Table.from_pylist(
+            [
+                {"partition_key": pk, "row_count": n, "checksum": h, **consts}
+                for pk, (n, h) in digest.items()
+            ],
+            schema=schema,
         )
-        lineage.write.mode("overwrite").parquet(self._lineage_path(stage, key))
+        out = self._lineage_path(stage, key)
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        pq.write_table(table, os.path.join(out, "part-00000.snappy.parquet"))
+        open(os.path.join(out, "_SUCCESS"), "w").close()
 
     def lineage(self, spark: SparkSession, stage: str, params: dict, input_token: str = "") -> DataFrame:
         key = stage_key(stage, params, input_token)
@@ -289,23 +350,11 @@ class CheckpointStore:
         self, spark: SparkSession, stage: str, params: dict, input_token: str = ""
     ) -> bool:
         """Recompute per-partition counts + checksums from the stored data
-        and compare with the lineage rows — detects partial/corrupt state
-        before a resume trusts it."""
+        and compare with the lineage rows on the driver — detects
+        partial/corrupt state before a resume trusts it."""
         key = stage_key(stage, params, input_token)
-        stored = self.lineage(spark, stage, params, input_token)
-        first = stored.limit(1).collect()
-        if not first:
+        stored = self.lineage_by_key(spark, stage, key).collect()
+        if not stored:
             return False
-        pcol = first[0]["partition_col"]
-        df = spark.read.parquet(self._path(stage, key))
-        group = F.col(pcol) if pcol else F.lit(0)
-        row_hash = F.xxhash64(*_hashable_cols(df))
-        recomputed = df.groupBy(group.cast("string").alias("partition_key")).agg(
-            F.count("*").alias("row_count"),
-            F.sum(row_hash.cast("decimal(38,0)")).cast("string").alias("checksum"),
-        )
-        stored_sel = stored.select("partition_key", "row_count", "checksum")
-        matched = recomputed.join(
-            stored_sel, ["partition_key", "row_count", "checksum"], "inner"
-        ).count()
-        return matched == stored_sel.count() == recomputed.count()
+        df = _read_output(spark, self._path(stage, key))
+        return _partition_digest(df, stored[0]["partition_col"]) == _rows_digest(stored)

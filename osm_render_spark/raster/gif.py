@@ -279,19 +279,6 @@ def decode_gif(data: bytes) -> list[tuple[np.ndarray, int]]:
     return frames
 
 
-def _exact_palette(img: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(h, w, 3) → (palette (n, 3), indices (h, w)); raises > 256."""
-    flat = img.reshape(-1, 3)
-    palette, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(palette) > 256:
-        raise ValueError(
-            f"GIF encoding needs <= 256 distinct colors, got {len(palette)}"
-            " — quantize first (a lossy choice this codec won't make"
-            " silently)"
-        )
-    return palette.astype(np.uint8), inverse.reshape(img.shape[:2]).astype(np.uint8)
-
-
 def encode_gif(
     frames: "np.ndarray | list",
     delays: "int | list[int]" = 10,

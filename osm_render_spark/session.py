@@ -1,8 +1,12 @@
 """SparkSession builder tuned for the engine.
 
-Defaults are chosen for the sandbox (single JVM, ``local[N]``) but every
-knob is the one we would set on a real 1000-executor cluster too:
+Defaults are chosen for a single JVM (``local[N]``) but every knob is the
+one we would set on a real 1000-executor cluster too:
 
+* Sized to the host: ``N`` is the process's CPU affinity count and the
+  driver heap half of ``MemTotal``, unless ``cpus=`` /
+  ``SPARK_GRAFT_CPUS`` or ``extra_conf`` / ``SPARK_GRAFT_DRIVER_MEM``
+  say otherwise.
 * AQE on (runtime coalescing + skew-join splitting) — the reference has no
   skew handling at all (SURVEY.md §4); we rely on AQE plus explicit salting
   for hot tile cells.
@@ -23,7 +27,29 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _host_cpus() -> int:
+    """CPUs this process may run on (its affinity set, not the machine's
+    core count: a container or ``taskset`` can grant fewer)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        return os.cpu_count() or 1
+
+
+def _host_driver_mem() -> str:
+    """Driver heap as half of the host's ``MemTotal``: in local mode the
+    driver JVM hosts every executor, and the rest is left to the Python
+    workers and the page cache."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "4g"
+    return f"{max(1, kib // (2 * 1024 * 1024))}g"
+
+
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
 
 
 def get_spark(
@@ -47,7 +73,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Parquet: keep pushdown + dictionary decode on (the reference's PBF

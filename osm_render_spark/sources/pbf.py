@@ -754,22 +754,6 @@ def decode_block_columnar(raw: bytes) -> dict:
     }
 
 
-def decode_primitive_block(raw: bytes) -> dict:
-    """Row-wise view of decode_block_columnar: {'nodes': [(id, lat, lon,
-    tags)], 'ways': [...], 'relations': [...]} matching fixtures.osm
-    schemas (the Spark reader consumes the columnar form directly)."""
-    c = decode_block_columnar(raw)
-    nodes = list(
-        zip(
-            c["node_ids"].tolist(),
-            c["node_lats"].tolist(),
-            c["node_lons"].tolist(),
-            c["node_tags"],
-        )
-    )
-    return {"nodes": nodes, "ways": c["ways"], "relations": c["relations"]}
-
-
 # ---------------------------------------------------------------------------
 # writer (fixture generation + PBF sink)
 # ---------------------------------------------------------------------------

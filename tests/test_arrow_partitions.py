@@ -37,3 +37,25 @@ def test_read_pbf_decodes_partitions_at_most_cores(spark, tmp_path):
     for use_index in (True, False):
         for entity in read_pbf(spark, path, use_index=use_index):
             assert entity.rdd.getNumPartitions() <= cores
+
+
+def test_pack_sequences_partitions_at_most_cores(spark):
+    """The pack kernel runs one task per core whatever ``n_buckets`` is,
+    and with an explicit bucket column ``n_buckets`` changes nothing."""
+    from pyspark.sql import functions as F
+
+    from osm_render_spark.operators.packing import pack_sequences
+
+    cores = spark.sparkContext.defaultParallelism
+    docs = spark.range(240).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") * 37 % 90 + 5).alias("size"),
+        (F.col("id") % 24).cast("string").alias("shard"),
+    )
+    runs = {}
+    for n_buckets in (4, 64):
+        packed = pack_sequences(docs, 200, bucket_col="shard", n_buckets=n_buckets)
+        assert packed.rdd.getNumPartitions() <= cores
+        runs[n_buckets] = sorted(tuple(r) for r in packed.collect())
+    assert len(runs[4]) == 240
+    assert runs[4] == runs[64]

@@ -166,3 +166,117 @@ def test_lineage_detects_corruption(spark, store):
     files = [f for f in os.listdir(path) if f.endswith(".parquet")]
     os.remove(os.path.join(path, files[0]))
     assert not store.verify_lineage(spark, "s2", p)
+
+
+def test_run_stage_hit_rewrites_lost_lineage(spark, store):
+    """A kill between the data commit and the lineage commit leaves a
+    stage with data but no lineage; the next key hit must serve the data
+    without recomputing AND write the lineage from its read-back, so the
+    stage is verifiable again (not PATH_NOT_FOUND forever)."""
+    import os
+
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return _tiles(spark, 300)
+
+    p = {"kill": "after_data"}
+    store.run_stage(spark, "s3", p, compute, partition_col="tile")
+    key = stage_key("s3", p, "")
+    shutil.rmtree(store._lineage_path("s3", key))
+    assert not os.path.exists(store._lineage_path("s3", key))
+
+    again = store.run_stage(spark, "s3", p, compute, partition_col="tile")
+    assert len(calls) == 1  # key hit: compute not called
+    assert again.count() == 300
+    assert store.verify_lineage(spark, "s3", p)
+    assert store.lineage(spark, "s3", p).count() == 10
+
+
+def test_stage_hit_reads_back_without_a_job(spark, store):
+    """A key hit reads the stored output with the schema from its footer:
+    no Spark job (schema inference runs one per ``spark.read.parquet``)
+    and the same schema inference would give, MAP and STRUCT included."""
+
+    def compute():
+        return _tiles(spark, 50).select(
+            "*",
+            F.create_map(F.lit("k"), F.col("v")).alias("tags"),
+            F.struct("id", "v").alias("pt"),
+        )
+
+    p = {"read": "footer"}
+    store.run_stage(spark, "s4", p, compute, partition_col="tile")
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-hit", "key hit")
+    try:
+        hit = store.run_stage(spark, "s4", p, compute, partition_col="tile")
+        assert sc.statusTracker().getJobIdsForGroup("checkpoint-hit") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    path = store._path("s4", stage_key("s4", p, ""))
+    assert hit.schema == spark.read.parquet(path).schema
+    assert sorted(hit.collect()) == sorted(compute().collect())
+
+
+# Lineage of the stage below as the Spark-written format recorded it:
+# (partition_key, row_count, checksum) per stage, the checksum being the
+# exact sum of xxhash64 row hashes with the MAP column hashed as sorted
+# entries.
+_PINNED_LINEAGE = {
+    "tile": {
+        ("1", 4, "6620270429231518764"),
+        ("2", 4, "708887237825406176"),
+        (None, 4, "-1660122192907955999"),
+    },
+    "": {("0", 12, "5669035474148968941")},
+}
+
+
+def test_lineage_format_pinned(spark, store):
+    """Lineage keeps its columns, types, nullability and rows for a
+    stage with a NULL partition key and a MAP column, grouped by a
+    column and ungrouped; and a NULL partition key verifies."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    def compute():
+        return spark.range(12).select(
+            F.col("id"),
+            F.when(F.col("id") % 3 == 0, F.lit(None))
+            .otherwise(F.col("id") % 3)
+            .alias("tile"),
+            F.create_map(F.lit("k"), F.col("id") * 7).alias("tags"),
+        )
+
+    p = {"zoom": 3}
+    for stage, pcol in (("grouped", "tile"), ("ungrouped", None)):
+        store.run_stage(spark, stage, p, compute, partition_col=pcol)
+        key = stage_key(stage, p, "")
+        lin = store.lineage(spark, stage, p)
+        assert lin.schema.simpleString() == (
+            "struct<partition_key:string,row_count:bigint,checksum:string,"
+            "stage:string,key:string,partition_col:string,params_json:string>"
+        )
+        rows = lin.collect()
+        assert {(r[0], r[1], r[2]) for r in rows} == _PINNED_LINEAGE[pcol or ""]
+        assert {tuple(r[3:]) for r in rows} == {
+            (stage, key, pcol or "", '{"zoom": 3}')
+        }
+        lpath = store._lineage_path(stage, key)
+        files = [f for f in os.listdir(lpath) if f.endswith(".parquet")]
+        schema = pq.read_schema(os.path.join(lpath, files[0]))
+        nullable = {f.name: f.nullable for f in schema}
+        assert nullable == {
+            "partition_key": pcol is not None,
+            "row_count": False,
+            "checksum": True,
+            "stage": False,
+            "key": False,
+            "partition_col": False,
+            "params_json": False,
+        }
+        assert os.path.exists(os.path.join(lpath, "_SUCCESS"))
+        assert store.verify_lineage(spark, stage, p)
