@@ -188,6 +188,48 @@ def snap_points_to_segments(
     )
 
 
+def _dense_rank(keys: list[tuple]) -> list[int]:
+    order = {k: r for r, k in enumerate(sorted(set(keys)))}
+    return [order[k] for k in keys]
+
+
+def _viterbi_path(
+    steps: list[list[tuple[int, int, int]]], switch_penalty: int
+) -> tuple[int, list[int]]:
+    """Min-cost path over one (way_id, seg_idx, d2_milli) candidate list
+    per point → (cost, chosen index per point); cost = Σ d2 +
+    switch_penalty per way change, ties to the lexicographically first
+    (way_id, seg_idx) sequence.  Backpointers keep it linear in the
+    number of points: each step ranks its equal-length prefixes by
+    (parent's rank, (way_id, seg_idx)), which orders them as comparing
+    whole prefixes would, and cost ties compare ranks."""
+    first = steps[0]
+    cost = [d2 for _w, _s, d2 in first]
+    rank = _dense_rank([(w, s) for w, s, _d2 in first])
+    back: list[list[int]] = []
+    prev = first
+    for cands in steps[1:]:
+        nxt, ptr = [], []
+        for wid, _sidx, d2 in cands:
+            c, _r, j = min(
+                (cost[j] + (switch_penalty if pw != wid else 0), rank[j], j)
+                for j, (pw, _ps, _pd) in enumerate(prev)
+            )
+            nxt.append(c + d2)
+            ptr.append(j)
+        rank = _dense_rank(
+            [(rank[j], w, s) for j, (w, s, _d2) in zip(ptr, cands)]
+        )
+        cost, prev = nxt, cands
+        back.append(ptr)
+    i = min(range(len(cost)), key=lambda k: (cost[k], rank[k]))
+    total, path = cost[i], [i]
+    for ptr in reversed(back):
+        i = ptr[i]
+        path.append(i)
+    return total, path[::-1]
+
+
 def match_trajectories(
     points: DataFrame,
     segments: DataFrame,
@@ -211,10 +253,9 @@ def match_trajectories(
 
     Determinism: all costs are integers, candidates are the top_k by
     (d2_milli, way_id, seg_idx), and among equal-cost paths the
-    lexicographically-first (way_id, seg_idx) SEQUENCE wins — the DP
-    carries (cost, prefix) pairs, which is sound because prefixes of
-    equal length compare positionally (the oracle enumerates all paths
-    and sorts; the kernel must agree exactly).
+    lexicographically-first (way_id, seg_idx) SEQUENCE wins
+    (:func:`_viterbi_path`; the oracle enumerates all paths and sorts,
+    and the kernel must agree exactly).
 
     Trajectories where ANY point has no candidate within max_dist are
     dropped whole (partial matches are ambiguous; callers pre-split).
@@ -228,8 +269,7 @@ def match_trajectories(
     traj_id-sorted partitions (many trajectories per Arrow batch). The
     old one-applyInPandas-group-per-trajectory shape paid ~4 ms of
     per-group overhead, which at 25k bench trajectories was ~100 s of
-    pure overhead (guide §4.5); the DP itself is unchanged and
-    produces identical rows."""
+    pure overhead (guide §4.5); the rows are identical."""
     cand = _snap_candidates(
         points.selectExpr("traj_id", "seq", "x", "y"),
         segments,
@@ -270,28 +310,9 @@ def match_trajectories(
             )
             for s, cl in group
         )
-        # DP state per candidate: (cost, prefix_tuple_of_(way,seg), way)
-        states = [
-            (d2, ((wid, sidx),), wid)
-            for wid, sidx, d2 in by_seq[0][1]
-        ]
-        for _s, cands in by_seq[1:]:
-            nxt = []
-            for wid, sidx, d2 in cands:
-                best = None
-                for cost, prefix, pw in states:
-                    c = cost + d2 + (switch_penalty if pw != wid else 0)
-                    k2 = (c, prefix + ((wid, sidx),))
-                    if best is None or k2 < best:
-                        best = k2
-                nxt.append((best[0], best[1], wid))
-            states = nxt
-        cost, path, _ = min(states, key=lambda t: (t[0], t[1]))
+        cost, path = _viterbi_path([c for _s, c in by_seq], switch_penalty)
         return [
-            (traj, s, wid, sidx,
-             {(w_, s_): d_ for w_, s_, d_ in cands}[(wid, sidx)],
-             cost)
-            for (s, cands), (wid, sidx) in zip(by_seq, path)
+            (traj, s, *cands[i], cost) for (s, cands), i in zip(by_seq, path)
         ]
 
     # single-pass streaming kernel over traj_id-sorted partitions:

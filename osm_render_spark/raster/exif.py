@@ -30,11 +30,12 @@ import struct
 
 from pyspark.sql import DataFrame
 
-# TIFF field types → byte size of one element.
-_TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8,
-              11: 4, 12: 8}
+from .geotiff import _TYPES, tiff_header, tiff_ifd
+
+# TIFF field types → byte size of one element (unknown types: 1, as in
+# the IFD walk).
+_TYPE_SIZE = {typ: size for typ, (_ch, size) in _TYPES.items()}
 _INT_FMT = {1: "B", 3: "H", 4: "I", 6: "b", 8: "h", 9: "i"}
-_FLOAT_FMT = {11: "f", 12: "d"}
 
 ASCII, SHORT, LONG, RATIONAL, UNDEFINED, SRATIONAL = 2, 3, 4, 5, 7, 10
 
@@ -103,53 +104,37 @@ def _encode_value(endian: str, typ: int, value) -> tuple[int, bytes]:
     return len(value) // size, bytes(value)
 
 
-def _parse_ifd(data: bytes, endian: str, off: int) -> tuple[dict, int]:
-    """→ ({tag: (type, value)}, next-IFD offset).  Bounds-checked."""
-    if off + 2 > len(data):
-        raise ValueError("IFD offset out of bounds")
-    (n,) = struct.unpack_from(endian + "H", data, off)
-    end = off + 2 + 12 * n
-    if end + 4 > len(data):
-        raise ValueError("IFD entry table out of bounds")
-    ifd: dict[int, tuple[int, object]] = {}
-    for i in range(n):
-        tag, typ, count = struct.unpack_from(endian + "HHI", data, off + 2 + 12 * i)
-        field = data[off + 10 + 12 * i: off + 14 + 12 * i]
-        size = _TYPE_SIZE.get(typ, 1) * count
-        if size <= 4:
-            raw = field
-        else:
-            (voff,) = struct.unpack(endian + "I", field)
-            if voff + size > len(data):
-                raise ValueError(f"tag 0x{tag:04x} value offset out of bounds")
-            raw = data[voff: voff + size]
-        ifd[tag] = (typ, _decode_value(endian, typ, count, raw))
-    (nxt,) = struct.unpack_from(endian + "I", data, end)
-    return ifd, nxt
+def _parse_ifd(read, endian: str, off: int) -> tuple[dict, int]:
+    """→ ({tag: (type, value)}, next-IFD offset)."""
+    entries, nxt = tiff_ifd(read, endian, off)
+    return {
+        tag: (typ, _decode_value(endian, typ, count, raw))
+        for tag, typ, count, raw in entries
+    }, nxt
 
 
 def parse_tiff(data: bytes) -> Exif:
     """Parse a TIFF/Exif byte stream (the APP1 payload after
-    ``Exif\\0\\0``)."""
-    if data[:2] == b"II":
-        endian = "<"
-    elif data[:2] == b"MM":
-        endian = ">"
-    else:
-        raise ValueError("not a TIFF stream (no II/MM byte-order mark)")
-    magic, ifd0_off = struct.unpack_from(endian + "HI", data, 2)
-    if magic != 42:
-        raise ValueError(f"bad TIFF magic {magic}")
+    ``Exif\\0\\0``).  The header and IFD walk are the GeoTIFF reader's
+    (bounds-checked); Exif is always classic TIFF, so BigTIFF is a
+    ``ValueError`` here."""
+
+    def read(off: int, n: int) -> bytes:
+        return data[off: off + n]
+
+    try:
+        endian, off = tiff_header(read)
+    except NotImplementedError as e:
+        raise ValueError(f"not an Exif TIFF stream: {e}") from e
     ex = Exif(endian)
     seen = set()  # guard against offset cycles in corrupt streams
-    off = ifd0_off
     for name in ("0th", "1st"):
         if not off:
             break
         if off in seen:
             raise ValueError("IFD offset cycle")
         seen.add(off)
-        ex.ifds[name], off = _parse_ifd(data, endian, off)
+        ex.ifds[name], off = _parse_ifd(read, endian, off)
     for parent, tag, child in _POINTERS:
         entry = ex.ifds.get(parent, {}).get(tag)
         if entry is None:
@@ -158,7 +143,7 @@ def parse_tiff(data: bytes) -> Exif:
         if coff in seen:
             raise ValueError("IFD offset cycle")
         seen.add(coff)
-        ex.ifds[child], _ = _parse_ifd(data, endian, coff)
+        ex.ifds[child], _ = _parse_ifd(read, endian, coff)
     first = ex.ifds.get("1st", {})
     if TAG_THUMB_OFFSET in first and TAG_THUMB_LENGTH in first:
         toff, tlen = first[TAG_THUMB_OFFSET][1][0], first[TAG_THUMB_LENGTH][1][0]

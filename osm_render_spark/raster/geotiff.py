@@ -14,12 +14,18 @@ GeoTIFF 1.1):
 
 - classic TIFF (both byte orders), single IFD, chunky planar config
 - strip AND tile organization, padded edge segments per spec
-- compression: 1 none, 5 LZW (TIFF variant: MSB-first bits, early
-  code-width change), 8 Deflate (zlib), 32773 PackBits
+- compression: 1 none, 5 LZW (the core shared with GIF, raster/lzw.py,
+  with TIFF's MSB-first bits and early code-width change), 8 Deflate
+  (zlib), 32773 PackBits
 - predictor 2 (horizontal differencing) on integer samples
 - samples: gray u8/u16/i16/u32/i32/f32/f64 and RGB u8
 - geo tags: ModelPixelScale (33550), ModelTiepoint (33922),
   GeoKeyDirectory (34735) — geographic CRS key only
+
+The header/IFD walk (also behind raster/exif.py) and the segment
+decoder (also behind sources/geotiff_source.py) read through
+``read(offset, n)``.  Malformed headers and cut, corrupt or overlong
+segments raise ``ValueError``, never decode to zero-padded pixels.
 
 The writer emits everything the reader accepts, so tests round-trip
 real files (and hand-crafted adversarial streams decode against
@@ -33,9 +39,12 @@ from __future__ import annotations
 
 import struct
 import zlib
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
+
+from . import lzw
 
 # TIFF tag ids (public spec numbering)
 T_WIDTH = 256
@@ -57,6 +66,10 @@ T_SAMPLE_FMT = 339
 T_PIXEL_SCALE = 33550
 T_TIEPOINT = 33922
 T_GEO_KEYS = 34735
+
+# TIFF's constants for the shared LZW core: MSB-first codes, early
+# code-width change (TIFF 6.0 p.61)
+_LZW = dict(msb_first=True, early_change=True)
 
 # field type -> (struct char, byte size); rationals handled specially
 _TYPES = {
@@ -95,106 +108,6 @@ class GeoRef:
         lon1, lat0 = self.to_lonlat(w, h)
         lon0, lat1 = self.to_lonlat(0, 0)
         return (lon0, lat0, lon1, lat1)
-
-
-# ---------------------------------------------------------------- LZW
-
-def lzw_decode_tiff(data: bytes, expected: int) -> bytes:
-    """TIFF-variant LZW: MSB-first bit packing, clear=256 eoi=257,
-    9-bit start, EARLY code-width change (width bumps when the NEXT
-    entry to be added would need it, i.e. at table sizes 510/1022/2046
-    — TIFF 6.0 spec p.61)."""
-    out = bytearray()
-    # table as list of bytes; rebuilt on clear
-    base = [bytes([i]) for i in range(256)] + [b"", b""]
-    table = list(base)
-    width = 9
-    buf = 0
-    nbits = 0
-    pos = 0
-    prev: bytes | None = None
-    n = len(data)
-    while len(out) < expected:
-        while nbits < width:
-            if pos >= n:
-                return bytes(out)
-            buf = (buf << 8) | data[pos]
-            pos += 1
-            nbits += 8
-        nbits -= width
-        code = buf >> nbits
-        buf &= (1 << nbits) - 1  # keep the residue small (bigint trap)
-        if code == 256:
-            table = list(base)
-            width = 9
-            prev = None
-            continue
-        if code == 257:
-            break
-        if prev is None:
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError("corrupt LZW stream: code beyond table")
-        out += entry
-        prev = entry
-        # early change (libtiff convention), seen from the decoder: the
-        # decoder's table is one add BEHIND the encoder's (it adds for
-        # code m only while decoding code m+1), so it must widen at
-        # 2^width - 2 entries to read the encoder's first wider code
-        if len(table) >= (1 << width) - 2 and width < 12:
-            width += 1
-    return bytes(out)
-
-
-def lzw_encode_tiff(data: bytes) -> bytes:
-    """TIFF-variant LZW encoder matching lzw_decode_tiff (early change)."""
-    out = bytearray()
-    buf = 0
-    nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal buf, nbits
-        buf = (buf << width) | code
-        nbits += width
-        while nbits >= 8:
-            nbits -= 8
-            out.append(buf >> nbits)
-            buf &= (1 << nbits) - 1  # keep the residue small (bigint trap)
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
-    next_code = 258
-    width = 9
-    emit(256, width)
-    run = b""
-    for b in data:
-        cand = run + bytes([b])
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run], width)
-        table[cand] = next_code
-        next_code += 1
-        # early change mirror of the decoder: table size == next_code
-        if next_code >= (1 << width) - 1 and width < 12:
-            width += 1
-        if next_code >= 4094:  # keep headroom, then reset (spec allows)
-            emit(256, width)
-            table = {bytes([i]): i for i in range(256)}
-            next_code = 258
-            width = 9
-        run = bytes([b])
-    if run:
-        emit(table[run], width)
-    emit(257, width)
-    if nbits:
-        out.append((buf << (8 - nbits)) & 0xFF)
-    return bytes(out)
 
 
 # ----------------------------------------------------------- PackBits
@@ -241,33 +154,125 @@ def packbits_encode(data: bytes) -> bytes:
 
 
 # ------------------------------------------------------------- reader
+# ``read(offset, n) -> bytes`` returns short at the end of the data.
 
-def _read_ifd(data: bytes, bo: str, off: int) -> dict[int, list]:
-    (count,) = struct.unpack_from(bo + "H", data, off)
-    tags: dict[int, list] = {}
-    for i in range(count):
-        eo = off + 2 + 12 * i
-        tag, ftype, n = struct.unpack_from(bo + "HHI", data, eo)
-        if ftype not in _TYPES:
-            continue
-        ch, size = _TYPES[ftype]
-        total = size * n
-        if total <= 4:
-            voff = eo + 8
+
+def tiff_header(read: Callable[[int, int], bytes]) -> tuple[str, int]:
+    """Classic TIFF header → (struct byte order ``'<'``/``'>'``, offset
+    of the first IFD)."""
+    head = read(0, 8)
+    bo = {b"II": "<", b"MM": ">"}.get(head[:2])
+    if bo is None:
+        raise ValueError("not a TIFF: bad byte-order mark")
+    if len(head) < 8:
+        raise ValueError("truncated TIFF header")
+    magic, ifd_off = struct.unpack_from(bo + "HI", head, 2)
+    if magic == 43:
+        raise NotImplementedError("BigTIFF (magic 43) not supported")
+    if magic != 42:
+        raise ValueError(f"not a TIFF: magic {magic}")
+    return bo, ifd_off
+
+
+def tiff_ifd(
+    read: Callable[[int, int], bytes], bo: str, off: int
+) -> tuple[list[tuple[int, int, int, bytes]], int]:
+    """One IFD → ([(tag, type, count, value bytes)], next IFD offset),
+    bounds-checked (``ValueError``).  Unknown types count 1 byte per
+    value, so their bytes still round-trip."""
+    head = read(off, 2)
+    if len(head) < 2:
+        raise ValueError("IFD offset out of bounds")
+    (n,) = struct.unpack(bo + "H", head)
+    table = read(off + 2, 12 * n + 4)
+    if len(table) < 12 * n + 4:
+        raise ValueError("IFD entry table out of bounds")
+    entries = []
+    for e in range(0, 12 * n, 12):
+        tag, ftype, count = struct.unpack_from(bo + "HHI", table, e)
+        size = _TYPES.get(ftype, (None, 1))[1] * count
+        if size <= 4:
+            raw = table[e + 8 : e + 8 + size]
         else:
-            (voff,) = struct.unpack_from(bo + "I", data, eo + 8)
-        if ftype in (5, 10):  # (S)RATIONAL
-            ich = "i" if ftype == 10 else "I"
-            vals = []
-            for k in range(n):
-                num, den = struct.unpack_from(bo + 2 * ich, data, voff + 8 * k)
-                vals.append(num / den if den else 0.0)
-        elif ftype == 2:
-            vals = [data[voff : voff + n].split(b"\0")[0].decode("ascii", "replace")]
-        else:
-            vals = list(struct.unpack_from(bo + str(n) + ch, data, voff))
-        tags[tag] = vals
-    return tags
+            (voff,) = struct.unpack_from(bo + "I", table, e + 8)
+            raw = read(voff, size)
+            if len(raw) < size:
+                raise ValueError(f"tag {tag}: value offset out of bounds")
+        entries.append((tag, ftype, count, raw))
+    (nxt,) = struct.unpack_from(bo + "I", table, 12 * n)
+    return entries, nxt
+
+
+def _tag_values(bo: str, ftype: int, count: int, raw: bytes) -> list:
+    if ftype in (5, 10):  # (S)RATIONAL
+        ich = "i" if ftype == 10 else "I"
+        pairs = struct.unpack(bo + str(2 * count) + ich, raw)
+        return [num / den if den else 0.0
+                for num, den in zip(pairs[::2], pairs[1::2])]
+    if ftype == 2:
+        return [raw.split(b"\0")[0].decode("ascii", "replace")]
+    return list(struct.unpack(bo + str(count) + _TYPES[ftype][0], raw))
+
+
+@dataclass(frozen=True)
+class TiffLayout:
+    """Pixel layout of a TIFF image: everything :func:`decode_segment`
+    needs, as plain values (the GeoTIFF source ships them as columns)."""
+
+    w: int
+    h: int
+    seg_w: int
+    seg_h: int
+    tiled: bool
+    comp: int
+    pred: int
+    bits: int
+    fmt: int
+    bo: str  # '<' | '>'
+    spp: int
+
+
+def read_tiff(
+    read: Callable[[int, int], bytes],
+) -> tuple[TiffLayout, list[tuple[int, int]], dict[int, list]]:
+    """Header and first IFD → (layout, [(offset, length)] per segment,
+    {tag: values}).  Reads no pixel byte."""
+    bo, ifd_off = tiff_header(read)
+    entries, _next = tiff_ifd(read, bo, ifd_off)
+    tags = {tag: _tag_values(bo, ftype, count, raw)
+            for tag, ftype, count, raw in entries if ftype in _TYPES}
+
+    def first(tag: int, default: int | None = None) -> int:
+        if tag not in tags and default is None:
+            raise ValueError(f"TIFF tag {tag} missing")
+        return int(tags.get(tag, [default])[0])
+
+    tiled = T_TILE_OFFSETS in tags
+    w, h = first(T_WIDTH), first(T_LENGTH)
+    if tiled:
+        seg_w, seg_h = first(T_TILE_W), first(T_TILE_H)
+        offsets, counts = tags[T_TILE_OFFSETS], tags.get(T_TILE_COUNTS, [])
+    else:
+        seg_w, seg_h = w, first(T_ROWS_PER_STRIP, h)
+        offsets = tags.get(T_STRIP_OFFSETS, [])
+        counts = tags.get(T_STRIP_COUNTS, [])
+    if len(set(tags.get(T_BITS, [8]))) != 1:
+        raise NotImplementedError("heterogeneous BitsPerSample")
+    if first(T_PLANAR, 1) != 1:
+        raise NotImplementedError("planar (non-chunky) TIFF")
+    lay = TiffLayout(w, h, seg_w, seg_h, tiled, first(T_COMPRESSION, 1),
+                     first(T_PREDICTOR, 1), first(T_BITS, 8),
+                     first(T_SAMPLE_FMT, 1), bo, first(T_SAMPLES, 1))
+    if lay.spp not in (1, 3):
+        raise NotImplementedError(f"SamplesPerPixel {lay.spp}")
+    _dtype_for(lay.bits, lay.fmt, bo)  # unsupported sample types fail here
+    n_seg = -(-h // max(seg_h, 1)) * (-(-w // max(seg_w, 1)) if tiled else 1)
+    if min(w, h, seg_w, seg_h) <= 0 or not len(offsets) == len(counts) == n_seg:
+        raise ValueError(
+            f"TIFF {w}x{h} in {seg_w}x{seg_h} segments lists "
+            f"{len(offsets)} offsets and {len(counts)} byte counts"
+        )
+    return lay, [(int(o), int(c)) for o, c in zip(offsets, counts)], tags
 
 
 def _dtype_for(bits: int, fmt: int, bo: str) -> np.dtype:
@@ -284,84 +289,64 @@ def _dtype_for(bits: int, fmt: int, bo: str) -> np.dtype:
     return np.dtype(e + kind + str(bits // 8))
 
 
+def decode_segment(
+    read: Callable[[int, int], bytes], lay: TiffLayout, idx: int,
+    off: int, length: int,
+) -> tuple[np.ndarray, int, int]:
+    """Decode strip/tile ``idx`` stored at ``[off, off + length)`` →
+    (pixels [rows, cols, spp] clipped to the image, x0, y0).  A byte
+    range past the end of the data, a corrupt stream, or a segment that
+    decodes to fewer bytes than its layout needs raises ``ValueError``."""
+    if lay.tiled:  # tiles are stored padded to full size
+        across = -(-lay.w // lay.seg_w)
+        x0, y0 = (idx % across) * lay.seg_w, (idx // across) * lay.seg_h
+        seg_h = lay.seg_h
+    else:  # the last strip holds only the remaining rows
+        x0, y0 = 0, idx * lay.seg_h
+        seg_h = min(lay.seg_h, lay.h - y0)
+    raw = read(off, length)
+    if len(raw) < length:
+        raise ValueError(f"segment {idx}: bytes [{off}, {off + length}) "
+                         "run past the end of the data")
+    dt = _dtype_for(lay.bits, lay.fmt, lay.bo)
+    expected = lay.seg_w * seg_h * lay.spp * dt.itemsize
+    try:
+        if lay.comp == 1:
+            plain = raw
+        elif lay.comp == 5:
+            plain = lzw.decode(raw, expected, 8, **_LZW)
+        elif lay.comp in (8, 32946):
+            plain = zlib.decompress(raw)
+        elif lay.comp == 32773:
+            plain = packbits_decode(raw, expected)
+        else:
+            raise NotImplementedError(f"TIFF compression {lay.comp}")
+        if len(plain) < expected:
+            raise ValueError(f"decoded {len(plain)} of {expected} bytes")
+    except (ValueError, zlib.error) as e:
+        raise ValueError(f"segment {idx}: {e}") from e
+    seg = np.frombuffer(plain[:expected], dt).reshape(seg_h, lay.seg_w, lay.spp)
+    if lay.pred == 2:
+        seg = np.cumsum(seg.astype(np.int64), axis=1, dtype=np.int64)
+        seg = seg.astype(dt)  # wraparound per spec
+    return seg[: lay.h - y0, : lay.w - x0], x0, y0
+
+
 def decode_geotiff(data: bytes) -> tuple[np.ndarray, GeoRef | None]:
     """Parse a classic TIFF; returns (array[h,w] or [h,w,3], georef).
     Georef is None when the geo tags are absent (plain TIFF)."""
-    if data[:2] == b"II":
-        bo = "<"
-    elif data[:2] == b"MM":
-        bo = ">"
-    else:
-        raise ValueError("not a TIFF: bad byte-order mark")
-    magic, ifd_off = struct.unpack_from(bo + "HI", data, 2)
-    if magic == 43:
-        raise NotImplementedError("BigTIFF (magic 43) not supported")
-    if magic != 42:
-        raise ValueError(f"not a TIFF: magic {magic}")
-    tags = _read_ifd(data, bo, ifd_off)
 
-    w = int(tags[T_WIDTH][0])
-    h = int(tags[T_LENGTH][0])
-    spp = int(tags.get(T_SAMPLES, [1])[0])
-    bits_l = tags.get(T_BITS, [8])
-    if len(set(bits_l)) != 1:
-        raise NotImplementedError("heterogeneous BitsPerSample")
-    bits = int(bits_l[0])
-    comp = int(tags.get(T_COMPRESSION, [1])[0])
-    pred = int(tags.get(T_PREDICTOR, [1])[0])
-    fmt = int(tags.get(T_SAMPLE_FMT, [1])[0])
-    if int(tags.get(T_PLANAR, [1])[0]) != 1:
-        raise NotImplementedError("planar (non-chunky) TIFF")
-    if spp not in (1, 3):
-        raise NotImplementedError(f"SamplesPerPixel {spp}")
-    dt = _dtype_for(bits, fmt, bo)
-    bpp = dt.itemsize * spp
+    def read(off: int, n: int) -> bytes:
+        return data[off : off + n]
 
-    tiled = T_TILE_OFFSETS in tags
-    if tiled:
-        sw, sh = int(tags[T_TILE_W][0]), int(tags[T_TILE_H][0])
-        offsets = tags[T_TILE_OFFSETS]
-        counts = tags[T_TILE_COUNTS]
-        across = (w + sw - 1) // sw
-    else:
-        sw = w
-        sh = int(tags.get(T_ROWS_PER_STRIP, [h])[0])
-        offsets = tags[T_STRIP_OFFSETS]
-        counts = tags[T_STRIP_COUNTS]
-        across = 1
-
-    img = np.zeros((h, w, spp), dtype=dt.newbyteorder("="))
-    for idx, (off, cnt) in enumerate(zip(offsets, counts)):
-        raw = data[int(off) : int(off) + int(cnt)]
-        if tiled:
-            seg_h = sh
-            y0 = (idx // across) * sh
-            x0 = (idx % across) * sw
-        else:
-            y0 = idx * sh
-            x0 = 0
-            seg_h = min(sh, h - y0)
-        expected = sw * seg_h * bpp
-        if comp == 1:
-            plain = raw[:expected]
-        elif comp == 5:
-            plain = lzw_decode_tiff(raw, expected)
-        elif comp == 8 or comp == 32946:
-            plain = zlib.decompress(raw)
-        elif comp == 32773:
-            plain = packbits_decode(raw, expected)
-        else:
-            raise NotImplementedError(f"TIFF compression {comp}")
-        if len(plain) < expected:
-            plain = plain + b"\0" * (expected - len(plain))
-        seg = np.frombuffer(plain[:expected], dtype=dt).reshape(seg_h, sw, spp)
-        if pred == 2:
-            seg = np.cumsum(seg.astype(np.int64), axis=1, dtype=np.int64)
-            seg = seg.astype(dt)  # wraparound per spec
-        cw = min(sw, w - x0)
-        ch = min(seg_h, h - y0)
-        img[y0 : y0 + ch, x0 : x0 + cw] = seg[:ch, :cw]
-
+    lay, segments, tags = read_tiff(read)
+    img = np.zeros(
+        (lay.h, lay.w, lay.spp),
+        dtype=_dtype_for(lay.bits, lay.fmt, lay.bo).newbyteorder("="),
+    )
+    for idx, (off, length) in enumerate(segments):
+        seg, x0, y0 = decode_segment(read, lay, idx, off, length)
+        img[y0 : y0 + seg.shape[0], x0 : x0 + seg.shape[1]] = seg
     georef = None
     if T_TIEPOINT in tags and T_PIXEL_SCALE in tags:
         tp = tags[T_TIEPOINT]
@@ -376,7 +361,7 @@ def decode_geotiff(data: bytes) -> tuple[np.ndarray, GeoRef | None]:
                 if gk[k] in (2048, 3072) and gk[k + 1] == 0:
                     crs = f"EPSG:{int(gk[k + 3])}"
         georef = GeoRef(lon - ix * sx, lat + iy * sy, sx, sy, crs)
-    return (img[:, :, 0] if spp == 1 else img), georef
+    return (img[:, :, 0] if lay.spp == 1 else img), georef
 
 
 # ------------------------------------------------------------- writer
@@ -443,7 +428,7 @@ def encode_geotiff(
         elif comp_id == 8:
             payloads.append(zlib.compress(raw, 6))
         elif comp_id == 5:
-            payloads.append(lzw_encode_tiff(raw))
+            payloads.append(lzw.encode(raw, 8, **_LZW))
         else:
             payloads.append(packbits_encode(raw))
 

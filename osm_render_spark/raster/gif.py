@@ -1,7 +1,9 @@
 """GIF codec from scratch (GIF87a/89a, the published CompuServe spec):
-LZW with variable-width codes, interlacing, local/global color tables,
-transparency, multi-frame animations with disposal compositing, and an
-exact-palette encoder.
+interlacing, local/global color tables, transparency, multi-frame
+animations with disposal compositing, and an exact-palette encoder.
+Image data is LZW-coded by the core shared with TIFF (raster/lzw.py),
+with GIF's constants: per-image min code size, LSB-first codes, code
+width growing when the table fills it.
 
 Same discipline as the JPEG/FLAC/LZ4/zstd codecs in this repo: pure
 python/numpy against the public format, validated by hand-assembled
@@ -23,145 +25,10 @@ import struct
 
 import numpy as np
 
-MAX_CODE = 4096  # 12-bit LZW ceiling fixed by the spec
+from . import lzw
 
-
-# --- LZW ----------------------------------------------------------------
-
-
-def lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> np.ndarray:
-    """GIF-flavor LZW: LSB-first bit packing, CLEAR/EOI codes, code
-    width grows AFTER the table fills the current width, table capped
-    at 4096.  Returns exactly n_pixels indices (spec-conforming streams
-    may omit a final EOI; extra pixels beyond n_pixels are ignored, as
-    every tolerant decoder does)."""
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-    # table as (prefix_code, tail_byte) pairs; roots are (-1, i)
-    prefix = np.full(MAX_CODE, -1, np.int32)
-    tail = np.zeros(MAX_CODE, np.uint8)
-    tail[:clear] = np.arange(clear)
-
-    out = np.empty(n_pixels, np.uint8)
-    n_out = 0
-    width = min_code_size + 1
-    next_code = eoi + 1
-    acc = bits = 0
-    prev = -1
-    buf = np.empty(MAX_CODE, np.uint8)  # expansion scratch (max chain)
-
-    def expand(code: int) -> int:
-        n = 0
-        c = code
-        while c >= 0:
-            buf[n] = tail[c]
-            c = prefix[c] if c >= clear else -1
-            n += 1
-        return n
-
-    for byte in data:
-        acc |= byte << bits
-        bits += 8
-        while bits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            bits -= width
-            if code == clear:
-                next_code = eoi + 1
-                width = min_code_size + 1
-                prev = -1
-                continue
-            if code == eoi:
-                if n_out < n_pixels:
-                    raise ValueError(
-                        f"LZW EOI after {n_out}/{n_pixels} pixels"
-                    )
-                return out
-            if code >= next_code or (code > eoi and code >= MAX_CODE):
-                # the only legal "not yet defined" code is next_code
-                # itself with the KwKwK rule
-                if code != next_code or prev < 0:
-                    raise ValueError(f"LZW code {code} out of range")
-                n = expand(prev)
-                first = buf[n - 1]
-                seq = np.empty(n + 1, np.uint8)
-                seq[:n] = buf[:n][::-1]
-                seq[n] = first
-            else:
-                n = expand(code)
-                seq = buf[:n][::-1]
-            take = min(len(seq), n_pixels - n_out)
-            out[n_out: n_out + take] = seq[:take]
-            n_out += take
-            if n_out >= n_pixels:
-                return out
-            if prev >= 0 and next_code < MAX_CODE:
-                prefix[next_code] = prev
-                tail[next_code] = seq[0]
-                next_code += 1
-                if next_code == (1 << width) and width < 12:
-                    width += 1
-            prev = code
-    if n_out < n_pixels:
-        raise ValueError(f"LZW stream exhausted at {n_out}/{n_pixels} pixels")
-    return out
-
-
-def lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
-    """Greedy longest-match LZW, emitting CLEAR up front and on table
-    overflow (the standard strategy every spec-conforming decoder
-    accepts), EOI at the end."""
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-    out = bytearray()
-    acc = bits = 0
-    width = min_code_size + 1
-
-    def emit(code: int):
-        nonlocal acc, bits
-        acc |= code << bits
-        bits += width
-        while bits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            bits -= 8
-
-    table: dict[tuple[int, int], int] = {}
-    next_code = eoi + 1
-    emit(clear)
-    prev = -1
-    for px in indices.astype(np.int64):
-        px = int(px)
-        if prev < 0:
-            prev = px
-            continue
-        key = (prev, px)
-        if key in table:
-            prev = table[key]
-            continue
-        emit(prev)
-        if next_code < MAX_CODE:
-            table[key] = next_code
-            # width-growth is checked on the PRE-increment count: the
-            # decoder lags the encoder by exactly one assignment (it
-            # cannot assign on the first post-clear code), so its count
-            # hits 1<<width one emission after ours does post-increment
-            # — growing here keeps every emitted code inside the width
-            # the decoder is reading with
-            if next_code == (1 << width) and width < 12:
-                width += 1
-            next_code += 1
-        else:
-            emit(clear)
-            table.clear()
-            next_code = eoi + 1
-            width = min_code_size + 1
-        prev = px
-    if prev >= 0:
-        emit(prev)
-    emit(eoi)
-    if bits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
+# GIF's constants for the shared LZW core
+_LZW = dict(msb_first=False, early_change=False)
 
 # --- container ----------------------------------------------------------
 
@@ -249,8 +116,10 @@ def decode_gif(data: bytes) -> list[tuple[np.ndarray, int]]:
             raise ValueError("image block exceeds the logical screen")
         min_code = data[pos]
         pos += 1
-        lzw, pos = _read_sub_blocks(data, pos)
-        idx = lzw_decode(lzw, min_code, fw * fh).reshape(fh, fw)
+        packed, pos = _read_sub_blocks(data, pos)
+        idx = np.frombuffer(
+            lzw.decode(packed, fw * fh, min_code, **_LZW), np.uint8
+        ).reshape(fh, fw)
         if fpacked & 0x40:  # interlaced: rows arrive in pass order
             rows = np.empty((fh, fw), np.uint8)
             rows[_interlace_order(fh)] = idx
@@ -346,6 +215,8 @@ def encode_gif(
         )
         rows = idx[_interlace_order(h)] if interlace else idx
         out.append(min_code)
-        out += _sub_blocks(lzw_encode(rows.ravel(), min_code))
+        out += _sub_blocks(
+            lzw.encode(rows.tobytes(), min_code, **_LZW)
+        )
     out.append(0x3B)
     return bytes(out)

@@ -19,6 +19,9 @@ one we would set on a real 1000-executor cluster too:
   (J5): the reference merges relation tags *over* way tags
   (``addEntriesFromDictionary``, MapData.m:282), i.e. last write wins.
 * Session timezone pinned to UTC so DuckDB-oracle comparisons are stable.
+* Python workers import the package from any working directory:
+  ``spark.executorEnv.PYTHONPATH`` puts the directory that holds it in
+  front of the inherited ``PYTHONPATH`` (an ``extra_conf`` value wins).
 """
 
 from __future__ import annotations
@@ -47,6 +50,12 @@ def _host_driver_mem() -> str:
     except (OSError, StopIteration):
         return "4g"
     return f"{max(1, kib // (2 * 1024 * 1024))}g"
+
+
+def _worker_pythonpath() -> str:
+    """This package's parent directory, then the inherited PYTHONPATH."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
 
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
@@ -78,6 +87,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Parquet: keep pushdown + dictionary decode on (the reference's PBF
         # format has delta+dictionary encoding natively; Parquet is our

@@ -5,10 +5,12 @@ reference's bounded-memory file walk, MapData.m:361-482): a GeoTIFF's
 strips/tiles are independently compressed byte ranges whose offsets
 live in the IFD, so the driver parses ONLY the header + IFD (a few KB
 of targeted range reads, no pixel bytes), builds a
-(path, segment, offset, length, position) pointer index, and each task
+(path, segment, offset, length, layout) pointer index, and each task
 range-reads and decodes exactly its own segments.  An 80 GB DEM mosaic
 never ships whole-file bytes through a shuffle and no task holds more
-than one compressed segment plus its decoded pixels.
+than one compressed segment plus its decoded pixels.  Header walk and
+segment decoder are raster/geotiff.py's; a cut or corrupt segment fails
+the read, naming the file and segment.
 
 Regridding TIFF segments to the engine's tile_px grid:
 - fast path: the file is TIFF-tiled with tile dims == tile_px — each
@@ -25,56 +27,27 @@ tile_px (DEM products ship in aligned tiles; a clear error otherwise).
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Iterator
-from dataclasses import dataclass
+from collections.abc import Callable, Iterator
+from dataclasses import astuple, fields
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..raster.geotiff import (
-    _TYPES,
-    T_BITS,
-    T_COMPRESSION,
-    T_LENGTH,
-    T_PLANAR,
-    T_PREDICTOR,
-    T_ROWS_PER_STRIP,
-    T_SAMPLE_FMT,
-    T_SAMPLES,
-    T_STRIP_COUNTS,
-    T_STRIP_OFFSETS,
-    T_TILE_COUNTS,
-    T_TILE_H,
-    T_TILE_OFFSETS,
-    T_TILE_W,
-    T_WIDTH,
-    _dtype_for,
-    lzw_decode_tiff,
-    packbits_decode,
-)
+from ..raster.geotiff import TiffLayout, decode_segment, read_tiff
 from ..session import arrow_stage_partitions
 from .pbf import _open_stream
 
 _I32 = np.dtype("<i4")
+_LAYOUT_FIELDS = fields(TiffLayout)
 
 
-@dataclass(frozen=True)
-class TiffLayout:
-    """Everything a task needs to decode one segment — shipped as plain
-    columns in the pointer index so the kernel is closure-free."""
+def _range_reader(f) -> Callable[[int, int], bytes]:
+    def read(off: int, n: int) -> bytes:
+        f.seek(off)
+        return f.read(n)
 
-    w: int
-    h: int
-    seg_w: int
-    seg_h: int
-    tiled: bool
-    comp: int
-    pred: int
-    bits: int
-    fmt: int
-    bo: str  # '<' | '>'
+    return read
 
 
 def tiff_segment_index(
@@ -84,97 +57,15 @@ def tiff_segment_index(
     Reads the 8-byte header, the IFD entry table, and any out-of-line
     value arrays — never a pixel byte."""
     with _open_stream(path) as f:
-        head = f.read(8)
-        if head[:2] == b"II":
-            bo = "<"
-        elif head[:2] == b"MM":
-            bo = ">"
-        else:
-            raise ValueError(f"{path}: not a TIFF")
-        magic, ifd_off = struct.unpack(bo + "HI", head[2:])
-        if magic != 42:
-            raise NotImplementedError(f"{path}: TIFF magic {magic}")
-        f.seek(ifd_off)
-        (count,) = struct.unpack(bo + "H", f.read(2))
-        entries = f.read(12 * count)
-        tags: dict[int, list] = {}
-        out_of_line: list[tuple[int, int, int, int]] = []  # tag,type,n,off
-        for i in range(count):
-            tag, ftype, n = struct.unpack_from(bo + "HHI", entries, 12 * i)
-            if ftype not in _TYPES or ftype in (2, 5, 10):
-                continue
-            ch, size = _TYPES[ftype]
-            if size * n <= 4:
-                tags[tag] = list(
-                    struct.unpack_from(bo + str(n) + ch, entries, 12 * i + 8)
-                )
-            else:
-                (voff,) = struct.unpack_from(bo + "I", entries, 12 * i + 8)
-                out_of_line.append((tag, ftype, n, voff))
-        for tag, ftype, n, voff in out_of_line:
-            ch, size = _TYPES[ftype]
-            f.seek(voff)
-            tags[tag] = list(struct.unpack(bo + str(n) + ch, f.read(size * n)))
-
-    w = int(tags[T_WIDTH][0])
-    h = int(tags[T_LENGTH][0])
-    if int(tags.get(T_SAMPLES, [1])[0]) != 1:
-        raise NotImplementedError("DEM source is single-sample (grayscale)")
-    if int(tags.get(T_PLANAR, [1])[0]) != 1:
-        raise NotImplementedError("planar TIFF")
-    tiled = T_TILE_OFFSETS in tags
-    if tiled:
-        seg_w, seg_h = int(tags[T_TILE_W][0]), int(tags[T_TILE_H][0])
-        offsets, counts = tags[T_TILE_OFFSETS], tags[T_TILE_COUNTS]
-    else:
-        seg_w = w
-        seg_h = int(tags.get(T_ROWS_PER_STRIP, [h])[0])
-        offsets, counts = tags[T_STRIP_OFFSETS], tags[T_STRIP_COUNTS]
-    layout = TiffLayout(
-        w=w,
-        h=h,
-        seg_w=seg_w,
-        seg_h=seg_h,
-        tiled=tiled,
-        comp=int(tags.get(T_COMPRESSION, [1])[0]),
-        pred=int(tags.get(T_PREDICTOR, [1])[0]),
-        bits=int(tags.get(T_BITS, [8])[0]),
-        fmt=int(tags.get(T_SAMPLE_FMT, [1])[0]),
-        bo=bo,
-    )
-    segs = [
-        (i, int(off), int(cnt)) for i, (off, cnt) in enumerate(zip(offsets, counts))
-    ]
-    return layout, segs
+        lay, segments, _tags = read_tiff(_range_reader(f))
+    return lay, [(i, off, n) for i, (off, n) in enumerate(segments)]
 
 
-def _decode_segment(raw: bytes, lay: TiffLayout, seg_h: int) -> np.ndarray:
-    dt = _dtype_for(lay.bits, lay.fmt, lay.bo)
-    expected = lay.seg_w * seg_h * dt.itemsize
-    if lay.comp == 1:
-        plain = raw[:expected]
-    elif lay.comp == 5:
-        plain = lzw_decode_tiff(raw, expected)
-    elif lay.comp in (8, 32946):
-        import zlib
-
-        plain = zlib.decompress(raw)
-    elif lay.comp == 32773:
-        plain = packbits_decode(raw, expected)
-    else:
-        raise NotImplementedError(f"TIFF compression {lay.comp}")
-    if len(plain) < expected:
-        plain = plain + b"\0" * (expected - len(plain))
-    seg = np.frombuffer(plain[:expected], dtype=dt).reshape(seg_h, lay.seg_w)
-    if lay.pred == 2:
-        seg = np.cumsum(seg.astype(np.int64), axis=1, dtype=np.int64).astype(dt)
-    return seg
-
-
+# pointer columns, then the TiffLayout fields in declaration order
 _IDX_SCHEMA = (
     "raster string, path string, seg int, offset long, length long, "
     "w int, h int, seg_w int, seg_h int, tiled boolean, comp int, "
-    "pred int, bits int, fmt int, bo string"
+    "pred int, bits int, fmt int, bo string, spp int"
 )
 
 
@@ -193,17 +84,17 @@ def read_geotiff_tiles(
     fast = True
     for path in sorted(paths):
         lay, segs = tiff_segment_index(path)
+        if lay.spp != 1:
+            raise NotImplementedError(
+                f"{path}: DEM source is single-sample (grayscale)"
+            )
         if lay.w % tile_px or lay.h % tile_px:
             raise ValueError(
                 f"{path}: {lay.w}x{lay.h} not a multiple of tile_px={tile_px}"
             )
         fast = fast and lay.tiled and lay.seg_w == tile_px and lay.seg_h == tile_px
         name = path.rsplit("/", 1)[-1]
-        rows += [
-            (name, path, i, off, cnt, lay.w, lay.h, lay.seg_w, lay.seg_h,
-             lay.tiled, lay.comp, lay.pred, lay.bits, lay.fmt, lay.bo)
-            for i, off, cnt in segs
-        ]
+        rows += [(name, path, i, off, cnt) + astuple(lay) for i, off, cnt in segs]
     n_part = index_partitions or min(len(rows), arrow_stage_partitions(spark))
     # explicit partition count: the index rows are pointers to heavy
     # decode work (CLAUDE.md AQE-coalesce trap)
@@ -218,28 +109,17 @@ def read_geotiff_tiles(
                     fh = handles.get(r.path)
                     if fh is None:
                         fh = handles[r.path] = _open_stream(r.path)
-                    fh.seek(int(r.offset))
-                    raw = fh.read(int(r.length))
-                    lay = TiffLayout(
-                        r.w, r.h, r.seg_w, r.seg_h, bool(r.tiled),
-                        r.comp, r.pred, r.bits, r.fmt, r.bo,
-                    )
-                    if lay.tiled:
-                        across = (lay.w + lay.seg_w - 1) // lay.seg_w
-                        x0 = (r.seg % across) * lay.seg_w
-                        y0 = (r.seg // across) * lay.seg_h
-                        seg_h = lay.seg_h
-                    else:
-                        x0, y0 = 0, r.seg * lay.seg_h
-                        seg_h = min(lay.seg_h, lay.h - y0)
-                    seg = _decode_segment(raw, lay, seg_h)
+                    lay = TiffLayout(*(getattr(r, f.name) for f in _LAYOUT_FIELDS))
+                    try:
+                        seg, x0, y0 = decode_segment(
+                            _range_reader(fh), lay, r.seg, r.offset, r.length
+                        )
+                    except ValueError as e:
+                        raise ValueError(f"{r.path}: {e}") from e
                     if seg.dtype.kind == "f":
                         seg = np.floor(seg + 0.5)
-                    seg = seg.astype(_I32)
-                    # clip the right/bottom tile padding, then slice into
-                    # engine-tile-aligned sub-rects
-                    seg = seg[: min(seg.shape[0], lay.h - y0),
-                              : min(seg.shape[1], lay.w - x0)]
+                    seg = seg[:, :, 0].astype(_I32)
+                    # slice into engine-tile-aligned sub-rects
                     ys = range(y0 // tile_px, (y0 + seg.shape[0] - 1) // tile_px + 1)
                     xs = range(x0 // tile_px, (x0 + seg.shape[1] - 1) // tile_px + 1)
                     for ty in ys:

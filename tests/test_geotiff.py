@@ -8,17 +8,23 @@ import struct
 import numpy as np
 import pytest
 
+from osm_render_spark.raster import lzw
+from osm_render_spark.raster.geotiff import _LZW as TIFF_LZW
 from osm_render_spark.raster.geotiff import (
     GeoRef,
     decode_geotiff,
     encode_geotiff,
-    lzw_decode_tiff,
-    lzw_encode_tiff,
     packbits_decode,
     packbits_encode,
 )
+from osm_render_spark.raster.gif import _LZW as GIF_LZW
 
 RNG = np.random.default_rng(20260817)
+LZW_FORMATS = (TIFF_LZW, GIF_LZW)
+
+
+def _lzw_roundtrip(data: bytes, fmt: dict) -> bytes:
+    return lzw.decode(lzw.encode(data, 8, **fmt), len(data), 8, **fmt)
 
 
 def _img(dt):
@@ -98,9 +104,9 @@ def test_lzw_handcrafted_stream():
     bits = "".join(f"{c:09b}" for c in codes)
     bits += "0" * (-len(bits) % 8)
     raw = bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
-    assert lzw_decode_tiff(raw, 4) == b"AAAA"
+    assert lzw.decode(raw, 4, 8, **TIFF_LZW) == b"AAAA"
     # and the encoder produces exactly this stream
-    assert lzw_encode_tiff(b"AAAA") == raw
+    assert lzw.encode(b"AAAA", 8, **TIFF_LZW) == raw
 
 
 def test_lzw_early_change_boundary():
@@ -108,17 +114,37 @@ def test_lzw_early_change_boundary():
     change' off-by-one) and round-trip exactly; a late-change decoder
     would desynchronize at code 511."""
     data = bytes(RNG.integers(0, 256, 4000, dtype=np.uint8))
-    assert lzw_decode_tiff(lzw_encode_tiff(data), len(data)) == data
     runs = b"".join(bytes([i % 251]) * 3 for i in range(3000))
-    assert lzw_decode_tiff(lzw_encode_tiff(runs), len(runs)) == runs
+    for fmt in LZW_FORMATS:  # GIF's late change crosses the same widths
+        assert _lzw_roundtrip(data, fmt) == data
+        assert _lzw_roundtrip(runs, fmt) == runs
 
 
 def test_lzw_table_reset_roundtrip():
     """Enough distinct material to trip the encoder's 12-bit table reset
     (Clear mid-stream), then continue."""
     data = bytes(RNG.integers(0, 256, 120_000, dtype=np.uint8))
-    enc = lzw_encode_tiff(data)
-    assert lzw_decode_tiff(enc, len(data)) == data
+    enc = lzw.encode(data, 8, **TIFF_LZW)
+    assert lzw.decode(enc, len(data), 8, **TIFF_LZW) == data
+
+
+def test_lzw_encoder_bytes_pinned():
+    """Encoder output across every width change and several table
+    resets, pinned (sha256 prefix) to the bytes the former separate GIF
+    and TIFF encoders wrote, so written files do not change."""
+    import hashlib
+
+    rng = np.random.default_rng(20260818)
+    data = rng.integers(0, 256, 60_000, dtype=np.uint8).tobytes()
+    data += bytes(range(256)) * 40
+    small = (np.frombuffer(data, np.uint8) % 8).tobytes()
+    for raw, size, fmt, n, digest in (
+        (data, 8, GIF_LZW, 85171, "448784df3e018227"),
+        (data, 8, TIFF_LZW, 85195, "9327fee150fe6286"),
+        (small, 3, GIF_LZW, 26960, "1ad0e7fd2c9015b3"),
+    ):
+        enc = lzw.encode(raw, size, **fmt)
+        assert (len(enc), hashlib.sha256(enc).hexdigest()[:16]) == (n, digest)
 
 
 def test_packbits_spec_example():
@@ -163,6 +189,53 @@ def test_guards():
         decode_geotiff(struct.pack("<2sHI", b"II", 43, 8) + b"\0" * 8)
     with pytest.raises(ValueError, match="multiples of 16"):
         encode_geotiff(_img(np.uint8), tile=(20, 16))
+    # malformed headers: ValueError, never struct.error
+    good = encode_geotiff(_img(np.int32), georef=GeoRef(0, 0, 1, 1))
+    with pytest.raises(ValueError, match="out of bounds"):
+        decode_geotiff(good[:-40])  # cuts the out-of-line geo values
+    with pytest.raises(ValueError, match="IFD offset out of bounds"):
+        decode_geotiff(good[:4] + struct.pack("<I", len(good) + 8) + good[8:])
+    bad = bytearray(good)  # ModelPixelScale: 3 doubles, stored out of line
+    struct.pack_into("<I", bad, _entry_at(good, 33550) + 8, len(good) + 100)
+    with pytest.raises(ValueError, match="value offset out of bounds"):
+        decode_geotiff(bytes(bad))
+
+
+def _entry_at(buf: bytes, tag: int) -> int | None:
+    """Position of ``tag``'s 12-byte IFD entry in a little-endian TIFF
+    written by encode_geotiff (None when absent)."""
+    (ifd,) = struct.unpack_from("<I", buf, 4)
+    (n,) = struct.unpack_from("<H", buf, ifd)
+    for e in range(ifd + 2, ifd + 2 + 12 * n, 12):
+        if struct.unpack_from("<H", buf, e)[0] == tag:
+            return e
+    return None
+
+
+def with_segment_length(buf: bytes, seg: int, new_length) -> bytes:
+    """``buf`` with segment ``seg``'s StripByteCounts/TileByteCounts
+    value replaced by ``new_length(old)``: the pixel bytes stay, the
+    reader sees a cut (or overlong) segment."""
+    e = _entry_at(buf, 279) or _entry_at(buf, 325)
+    b = bytearray(buf)
+    _tag, _typ, count, value = struct.unpack_from("<HHII", b, e)
+    at = e + 8 if count == 1 else value + 4 * seg
+    (old,) = struct.unpack_from("<I", b, at)
+    struct.pack_into("<I", b, at, new_length(old))
+    return bytes(b)
+
+
+@pytest.mark.parametrize("comp", ["lzw", "packbits", "none"])
+def test_truncated_segment_raises(comp):
+    """A segment cut in half must not decode to a zero-padded strip;
+    neither may a byte range running past the end of the data."""
+    img = _img(np.uint16)
+    b = encode_geotiff(img, compression=comp, rows_per_strip=16)
+    assert (decode_geotiff(with_segment_length(b, 1, lambda n: n))[0] == img).all()
+    with pytest.raises(ValueError, match="segment 1: "):
+        decode_geotiff(with_segment_length(b, 1, lambda n: n // 2))
+    with pytest.raises(ValueError, match="segment 1: .* past the end"):
+        decode_geotiff(with_segment_length(b, 1, lambda n: n + len(b)))
 
 
 def test_georef_bbox():
@@ -179,7 +252,8 @@ try:
     @settings(max_examples=60, deadline=None)
     @given(st.binary(min_size=0, max_size=3000))
     def test_lzw_fuzz_roundtrip(data):
-        assert lzw_decode_tiff(lzw_encode_tiff(data), len(data)) == data
+        for fmt in LZW_FORMATS:
+            assert _lzw_roundtrip(data, fmt) == data
 
     @settings(max_examples=60, deadline=None)
     @given(st.binary(min_size=0, max_size=3000))

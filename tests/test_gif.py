@@ -12,13 +12,11 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from osm_render_spark.raster import lzw
 from osm_render_spark.raster.codec import decode_image, encode_image
-from osm_render_spark.raster.gif import (
-    decode_gif,
-    encode_gif,
-    lzw_decode,
-    lzw_encode,
-)
+from osm_render_spark.raster.geotiff import _LZW as TIFF_LZW
+from osm_render_spark.raster.gif import _LZW as GIF_LZW
+from osm_render_spark.raster.gif import decode_gif, encode_gif
 
 
 def _rng(seed=0):
@@ -42,13 +40,13 @@ HAND_PIXELS = np.array([1, 1, 0, 0, 1, 1], np.uint8)
 
 
 def test_hand_worked_lzw_decodes():
-    assert (lzw_decode(HAND_LZW, 2, 6) == HAND_PIXELS).all()
+    assert lzw.decode(HAND_LZW, 6, 2, **GIF_LZW) == HAND_PIXELS.tobytes()
 
 
 def test_encoder_reproduces_hand_worked_bytes():
     # pins the encoder to the exact conventions the trace was worked
     # with (clear up front, late width change, EOI terminator)
-    assert lzw_encode(HAND_PIXELS, 2) == HAND_LZW
+    assert lzw.encode(HAND_PIXELS.tobytes(), 2, **GIF_LZW) == HAND_LZW
 
 
 def test_hand_assembled_gif_container():
@@ -76,7 +74,8 @@ def test_kwkwk_case():
     # code (code == next_code): [0,0,0,0,0] emits 0, then 6 (=(0,0))
     # twice-ish — round-trip proves both sides handle it
     seq = np.zeros(64, np.uint8)
-    assert (lzw_decode(lzw_encode(seq, 2), 2, 64) == seq).all()
+    enc = lzw.encode(seq.tobytes(), 2, **GIF_LZW)
+    assert lzw.decode(enc, 64, 2, **GIF_LZW) == seq.tobytes()
 
 
 def test_roundtrips():
@@ -117,12 +116,12 @@ def test_loud_errors():
     with pytest.raises(ValueError, match="256 distinct"):
         encode_gif(_rng(3).randint(0, 256, (64, 64, 3), np.uint8))
     # truncated LZW stream must not return short data silently
-    good = lzw_encode(np.arange(16, dtype=np.uint8) % 4, 2)
+    good = lzw.encode((np.arange(16, dtype=np.uint8) % 4).tobytes(), 2, **GIF_LZW)
     with pytest.raises(ValueError):
-        lzw_decode(good[:1], 2, 16)
+        lzw.decode(good[:1], 16, 2, **GIF_LZW)
     # out-of-range code
     with pytest.raises(ValueError):
-        lzw_decode(bytes([0xFF, 0xFF, 0xFF]), 2, 16)
+        lzw.decode(bytes([0xFF, 0xFF, 0xFF]), 16, 2, **GIF_LZW)
     # frame exceeding the logical screen
     gct = bytes(6)
     buf = b"GIF89a" + struct.pack("<HHBBB", 2, 2, 0x80, 0, 0) + gct
@@ -137,8 +136,11 @@ def test_loud_errors():
     st.integers(2, 8),
 )
 def test_lzw_fuzz(vals, mcs):
-    seq = (np.array(vals, np.int64) % (1 << mcs)).astype(np.uint8)
-    assert (lzw_decode(lzw_encode(seq, mcs), mcs, len(seq)) == seq).all()
+    seq = (np.array(vals, np.int64) % (1 << mcs)).astype(np.uint8).tobytes()
+    # both formats through the one core; TIFF's min code size is fixed
+    for fmt, size in ((GIF_LZW, mcs), (TIFF_LZW, 8)):
+        enc = lzw.encode(seq, size, **fmt)
+        assert lzw.decode(enc, len(seq), size, **fmt) == seq
 
 
 def test_codec_dispatch():
@@ -163,7 +165,7 @@ def test_disposal_restore_to_previous():
     buf = b"GIF89a" + struct.pack("<HHBBB", 2, 2, 0x81, 0, 0) + gct
 
     def image_block(left, top, w, h, pixels):
-        data = lzw_encode(np.asarray(pixels, np.uint8).ravel(), 2)
+        data = lzw.encode(np.asarray(pixels, np.uint8).tobytes(), 2, **GIF_LZW)
         return (
             struct.pack("<BHHHHB", 0x2C, left, top, w, h, 0)
             + bytes([2, len(data)]) + data + b"\x00"

@@ -247,3 +247,79 @@ def test_viterbi_equals_path_enumeration(spark):
         assert (got[t][0][3], path) == best, t
         n_checked += 1
     assert n_checked >= 10
+
+
+def _prefix_dp_reference(steps, switch_penalty):
+    """The DP as it was before backpointers: each state carries its
+    whole (way_id, seg_idx) prefix, O(L²) in trajectory length, and
+    ties compare the prefixes directly.  Kept as the tie-break oracle."""
+    states = [(d2, ((wid, sidx),), wid) for wid, sidx, d2 in steps[0]]
+    for cands in steps[1:]:
+        nxt = []
+        for wid, sidx, d2 in cands:
+            best = None
+            for cost, prefix, pw in states:
+                c = cost + d2 + (switch_penalty if pw != wid else 0)
+                k2 = (c, prefix + ((wid, sidx),))
+                if best is None or k2 < best:
+                    best = k2
+            nxt.append((best[0], best[1], wid))
+        states = nxt
+    cost, path, _ = min(states, key=lambda t: (t[0], t[1]))
+    return cost, list(path)
+
+
+def test_viterbi_backpointer_matches_prefix_dp():
+    """Tie-heavy random trajectories (a 3×3 (way, seg) grid, d2 and
+    penalty from {0, 5}) have many equal-cost paths; the backpointer DP
+    must pick the same (cost, lexicographic path) as the prefix DP."""
+    from osm_render_spark.operators.map_match import _viterbi_path
+
+    rng = np.random.default_rng(31)
+    for _ in range(400):
+        n, k = int(rng.integers(1, 14)), int(rng.integers(1, 5))
+        steps = []
+        for _s in range(n):
+            picks = rng.choice(9, size=k, replace=False)
+            steps.append([(int(p // 3), int(p % 3), 5 * int(rng.integers(0, 2)))
+                          for p in picks])
+        penalty = 5 * int(rng.integers(0, 2))
+        cost, idx = _viterbi_path(steps, penalty)
+        path = [steps[t][i][:2] for t, i in enumerate(idx)]
+        assert (cost, path) == _prefix_dp_reference(steps, penalty)
+
+
+def test_viterbi_long_trajectory(spark):
+    """One 2,000-point trajectory between three parallel ways on an
+    integer grid (pings equidistant from two ways, segment joints
+    equidistant from two segments): the kernel's rows equal the prefix
+    DP over brute-force top-3 candidates."""
+    seg_len, n, max_dist, penalty = 100, 2000, 20, 20_000
+    segs = [
+        (w, j, j * seg_len, y, (j + 1) * seg_len, y)
+        for w, y in ((1, -10), (2, 0), (3, 10))
+        for j in range(n * 10 // seg_len + 1)
+    ]
+    rng = np.random.default_rng(32)
+    pts = [(7, s, 10 * s, int(rng.choice([-5, 0, 5]))) for s in range(n)]
+    got = _run_traj(
+        spark, pts, segs, cell=128, max_dist=max_dist, top_k=3,
+        switch_penalty=penalty,
+    )[7]
+    steps = []
+    for _t, _s, x, y in pts:
+        near = []
+        for w in range(3):
+            base = w * (n * 10 // seg_len + 1)
+            j = x // seg_len
+            near += segs[base + max(j - 1, 0): base + j + 2]
+        cl = sorted(
+            (_brute_d2_milli(x, y, *sg[2:]), sg[0], sg[1])
+            for sg in near
+            if _brute_d2_milli(x, y, *sg[2:]) <= 1000 * max_dist ** 2
+        )
+        steps.append([(w, si, d) for d, w, si in cl[:3]])
+    cost, path = _prefix_dp_reference(steps, penalty)
+    assert len(got) == n
+    assert [got[s][:2] for s in range(n)] == path
+    assert {got[s][3] for s in range(n)} == {cost}

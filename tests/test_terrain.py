@@ -204,6 +204,33 @@ def test_source_rejects_unaligned_extent(spark, tmp_path):
         read_geotiff_tiles(spark, [p], T)
 
 
+def test_source_rejects_multi_sample(spark, tmp_path):
+    p = str(tmp_path / "rgb.tif")
+    with open(p, "wb") as f:
+        f.write(encode_geotiff(RNG.integers(0, 256, (64, 64, 3), dtype=np.uint8)))
+    assert tiff_segment_index(p)[0].spp == 3
+    with pytest.raises(NotImplementedError, match="rgb.tif: DEM source is single-sample"):
+        read_geotiff_tiles(spark, [p], T)
+
+
+@pytest.mark.parametrize("comp", ["lzw", "packbits", "none"])
+def test_source_truncated_segment_raises(spark, tmp_path, comp):
+    """A cut segment, or one whose byte range runs past the end of the
+    file, fails the read naming the file and segment instead of landing
+    as zero elevation."""
+    from test_geotiff import with_segment_length
+
+    dem = RNG.integers(-100, 3000, (128, 128)).astype(np.int32)
+    good = encode_geotiff(dem, compression=comp, tile=(64, 64))
+    for name, length in (("cut", lambda n: n // 2),
+                         ("long", lambda n: n + len(good))):
+        p = tmp_path / f"{name}_{comp}.tif"
+        p.write_bytes(with_segment_length(good, 2, length))
+        with pytest.raises(Exception) as err:
+            read_geotiff_tiles(spark, [str(p)], T).collect()
+        assert f"ValueError: {p}: segment 2: " in str(err.value)
+
+
 def test_source_float_dem_rounds_f6(spark, tmp_path):
     """float32 DEM samples land as floor(x+0.5) int32 (engine-wide F6)."""
     dem = np.full((64, 64), 12.5, dtype=np.float32)
