@@ -13,6 +13,9 @@ has `<<` but no shiftleft(), and x*2^k is both engines' common ground
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -69,6 +72,24 @@ def zorder_write(
     staged_clustered_write(keyed, path, "_zkey", n_files)
 
 
+def _atomic_dir_swap(path: str, tmp: str) -> None:
+    """Replace directory ``path`` with ``tmp`` via two atomic renames
+    (live → .old, tmp → live), so readers never see a mix of old and new
+    files. If the second rename fails, the original is renamed back and
+    the tmp copy removed. Fixed-name .old debris from a crashed previous
+    run is cleared first."""
+    old = f"{path}.old"
+    shutil.rmtree(old, ignore_errors=True)
+    os.rename(path, old)
+    try:
+        os.rename(tmp, path)
+    except Exception:
+        os.rename(old, path)  # roll back to the intact original
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def staged_clustered_write(
     keyed: DataFrame, path: str, key_col: str, n_files: int
 ) -> None:
@@ -78,23 +99,19 @@ def staged_clustered_write(
     ``path`` in overwrite mode would have deleted an existing table
     before validation ran (review catch — a failed rewrite must leave
     the old data intact)."""
-    import os as _os
-    import shutil as _shutil
-
-    from ..plans.compact import atomic_dir_swap
     from ..sources.manifest import write_dataset
 
     tmp = f"{path}.zorder-tmp"
-    _shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
     try:
         write_dataset(keyed, tmp, key_col, n_files)
     except Exception:
-        _shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
         raise
-    if _os.path.isdir(path):
-        atomic_dir_swap(path, tmp)
+    if os.path.isdir(path):
+        _atomic_dir_swap(path, tmp)
     else:
-        _os.rename(tmp, path)
+        os.rename(tmp, path)
 
 
 def quadtree_bbox_ranges(
@@ -196,8 +213,6 @@ def pruned_files_bbox(
 ) -> list[str]:
     """Manifest file skipping for an ARBITRARY bbox: files whose key
     range intersects any of the bbox's Morton ranges."""
-    import os as _os
-
     from pyspark.sql import functions as _F
 
     from ..sources.manifest import MANIFEST, _resolve
@@ -205,7 +220,7 @@ def pruned_files_bbox(
     ranges = bbox_morton_ranges(x0, x1, y0, y1, max_ranges)
     if not ranges:
         return []  # bbox entirely off the 16-bit grid (or inverted)
-    m = spark.read.parquet(_os.path.join(path, MANIFEST))
+    m = spark.read.parquet(os.path.join(path, MANIFEST))
     cond = None
     for lo, hi in ranges:
         c = (_F.col("cell_max") >= lo) & (_F.col("cell_min") <= hi)

@@ -620,25 +620,19 @@ def build_ivf_index(
         # pass runs once, release before returning
         lists = lists.persist()
     try:
-        # batch_id = -1 marks the initial build; streaming appends
-        # (ivf_append_foreach_batch) land as their own (list_id,
-        # batch_id) partitions, so replays overwrite only themselves
-        base = lists.withColumn("batch_id", F.lit(-1))
-        base.write.mode("overwrite").partitionBy("list_id", "batch_id").parquet(
+        # one directory per list: a probe's WHERE on list_id prunes the
+        # scan to the probed lists
+        lists.write.mode("overwrite").partitionBy("list_id").parquet(
             f"{path}/lists"
         )
         if sq8:
-            _quantize_lists_q8(lists, id_col).withColumn(
-                "batch_id", F.lit(-1)
-            ).write.mode("overwrite").partitionBy("list_id", "batch_id").parquet(
-                f"{path}/lists_q8"
-            )
+            _quantize_lists_q8(lists, id_col).write.mode(
+                "overwrite"
+            ).partitionBy("list_id").parquet(f"{path}/lists_q8")
         if pq:
-            _encode_pq_lists(lists, id_col, books, c_mat).withColumn(
-                "batch_id", F.lit(-1)
-            ).write.mode("overwrite").partitionBy("list_id", "batch_id").parquet(
-                f"{path}/lists_pq"
-            )
+            _encode_pq_lists(lists, id_col, books, c_mat).write.mode(
+                "overwrite"
+            ).partitionBy("list_id").parquet(f"{path}/lists_pq")
             book_rows = [
                 (int(j), int(c), [float(v) for v in books[j, c]])
                 for j in range(books.shape[0])
@@ -1035,86 +1029,6 @@ def query_ivf_index_quantized(
         .join(F.broadcast(q_emb), "query_id")
     )
     return _score_and_rank(rejoined, k, id_col)
-
-
-def ivf_append_foreach_batch(path: str, id_col: str = "vec_id"):
-    """foreachBatch incremental IVF maintenance (r3 judge item #6): a
-    real pipeline appends embeddings continuously, so the persisted
-    index must grow without a rebuild. Each micro-batch is assigned to
-    the index's EXISTING centroids (the coarse quantizer is fixed at
-    build time — re-clustering is an offline rebuild, the standard IVF
-    maintenance contract) and written as its own (list_id, batch_id)
-    partitions under dynamic-partition overwrite, so a REPLAYED batch
-    (foreachBatch crash recovery) rewrites exactly its own partitions —
-    idempotent, the same pattern as
-    streaming/dedup.exact_dedup_foreach_batch. When the index carries an
-    int8 store (build_ivf_index(..., quantize=True)) the batch appends
-    there too, keeping both probe paths complete.
-
-    Use: ``stream.writeStream.foreachBatch(ivf_append_foreach_batch(
-    path)).start()`` with batches of (vec_id, embedding)."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        import numpy as np
-
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
-        cent = (
-            spark.read.parquet(f"{path}/centroids").orderBy("list_id").collect()
-        )
-        c_mat = np.array([r["centroid"] for r in cent], dtype=np.float64)
-        lists = _assign_to_lists(batch, c_mat, id_col)
-        def _store_exists(sub: str) -> bool:
-            from ..sources.manifest import is_path_not_found
-
-            try:
-                spark.read.parquet(f"{path}/{sub}").schema
-                return True
-            except AnalysisException as e:
-                if not is_path_not_found(e):
-                    raise
-                return False
-
-        has_q8 = _store_exists("lists_q8")
-        has_pq = _store_exists("lists_pq")
-        if has_q8 or has_pq:
-            lists = lists.persist()  # extra writes, one assignment pass
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        old = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            stamped = lists.withColumn("batch_id", F.lit(int(batch_id)))
-            stamped.write.mode("overwrite").partitionBy(
-                "list_id", "batch_id"
-            ).parquet(f"{path}/lists")
-            if has_q8:
-                _quantize_lists_q8(lists, id_col).withColumn(
-                    "batch_id", F.lit(int(batch_id))
-                ).write.mode("overwrite").partitionBy(
-                    "list_id", "batch_id"
-                ).parquet(f"{path}/lists_q8")
-            if has_pq:
-                book_rows = (
-                    spark.read.parquet(f"{path}/pq_codebooks")
-                    .orderBy("sub_idx", "code")
-                    .collect()
-                )
-                pq_m = 1 + max(r["sub_idx"] for r in book_rows)
-                books = np.array(
-                    [r["centroid"] for r in book_rows], dtype=np.float64
-                ).reshape(pq_m, len(book_rows) // pq_m, -1)
-                _encode_pq_lists(lists, id_col, books, c_mat).withColumn(
-                    "batch_id", F.lit(int(batch_id))
-                ).write.mode("overwrite").partitionBy(
-                    "list_id", "batch_id"
-                ).parquet(f"{path}/lists_pq")
-        finally:
-            spark.conf.set(mode_key, old)
-            if has_q8 or has_pq:
-                lists.unpersist()
-
-    return process
 
 
 def ann_topk(

@@ -273,10 +273,9 @@ def _merc_y(lat, zoom: int):
 def fan_out_tiles(ways: DataFrame, zoom: int) -> DataFrame:
     """Steps 1-2 of the slippy pipeline: per-way mercator bbox → covered
     tile ranges → one (way_id, kind, geometry, tile_x, tile_y, tile_key)
-    row per covered tile. Shared by the batch renderer below and the
-    streaming incremental renderer (streaming/render.py) so the
-    affected-tile arithmetic can never diverge from the tiles the
-    renderer actually produces."""
+    row per covered tile. Shared by the raster renderer below and the
+    MVT encoder (raster/mvt.py) so the two products can never disagree
+    on which tiles a way covers."""
     n = 1 << zoom
     g = F.col("geometry")
     lon_min = F.array_min(F.transform(g, lambda p: p["lon"]))
@@ -484,33 +483,19 @@ def overlay_tiles(tiles: DataFrame, features: DataFrame) -> DataFrame:
 # image-table operators (training-data pipeline over the input_hint table)
 # ---------------------------------------------------------------------------
 
-def decode_features(images: DataFrame, on_error: str = "raise") -> DataFrame:
+def decode_features(images: DataFrame) -> DataFrame:
     """Decode the binary column, verify dims + phash, extract features —
     (image_id, w, h, fmt, phash_ok, dims_ok, mean_lum). The decode itself
     is the container-stubbed part only for real JPEG (codec docstring);
     plumbing (Arrow batches, schema, partitioning) is production-shaped.
-
-    ``on_error``: "raise" (batch default — a bad blob is a bug in a
-    controlled corpus) or "flag" — an undecodable blob yields a row
-    with dims_ok=False instead of failing the task. The streaming
-    ingest sink uses "flag": one poison blob from a crawl must not
-    crash-loop the query (replay hits the same blob forever)."""
-    if on_error not in ("raise", "flag"):
-        raise ValueError(f"on_error must be raise|flag, got {on_error!r}")
+    An undecodable blob fails the task: in a controlled corpus it is a
+    bug, never a row to drop."""
 
     def kernel(batches):
         for pdf in batches:
             recs = []
             for row in pdf.itertuples(index=False):
-                try:
-                    img = decode_image(row.bytes, row.fmt)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    recs.append(
-                        (row.image_id, 0, 0, row.fmt, None, False, None)
-                    )
-                    continue
+                img = decode_image(row.bytes, row.fmt)
                 recs.append(
                     (
                         row.image_id,

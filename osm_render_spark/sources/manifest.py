@@ -41,9 +41,9 @@ def write_dataset(
         .parquet(path)
     )
     # store the BASENAME, not input_file_name()'s absolute URI: the
-    # manifest must survive a directory rename (compaction's atomic
-    # swap writes into a tmp dir and renames it into place — absolute
-    # paths would strand every entry; relative ones make the table
+    # manifest must survive a directory rename (zorder's staged write
+    # lands in a tmp dir and renames it into place — absolute paths
+    # would strand every entry; relative ones make the table
     # relocatable). Files are flat under path by construction here.
     data = spark.read.parquet(path).withColumn(
         "_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
@@ -79,61 +79,3 @@ def read_pruned(
         )
     df = spark.read.parquet(*files)
     return df.where((F.col(cell_col) >= cell_lo) & (F.col(cell_col) <= cell_hi))
-
-
-def is_path_not_found(e) -> bool:
-    """Classify an AnalysisException as the missing-path condition —
-    the ONE probe used everywhere a table is optional (streaming dedup
-    side table, optional IVF quantized stores), so the error-class
-    dance (getCondition vs the deprecated getErrorClass) lives in one
-    place, next to the rest of the optional-file-tree machinery.
-    Anything else — permissions, corrupt footers, transient FS errors —
-    is NOT a missing table and must propagate."""
-    cond = (
-        e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
-    ) or ""
-    return cond == "PATH_NOT_FOUND"
-
-
-def read_optional_parquet(
-    spark: SparkSession, path: str, before_batch: int | None = None
-):
-    """Read a table that may not exist yet (first micro-batch of a
-    streaming sink): returns the DataFrame, or None iff the path is
-    absent — any OTHER failure (permissions, corrupt footer, transient
-    FS error) propagates, because silently treating it as "first batch"
-    would skip a dedup anti-join and emit duplicates. With
-    ``before_batch``, filters to ``batch_id < N`` (the replay-safety
-    convention: a half-written replayed batch must not suppress its own
-    rows)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.option("basePath", path).parquet(path)
-    except AnalysisException as e:
-        if not is_path_not_found(e):
-            raise
-        return None
-    if before_batch is not None:
-        df = df.where(F.col("batch_id") < F.lit(int(before_batch)))
-    return df
-
-
-class dynamic_partition_overwrite:
-    """Context manager scoping partitionOverwriteMode=dynamic — the
-    idempotent-replay write mode every batch_id-partitioned streaming
-    sink uses; restores the previous mode on exit."""
-
-    _KEY = "spark.sql.sources.partitionOverwriteMode"
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.old = self.spark.conf.get(self._KEY, "static")
-        self.spark.conf.set(self._KEY, "dynamic")
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set(self._KEY, self.old)
-        return False

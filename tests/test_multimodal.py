@@ -213,10 +213,3 @@ def test_avi_audio_strl_before_video_decodes():
     assert len(decoded) == 2
     for got, want in zip(decoded, frames):
         assert (got[:, :, :3] == want[:, :, :3]).all()
-
-
-def test_bloom_n_hashes_validated():
-    from osm_render_spark.streaming.dedup import streaming_dedup_bloom
-
-    with pytest.raises(ValueError, match=r"n_hashes"):
-        streaming_dedup_bloom(None, n_hashes=10)

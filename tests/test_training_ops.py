@@ -511,73 +511,6 @@ def test_ivf_quantized_probe_recall_and_bytes(spark, tmp_path):
     assert sum("list_id" in l and "IN" in l for l in pf_lines) >= 2, pf_lines
 
 
-def test_ivf_streaming_append_matches_rebuild_and_replays(spark, tmp_path):
-    """Streaming IVF maintenance: after N micro-batch appends, probing
-    the incrementally-maintained index equals probing an index REBUILT
-    from the full corpus (same centroids — 'head' quantizer over the
-    base corpus ids, which the appends can't change), the int8 probe
-    path sees appended vectors, and a replayed batch (crash recovery)
-    leaves every probe result unchanged."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from osm_render_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_append_foreach_batch,
-        query_ivf_index,
-        query_ivf_index_quantized,
-    )
-
-    rng = np.random.default_rng(31)
-    vecs = rng.normal(size=(260, 16)).astype(np.float32)
-
-    def df_of(lo, hi):
-        return spark.createDataFrame(
-            [(int(i), [float(v) for v in vecs[i]]) for i in range(lo, hi)],
-            "vec_id long, embedding array<float>",
-        )
-
-    base, b0, b1 = df_of(0, 200), df_of(200, 230), df_of(230, 260)
-    queries = df_of(0, 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    inc_path = str(tmp_path / "ivf_inc")
-    build_ivf_index(base, inc_path, n_centroids=8, quantizer="head", quantize=True)
-    fn = ivf_append_foreach_batch(inc_path)
-    fn(b0, 0)
-    fn(b1, 1)
-
-    # rebuilt-from-scratch twin: head centroids come from the 8 lowest
-    # ids, all inside `base`, so both indexes share the exact quantizer
-    full_path = str(tmp_path / "ivf_full")
-    build_ivf_index(
-        base.unionByName(b0).unionByName(b1),
-        full_path,
-        n_centroids=8,
-        quantizer="head",
-        quantize=True,
-    )
-
-    def probe(p, quant=False):
-        q = query_ivf_index_quantized if quant else query_ivf_index
-        return {
-            (r["query_id"], r["rank"]): (r["cand_id"], round(r["cos"], 12))
-            for r in q(spark, p, queries, 5, n_probe=3).collect()
-        }
-
-    assert probe(inc_path) == probe(full_path)
-    assert probe(inc_path, quant=True) == probe(full_path, quant=True)
-    # appended vectors are actually reachable (some result comes from b0/b1)
-    assert any(c >= 200 for c, _ in probe(inc_path).values())
-
-    fn(b1, 1)  # replay: dynamic overwrite of its own partitions only
-    assert probe(inc_path) == probe(full_path)
-    assert probe(inc_path, quant=True) == probe(full_path, quant=True)
-    # no duplicate rows post-replay
-    n = spark.read.parquet(f"{inc_path}/lists").count()
-    assert n == 260
-
-
 def test_q8_store_kernel_matches_hof_quantizer(spark):
     """The packed-binary index store must encode byte-identically to the
     oracle-checked Column-HOF quantizer (operators/quantize.py) — same
@@ -804,59 +737,6 @@ def test_ivf_pq_full_probe_big_pool_equals_brute_force(spark, tmp_path):
         for r in cosine_topk(df, queries, 5).collect()
     }
     assert got == want
-
-
-def test_ivf_pq_streaming_append_and_replay(spark, tmp_path):
-    """PQ store follows streaming appends: appended vectors become
-    probe candidates (codes encoded with the BUILD-time codebooks — the
-    fixed-quantizer maintenance contract), and a replayed batch leaves
-    probe results unchanged."""
-    from pyspark.sql import functions as F
-
-    from osm_render_spark.operators.similarity import (
-        build_ivf_index,
-        cosine_topk,
-        ivf_append_foreach_batch,
-        query_ivf_index_pq,
-    )
-
-    rng = np.random.default_rng(43)
-    vecs = rng.normal(size=(120, 32)).astype(np.float32)
-
-    def df_of(lo, hi):
-        return spark.createDataFrame(
-            [(int(i), [float(v) for v in vecs[i]]) for i in range(lo, hi)],
-            "vec_id long, embedding array<float>",
-        )
-
-    base, b0 = df_of(0, 90), df_of(90, 120)
-    queries = df_of(0, 2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    path = str(tmp_path / "ivf_pq_inc")
-    build_ivf_index(
-        base, path, n_centroids=4, quantizer="head", quantize="pq", pq_m=4, pq_ksub=64
-    )
-    fn = ivf_append_foreach_batch(path)
-    fn(b0, 0)
-    # full probe + corpus-sized pool -> exact == brute force over ALL
-    # 120 vectors, so appended ids necessarily participate
-    def probe():
-        return {
-            (r["query_id"], r["rank"]): r["cand_id"]
-            for r in query_ivf_index_pq(
-                spark, path, queries, 5, n_probe=4, rerank_factor=100
-            ).collect()
-        }
-
-    got = probe()
-    want = {
-        (r["query_id"], r["rank"]): r["cand_id"]
-        for r in cosine_topk(df_of(0, 120), queries, 5).collect()
-    }
-    assert got == want
-    fn(b0, 0)  # crash replay
-    assert probe() == got
 
 
 def test_ivf_build_both_stores_probe_identically(spark, tmp_path):

@@ -242,3 +242,39 @@ def test_failed_zorder_rewrite_preserves_existing_table(spark, tmp_path):
     from osm_render_spark.sources.manifest import pruned_files
 
     assert pruned_files(spark, path, 0, 1 << 32)  # manifest still resolves
+
+
+def test_zorder_overwrite_rolls_back_when_swap_fails(spark, tmp_path, monkeypatch):
+    """The staged rewrite swaps directories with two renames; when the
+    second (tmp → live) fails, the original must be renamed back, the
+    error must surface, and no staging debris may remain."""
+    import os
+
+    import pytest
+
+    path = str(tmp_path / "z")
+    zorder_write(_points(spark, 5_000), path, "x", "y", n_files=4)
+    lo, hi = 0, 1 << 32
+
+    def table():
+        return sorted(map(tuple, read_pruned(spark, path, "_zkey", lo, hi).collect()))
+
+    want = table()
+    real_rename = os.rename
+    calls = []
+
+    def flaky_rename(src, dst):
+        calls.append((src, dst))
+        if len(calls) == 2:
+            raise OSError("injected: second rename fails")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", flaky_rename)
+    with pytest.raises(OSError, match="injected"):
+        zorder_write(_points(spark, 3_000), path, "x", "y", n_files=4)
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    assert calls[1] == (f"{path}.zorder-tmp", path)
+    assert table() == want
+    leftovers = sorted(os.listdir(tmp_path))
+    assert leftovers == ["z"], leftovers
