@@ -1,4 +1,4 @@
-"""Color + hashing scalar functions (SURVEY.md §2.8 F3-F5, R12).
+"""Color + hashing scalar functions (SURVEY.md §2.8 F3-F5).
 
 All pure integer / binary arithmetic — expressible identically in Spark
 SQL and DuckDB, so each has a ``*_sql`` form for the oracle.
@@ -29,16 +29,6 @@ def hover_color(c1: Column, c2: Column) -> Column:
     return (F.shiftright(c1.cast("long"), 1).bitwiseAND(m)) + (
         F.shiftright(c2.cast("long"), 1).bitwiseAND(m)
     )
-
-
-def unpack_argb(c: Column) -> list[Column]:
-    """R12: packed uint32 ARGB -> (a, r, g, b) byte channels."""
-    return [
-        F.shiftright(c.cast("long"), 24).bitwiseAND(F.lit(0xFF)).alias("a"),
-        F.shiftright(c.cast("long"), 16).bitwiseAND(F.lit(0xFF)).alias("r"),
-        F.shiftright(c.cast("long"), 8).bitwiseAND(F.lit(0xFF)).alias("g"),
-        c.cast("long").bitwiseAND(F.lit(0xFF)).alias("b"),
-    ]
 
 
 def cache_key(*cols: Column) -> Column:

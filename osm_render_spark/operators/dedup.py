@@ -1,21 +1,21 @@
 """Deduplication operators for the training-data pipeline (task brief:
-exact, MinHash+LSH, SimHash, n-gram Jaccard).
+MinHash+LSH, SimHash, n-gram Jaccard; exact dedup is a plain GROUP BY
+text, the ``dedup_exact`` query).
 
 DataFrame-API forms for library use; the SQL-text forms used by the
 oracle-checked queries live in operators.text (one arithmetic definition,
 two dialects — the DataFrame ops here are built on the SAME Spark SQL
 texts via F.expr, so they share the definition).
 
-Scale notes (10^12 docs): exact dedup is one hash-agg shuffle on a
-fixed-width key (sha256 of text — never shuffle raw text). MinHash
-signatures are a narrow map (HOF transforms, JVM codegen). LSH banding
-shuffles once per band on (band, h...) — candidate pairs only surface
-within buckets, so the quadratic blowup is bounded by bucket size;
-lsh_candidate_pairs enforces the bucket-size cap (oversized buckets
-dropped before pair fan-out, with drop accounting), keeping the worst
-case linear. Signature width and banding are parameters
-(n_perms / n_bands / rows_per_band); the defaults reproduce the
-original 4-perm, 2×2 form byte-for-byte.
+Scale notes (10^12 docs): MinHash signatures are a narrow map (HOF
+transforms, JVM codegen). LSH banding shuffles once per band on
+(band, h...) — candidate pairs only surface within buckets, so the
+quadratic blowup is bounded by bucket size; lsh_candidate_pairs
+enforces the bucket-size cap (oversized buckets dropped before pair
+fan-out, with drop accounting), keeping the worst case linear.
+Signature width and banding are parameters (n_perms / n_bands /
+rows_per_band); the defaults reproduce the original 4-perm, 2×2 form
+byte-for-byte.
 """
 
 from __future__ import annotations
@@ -39,22 +39,6 @@ def minhash_params(n_perms: int) -> tuple[list[int], list[int]]:
         a.append(aj if aj != 0 else 1)
         b.append((69069 * j + 12345) % P)
     return a, b
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup via hash-groupBy: one row per distinct text with the
-    canonical (min) id and the duplicate count. The groupBy key is
-    sha2(text) so the shuffle carries 32 bytes, not documents."""
-    keyed = df.withColumn("_k", F.sha2(F.col(text_col), 256))
-    return (
-        keyed.groupBy("_k")
-        .agg(
-            F.min(id_col).alias("canonical_id"),
-            F.count("*").alias("n_copies"),
-        )
-        .drop("_k")
-        .select("canonical_id", "n_copies")
-    )
 
 
 def _word_keys_bytes(raw: bytes) -> "np.ndarray":
@@ -161,55 +145,9 @@ def minhash_signatures(
 
 
 def _band_cols(band: int, rows_per_band: int) -> list[str]:
-    """Signature columns belonging to one band (shared by lsh_buckets and
-    lsh_candidate_pairs so the banding layout has a single definition)."""
+    """Signature columns belonging to one band of lsh_candidate_pairs:
+    band b holds mh{b·rows_per_band} .. mh{(b+1)·rows_per_band − 1}."""
     return [f"mh{band * rows_per_band + r}" for r in range(rows_per_band)]
-
-
-def lsh_buckets(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    n_bands: int = 2,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """Band an n_bands × rows_per_band signature; emit non-trivial
-    buckets (n>1) — the candidate groups for near-dup verification.
-    Output keeps the historical 2×2 column shape (band, h1, h2, …) by
-    hashing each band's rows into two 64-bit halves when
-    rows_per_band > 2 (xxhash64 with distinct seeds via a salt column)."""
-    entries = []
-    for band in range(n_bands):
-        hs = _band_cols(band, rows_per_band)
-        if rows_per_band <= 2:
-            h1 = F.col(hs[0])
-            h2 = F.col(hs[1]) if len(hs) > 1 else F.lit(0).cast("long")
-        else:
-            h1 = F.xxhash64(F.lit(0), *[F.col(h) for h in hs])
-            h2 = F.xxhash64(F.lit(1), *[F.col(h) for h in hs])
-        entries.append(
-            F.struct(
-                F.lit(band).alias("band"), h1.alias("h1"), h2.alias("h2")
-            )
-        )
-    # one explode, not an n_bands-way union: a union re-evaluates the
-    # signature input once per band (see hamming_near_dups note)
-    allb = signatures.select(
-        F.col(id_col), F.explode(F.array(*entries)).alias("_e")
-    ).select(
-        F.col("_e.band").alias("band"),
-        F.col("_e.h1").alias("h1"),
-        F.col("_e.h2").alias("h2"),
-        F.col(id_col),
-    )
-    return (
-        allb.groupBy("band", "h1", "h2")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min(id_col).alias("min_doc"),
-            F.max(id_col).alias("max_doc"),
-        )
-        .where(F.col("n_docs") > 1)
-    )
 
 
 def lsh_candidate_pairs(

@@ -18,11 +18,6 @@ Physical strategy, in preference order:
   broadcast query side + rank window. Supports arbitrary metrics (the
   reference's clockwise gap) but ships every candidate row for a query
   to one reducer; use only when one side is genuinely dimension-sized.
-* **cell-pruned kNN** — at 100 TB neither side may be broadcastable;
-  candidates are pre-bucketed by spatial cell (functions.cells) and each
-  query only joins its own + neighboring cells, with an exactness
-  fallback pass for the rare queries whose k-th neighbor may lie outside
-  the 3×3 ring. Provided by ``knn_join_celled``.
 
 Determinism: ties broken by candidate id ascending (FIXTURES.md
 golden_knn convention) — the LOCAL prune is tie-aware (lexsort by
@@ -32,38 +27,26 @@ to the global rank, keeping kernel and oracle bit-identical.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def squared_l2(qlon: Column, qlat: Column, lon: Column, lat: Column) -> Column:
-    return (lon - qlon) * (lon - qlon) + (lat - qlat) * (lat - qlat)
 
 
 def _local_topk_scored(queries: DataFrame, candidates: DataFrame, k: int) -> DataFrame:
     """Map-side pruning stage: (query_id, cand_id, d2) with at most
     k × |queries| rows emitted PER ARROW BATCH — the numpy arithmetic is
-    dx*dx + dy*dy in float64, bit-identical to the squared_l2 Column
-    expression, so ranks match the SQL oracle exactly.
+    dx*dx + dy*dy in float64, bit-identical to the oracle's
+    ``(lon - qlon) * (lon - qlon) + (lat - qlat) * (lat - qlat)``, so
+    ranks match the SQL oracle exactly.
 
     NOTE: collects the query side on the DRIVER at plan-BUILD time (the
     kernel closure ships the query arrays) — callers lose laziness here,
     and the query side must be driver-sized (3 numbers per query; ~24 MB
     per million queries). The distance matrix is chunked over queries so
     kernel memory stays O(batch × chunk), not O(batch × |queries|)."""
-    q_rows = queries.select("query_id", "qlon", "qlat").collect()
-    return _local_topk_scored_rows(q_rows, candidates, k)
-
-
-def _local_topk_scored_rows(q_rows, candidates: DataFrame, k: int) -> DataFrame:
-    """_local_topk_scored over ALREADY-collected query rows — callers
-    that had to collect for other reasons (the celled fallback gate)
-    skip a pointless driver→JVM→driver round trip of the query set."""
     import numpy as np
     import pandas as pd
 
+    q_rows = queries.select("query_id", "qlon", "qlat").collect()
     q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
     q_lon = np.array([r["qlon"] for r in q_rows], dtype=np.float64)
     q_lat = np.array([r["qlat"] for r in q_rows], dtype=np.float64)
@@ -145,172 +128,3 @@ def _rank_scored(scored: DataFrame, k: int) -> DataFrame:
         .where(F.col("rank") <= k)
         .select("query_id", "cand_id", "rank", "d2")
     )
-
-
-def knn_join_celled(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int,
-    zoom: int = 7,
-    exact: bool = True,
-    fallback: str = "auto",
-    fallback_threshold: int = 1024,
-) -> DataFrame:
-    """Cell-pruned kNN for the large×large case: candidates bucketed by
-    tile cell; each query joins its own cell and the 8 neighbors (3×3
-    ring), then ranks.
-
-    Exactness: a query's ring-local result is provably correct when it
-    found ≥ k candidates AND its k-th distance is ≤ the distance from the
-    query point to the nearest ring boundary (any point outside the ring
-    is at least that far away). With ``exact=True`` (default) the queries
-    that fail this certificate — plus queries with no ring candidates at
-    all — get a second brute-force pass; at sane zooms that is a
-    vanishing fraction. Ring edges beyond the map boundary count as
-    infinitely far: out-of-range longitudes cannot hold candidates and
-    out-of-range latitudes CLAMP into the covered edge row.
-
-    ``fallback`` picks the brute-force form for the unsafe set:
-
-    * ``"expr"`` — crossJoin against the broadcast unsafe queries + rank
-      window. Fully LAZY (no driver action at build time) but every
-      candidate row for an unsafe query reaches one reducer — a
-      scale-killer if the unsafe set is large (zoom 0, heavy skew).
-    * ``"kernel"`` — the map-side-pruned kernel (``_local_topk_scored``):
-      Cartesian-free, window sees ≤ k·|unsafe| rows per batch, but
-      collects the unsafe query coordinates on the driver at build time
-      (3 numbers per query).
-    * ``"auto"`` (default) — size-gate: collects the unsafe coords ONCE
-      (one Spark action at plan-build time — the kernel form needs them
-      driver-side anyway, and a separate count would run the ring-join
-      subplan twice) and picks ``expr`` when ≤ ``fallback_threshold``
-      rows, else ``kernel``. Callers that need a fully lazy plan and
-      know their zoom keeps the unsafe set tiny should pass
-      ``fallback="expr"`` explicitly.
-    """
-    if fallback not in ("auto", "expr", "kernel"):
-        raise ValueError(f"fallback must be auto|expr|kernel, got {fallback!r}")
-    n = 1 << zoom
-    cand = candidates.withColumn(
-        "cx", F.expr(f"CAST({_tx('lon', zoom)} AS BIGINT)")
-    ).withColumn("cy", F.expr(f"CAST({_ty('lat', zoom)} AS BIGINT)"))
-    q = queries.withColumn(
-        "qcx", F.expr(f"CAST({_tx('qlon', zoom)} AS BIGINT)")
-    ).withColumn("qcy", F.expr(f"CAST({_ty('qlat', zoom)} AS BIGINT)"))
-    # fan each query out to its 3×3 cell ring, then equi-join on cell
-    ring = q.select(
-        "*",
-        F.explode(F.expr("sequence(-1, 1)")).alias("dx"),
-    ).select("*", F.explode(F.expr("sequence(-1, 1)")).alias("dy"))
-    ring = ring.withColumn("jx", F.col("qcx") + F.col("dx")).withColumn(
-        "jy", F.col("qcy") + F.col("dy")
-    )
-    joined = ring.join(
-        cand, (ring.jx == cand.cx) & (ring.jy == cand.cy), "inner"
-    ).withColumn(
-        "d2",
-        squared_l2(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("cand_id").asc())
-    ranked = (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "d2")
-    )
-    if not exact:
-        return ranked
-    if fallback != "expr":
-        # auto/kernel end in a build-time collect of the unsafe set, so
-        # without this the ring-join/window subplan would execute TWICE
-        # (once for the collect, once when the caller acts on the result).
-        # ranked is bounded at ≤ k rows per query (4 narrow columns) —
-        # checkpointing it lets the collect and the returned plan share
-        # one materialization. "expr" stays fully lazy, untouched.
-        ranked = ranked.localCheckpoint(eager=True)
-
-    # --- exactness certificate per query (degree-space safe radius) -------
-    # ring spans cells [qcx-1, qcx+2) × [qcy-1, qcy+2); its boundary in
-    # lon is exact (uniform 360/2^z), in lat via the inverse mercator of
-    # the tile rows. Directions past the map edge are infinitely safe.
-    lon_w = f"(CAST(qcx - 1 AS DOUBLE) * 360.0 / {n} - 180.0)"
-    lon_e = f"(CAST(qcx + 2 AS DOUBLE) * 360.0 / {n} - 180.0)"
-    lat_n_edge = _inv_merc_lat_sql("CAST(qcy - 1 AS DOUBLE)", zoom)
-    lat_s_edge = _inv_merc_lat_sql("CAST(qcy + 2 AS DOUBLE)", zoom)
-    r_safe = (
-        f"LEAST("
-        f"CASE WHEN qcx - 1 <= 0 THEN CAST('Infinity' AS DOUBLE) ELSE qlon - {lon_w} END, "
-        f"CASE WHEN qcx + 2 >= {n} THEN CAST('Infinity' AS DOUBLE) ELSE {lon_e} - qlon END, "
-        f"CASE WHEN qcy - 1 <= 0 THEN CAST('Infinity' AS DOUBLE) ELSE {lat_n_edge} - qlat END, "
-        f"CASE WHEN qcy + 2 >= {n} THEN CAST('Infinity' AS DOUBLE) ELSE qlat - {lat_s_edge} END"
-        f")"
-    )
-    # ranked feeds BOTH the certificate aggregate and the safe output;
-    # NOT persisted — a library function cannot unpersist after
-    # returning, and leaked cache across many calls is worse than the
-    # bounded recompute (the identical window subplan appears twice in
-    # ONE action, where Spark's ReusedExchange collapses the shuffle).
-    # Callers iterating many batches may persist/unpersist around calls.
-    cert = q.select("query_id", "qlon", "qlat", F.expr(r_safe).alias("r_safe"))
-    per_q = ranked.groupBy("query_id").agg(
-        F.count("*").alias("n_found"), F.max("d2").alias("d2k")
-    )
-    verdicts = cert.join(per_q, "query_id", "left")
-    # >= is load-bearing: at d2k EXACTLY r_safe², a boundary point that
-    # floors into an outside cell can tie the k-th ring candidate and win
-    # the cand_id tie-break — strict > would certify a wrong result
-    unsafe = verdicts.where(
-        F.col("n_found").isNull()
-        | (F.col("n_found") < k)
-        | (F.col("d2k") >= F.col("r_safe") * F.col("r_safe"))
-    ).select("query_id", "qlon", "qlat")
-    safe_ids = verdicts.join(unsafe, "query_id", "left_anti").select("query_id")
-    exact_part = ranked.join(safe_ids, "query_id", "left_semi")
-    if fallback == "expr":
-        # expression form: fully lazy, fine while the unsafe set is tiny
-        fb = knn_join(
-            unsafe,
-            candidates,
-            k,
-            dist=squared_l2(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")),
-        )
-        return exact_part.unionByName(fb)
-    # auto/kernel: collect the unsafe coords ONCE (3 numbers per query —
-    # the kernel form needs them driver-side anyway) and gate on the
-    # local count; a separate count() + kernel-collect would execute the
-    # expensive ring-join/certificate subplan twice at build time
-    unsafe_rows = unsafe.collect()
-    if fallback == "kernel" or len(unsafe_rows) > fallback_threshold:
-        # size-gated pruned-kernel form (docstring): Cartesian-free plan,
-        # bounded window input; the collected rows feed the kernel
-        # closure directly — no driver→JVM→driver round trip
-        fb = _rank_scored(_local_topk_scored_rows(unsafe_rows, candidates, k), k)
-    else:
-        unsafe_local = unsafe.sparkSession.createDataFrame(
-            unsafe_rows, "query_id long, qlon double, qlat double"
-        )
-        fb = knn_join(
-            unsafe_local,
-            candidates,
-            k,
-            dist=squared_l2(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")),
-        )
-    return exact_part.unionByName(fb)
-
-
-def _inv_merc_lat_sql(y_tiles: str, zoom: int) -> str:
-    """Latitude of a mercator tile-row boundary: the inverse of
-    functions.projection.merc_y_sql."""
-    n = 1 << zoom
-    return f"DEGREES(ATAN(SINH({math.pi!r} * (1.0 - 2.0 * ({y_tiles}) / {n}))))"
-
-
-def _tx(lon: str, zoom: int) -> str:
-    from ..functions.projection import tile_x_sql
-
-    return tile_x_sql(lon, zoom)
-
-
-def _ty(lat: str, zoom: int) -> str:
-    from ..functions.projection import tile_y_sql
-
-    return tile_y_sql(lat, zoom)

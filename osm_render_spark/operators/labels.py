@@ -98,7 +98,7 @@ def place_labels(
         .drop("_rn")
     )
 
-    def kernel(_key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["priority", "label_id"], kind="mergesort")
         acc = greedy_mask(
             pdf["x"].to_numpy(np.int64),

@@ -8,7 +8,7 @@ operators/coast_merge.py J7) and generalized kNN (operators/knn.py) —
 this is the point→SEGMENT variant: distance to a line segment with
 endpoint clamping, not to a vertex.
 
-100 TB shape (the knn.py celled discipline, but both sides big):
+100 TB shape (a spatial-cell equi-join, since both sides are big):
 - segments explode to the grid cells their max_dist-expanded bbox
   overlaps (a short segment lands in 1–4 cells);
 - each point keys to exactly ONE cell, so the cell equi-join yields

@@ -16,17 +16,13 @@ implicitly via Cairo's even-odd fill of an A8 mask (OsmRender.m:645-657,
    (points × edges) slabs.
 
 Scale: points ~10^12 stream through one broadcast hash join + one
-codegen-adjacent Arrow kernel — no shuffle (``pip_join``). For polygon
-sets beyond broadcast size, ``pip_join_large`` partitions both sides by
-cell for the prefilter and cogroups candidates with polygon vertices on
-area_id for the refinement — two shuffles, each linear, vertex payloads
-shipped once per polygon rather than once per candidate row.
+codegen-adjacent Arrow kernel — no shuffle (``pip_join``). The polygon
+side is collected on the driver, so it must be dimension-sized.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -76,25 +72,6 @@ POLY_SCHEMA = T.StructType(
 )
 
 
-def polygon_cover_df(polygons: DataFrame, zoom: int) -> DataFrame:
-    """(area_id, xs, ys) -> exploded (area_id, cell) cover table.
-
-    Cover computation is per-polygon numpy (polygon_cover) inside an
-    Arrow-batched grouped iterator — no per-row Python.
-    """
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for area_id, xs, ys in zip(pdf["area_id"], pdf["xs"], pdf["ys"]):
-                pts = np.column_stack([np.asarray(xs), np.asarray(ys)])
-                for cell in polygon_cover(pts, zoom):
-                    rows.append((area_id, int(cell)))
-            yield pd.DataFrame(rows, columns=["area_id", "cell"])
-
-    return polygons.mapInPandas(gen, schema="area_id long, cell long")
-
-
 def pip_join(
     points: DataFrame,
     polygons: DataFrame,
@@ -104,9 +81,8 @@ def pip_join(
     """points(point_id, lon, lat) ⨝ polygons(area_id, xs, ys) →
     (point_id, area_id) for every point strictly inside (even-odd).
 
-    ``polygons`` is dimension-sized by contract (use
-    :func:`pip_join_large` otherwise), so it is collected once: the
-    cell cover is computed driver-side (no extra Spark job + broadcast
+    ``polygons`` is dimension-sized by contract, so it is collected once:
+    the cell cover is computed driver-side (no extra Spark job + broadcast
     for the cover build) and the vertex arrays ride to the refine
     kernel in its closure instead of being join-duplicated onto every
     candidate row and re-shipped through Arrow (guide §4.1: pass only
@@ -149,48 +125,3 @@ def pip_join(
                 yield out
 
     return cand.mapInPandas(refine, schema=f"{point_id} long, area_id long")
-
-
-def pip_join_large(
-    points: DataFrame,
-    polygons: DataFrame,
-    zoom: int = 9,
-    point_id: str = "point_id",
-) -> DataFrame:
-    """Large×large PIP: neither side broadcastable (10^9 polygons ×
-    10^12 points). Same semantics as pip_join, different physical plan:
-
-    1. prefilter = shuffle equi-join points.cell == cover.cell — both
-       sides partition by cell, candidates carry (point_id, lon, lat,
-       area_id) ONLY (no vertex payload on the wide side)
-    2. refinement = cogroup candidates with polygons on area_id — the
-       vertex arrays ship once per polygon per partition, the ray cast
-       runs per group with the same vectorized kernel
-
-    Skew: a polygon whose bbox blankets a dense point region makes one
-    big cogroup; the kernel is O(candidates × edges) streamed in slabs
-    (raycast_even_odd chunks at 8M cells), and candidates are bounded by
-    the polygon's cover-cell population — the same bound the reference's
-    per-pixel fill pays. Salt area_id if a single polygon's candidates
-    exceed a partition's memory.
-    """
-    cover = polygon_cover_df(polygons, zoom)
-    pts = points.withColumn("cell", F.expr(tile_key_sql("lon", "lat", zoom)))
-    cand = pts.join(cover, "cell").select(point_id, "lon", "lat", "area_id")
-
-    def refine(key, cand_pdf: pd.DataFrame, poly_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cand_pdf) == 0 or len(poly_pdf) == 0:
-            return pd.DataFrame({point_id: pd.Series(dtype="int64"),
-                                 "area_id": pd.Series(dtype="int64")})
-        xs = np.asarray(poly_pdf["xs"].iloc[0])
-        ys = np.asarray(poly_pdf["ys"].iloc[0])
-        inside = raycast_even_odd(
-            cand_pdf["lon"].to_numpy(), cand_pdf["lat"].to_numpy(), xs, ys
-        )
-        return cand_pdf.loc[inside, [point_id, "area_id"]]
-
-    return (
-        cand.groupBy("area_id")
-        .cogroup(polygons.groupBy("area_id"))
-        .applyInPandas(refine, schema=f"{point_id} long, area_id long")
-    )

@@ -215,19 +215,3 @@ def repetition_metrics(
                <= F.col("n_chars") * t["dup5_char_frac"][1])
         ).cast("int"),
     )
-
-
-def gopher_filter(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    line_sep: str = "\n",
-) -> DataFrame:
-    """Keep only documents passing the Gopher repetition gates — the
-    corpus-filter form for pipeline use (returns the original columns)."""
-    keep = (
-        repetition_metrics(docs, text_col, id_col, line_sep)
-        .where(F.col("gopher_pass") == 1)
-        .select(F.col("doc_id").alias("_keep_id"))
-    )
-    return docs.join(keep, docs[id_col] == keep["_keep_id"], "left_semi")

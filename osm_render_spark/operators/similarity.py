@@ -1,15 +1,16 @@
 """Similarity search over embedding columns (array<float>).
 
-* brute-force top-k (cosine / L2) — baseline: broadcast the query set,
-  score with JVM higher-order functions (zip_with + aggregate — no UDF),
-  rank with a window. Exact.
-* LSH-bucketed ANN — scale path: deterministic random-hyperplane sign
-  buckets; candidates only join within a bucket (plus optionally
-  neighboring buckets by Hamming-1 probing). Approximate, linear shuffle.
+* brute-force top-k (``cosine_topk``) — exact: the query set ships in
+  an Arrow kernel closure, each candidate batch scores with one numpy
+  matmul and prunes to a local top-k, then a window ranks.
+* LSH buckets — deterministic random-hyperplane sign buckets computed
+  as JVM expressions (``ann_lsh_buckets``, ``banded_lsh_buckets``);
+  ``cosine_near_dups`` compares vectors only within a bucket.
+  Approximate, linear shuffle.
 
 At 10^12 rows the brute-force side streams once past the broadcast
 queries (no shuffle of the big table; the rank window shuffles only
-n_queries × n_candidates_per_bucket rows).
+k × n_queries rows per batch).
 """
 
 from __future__ import annotations
@@ -66,17 +67,6 @@ def band_primes(band: int) -> tuple[int, ...]:
         p += 2
     start = (band - len(BAND_PRIMES)) * N_PLANES
     return tuple(out[start : start + N_PLANES])
-
-
-def _dot(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-def _norm2(a: str) -> str:
-    return _dot(a, a)
 
 
 def cosine_topk(
@@ -232,7 +222,7 @@ def cosine_near_dups(
         F.broadcast(dropped.select("band", "bucket")), ["band", "bucket"], "left_anti"
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame(
                 {"a": pd.Series(dtype="int64"), "b": pd.Series(dtype="int64"),
@@ -334,7 +324,7 @@ def semantic_dedup(
         F.broadcast(over_cap.select("list_id")), "list_id", "left_anti"
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         lid = int(key[0])
         pdf = pdf.sort_values(id_col, kind="mergesort")
         ids = pdf[id_col].to_numpy()
@@ -1029,47 +1019,6 @@ def query_ivf_index_quantized(
         .join(F.broadcast(q_emb), "query_id")
     )
     return _score_and_rank(rejoined, k, id_col)
-
-
-def ann_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    multiprobe: int = 0,
-) -> DataFrame:
-    """ANN: score only candidates sharing the query's bucket, then exact
-    cosine rank within the bucket. ``multiprobe=1`` additionally probes
-    every bucket at Hamming distance 1 from the query's (each sign bit
-    flipped once): the query side fans out ×(1+n_planes) — still
-    broadcast-sized — while the CORPUS side is untouched, so recall rises
-    (a near-neighbor differs in at most a few plane signs) at probe
-    cost, never at shuffle cost."""
-    cand = ann_lsh_buckets(embeddings, id_col)
-    q = ann_lsh_buckets(
-        queries.withColumnRenamed("q_embedding", "embedding"), "query_id"
-    ).withColumnRenamed("embedding", "q_embedding")
-    if multiprobe >= 1:
-        flips = F.array(
-            F.lit(0), *[F.lit(1 << j) for j in range(N_PLANES)]
-        )
-        q = q.withColumn("_flip", F.explode(flips)).withColumn(
-            "bucket", F.expr("CAST(bucket AS BIGINT) ^ _flip")
-        ).drop("_flip")
-    joined = cand.join(F.broadcast(q), "bucket")
-    scored = joined.withColumn(
-        "cos",
-        F.expr(
-            f"{_dot('embedding', 'q_embedding')} / "
-            f"(SQRT({_norm2('embedding')}) * SQRT({_norm2('q_embedding')}))"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("cand_id"), "rank", "cos")
-    )
 
 
 def retrieval_recall_at_k(

@@ -1,12 +1,12 @@
-"""RIFF container codecs — REAL decode paths for the multimodal columns
-(SURVEY task brief: audio/video as opaque binary + typed metadata).
+"""RIFF container codec — the REAL decode path for the audio column
+(SURVEY task brief: audio as opaque binary + typed metadata).
 
-The sandbox has no compressed-codec libraries (mp3/aac/h264 stay behind
-clear NotImplementedErrors in raster/ops.py), but the RIFF family needs
-none: WAV PCM audio and uncompressed (BI_RGB) AVI video are plain
-headers + raw samples, fully decodable with stdlib struct + numpy. These
-are published formats (Microsoft/IBM RIFF, 1991); both a reader and a
-writer live here so tests round-trip real files end to end.
+The engine carries no compressed-codec library (mp3/aac stay behind
+clear NotImplementedErrors in raster/ops.py), but WAV PCM needs none: it
+is a plain header + raw samples, fully decodable with stdlib struct +
+numpy.
+It is a published format (Microsoft/IBM RIFF, 1991); both a reader and
+a writer live here so tests round-trip real files end to end.
 
 All multi-byte fields are little-endian (RIFF convention).
 """
@@ -79,231 +79,3 @@ def encode_wav(pcm: np.ndarray, rate: int) -> bytes:
         b"data", len(data),
     )
     return hdr + data
-
-
-# ---------------------------------------------------------------------------
-# AVI (RIFF/'AVI ', uncompressed BI_RGB video stream)
-# ---------------------------------------------------------------------------
-
-
-def decode_avi_frames(data: bytes) -> list[np.ndarray]:
-    """Uncompressed AVI bytes → list of (h, w, 4) RGBA uint8 frames.
-
-    Walks hdrl for the BITMAPINFOHEADER (width/height/bit depth), then
-    the movi list for '..db'/'..dc' frame chunks. Only BI_RGB
-    (biCompression == 0) at 24/32 bpp decodes — compressed fourccs raise
-    NotImplementedError naming the codec. DIB rows are BGR(A), 4-byte
-    aligned, bottom-up by default or top-down when biHeight is negative
-    (both legal, both handled); output is always top-down RGBA."""
-    buf = memoryview(data)
-    if bytes(buf[:4]) != b"RIFF" or bytes(buf[8:12]) != b"AVI ":
-        raise ValueError("not a RIFF/AVI file")
-    w = h = bits = None
-    compression = None
-    top_down = False  # DIB rows are bottom-up unless biHeight < 0
-    last_strh_type = b""  # fccType of the most recent strh chunk
-    frames_raw: list[memoryview] = []
-
-    # offset-carrying walker (LISTs recurse past their 4-byte list type)
-    def walk2(pos: int, end: int) -> None:
-        nonlocal w, h, bits, compression, top_down, last_strh_type
-        while pos + 8 <= end:
-            fourcc = bytes(buf[pos : pos + 4])
-            (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-            body_start, body_end = pos + 8, pos + 8 + size
-            if fourcc in (b"LIST", b"RIFF"):
-                walk2(body_start + 4, body_end)  # skip the 4-byte list type
-            elif fourcc == b"strh" and size >= 4:
-                last_strh_type = bytes(buf[body_start : body_start + 4])
-            elif fourcc == b"strf" and size >= 20 and bits is None:
-                # strf's shape depends on the stream it describes: only
-                # the one following a 'vids' strh is a BITMAPINFOHEADER.
-                # An audio strl can legally precede the video strl — its
-                # strf is WAVEFORMATEX bytes and must be skipped, not
-                # parsed as garbage width/height/bpp.
-                if last_strh_type != b"vids":
-                    pos = body_end + (size & 1)
-                    continue
-                _sz, bw, bh, _planes, bc, comp = struct.unpack(
-                    "<IiiHHI", buf[body_start : body_start + 20]
-                )
-                w, h, bits, compression = bw, abs(bh), bc, comp
-                top_down = bh < 0
-            elif fourcc[2:] in (b"db", b"dc") and size > 0:
-                frames_raw.append(buf[body_start:body_end])
-            pos = body_end + (size & 1)
-
-    walk2(12, len(buf))
-    if w is None or not frames_raw:
-        raise ValueError("AVI missing strf header or frame chunks")
-    if compression != 0:
-        fourcc_c = struct.pack("<I", compression)
-        if fourcc_c in (b"MJPG", b"mjpg", b"dmb1"):
-            # Motion-JPEG: every frame chunk is an independent baseline
-            # JPEG (raster/jpeg.py). Frames conventionally OMIT Huffman
-            # tables — the decoder installs the Annex K standard set.
-            from .jpeg import decode_jpeg
-
-            out = []
-            for raw in frames_raw:
-                rgb = decode_jpeg(bytes(raw))
-                fh, fw = rgb.shape[:2]
-                rgba = np.empty((fh, fw, 4), dtype=np.uint8)
-                if rgb.shape[2] == 1:
-                    rgba[:, :, 0] = rgba[:, :, 1] = rgba[:, :, 2] = rgb[:, :, 0]
-                else:
-                    rgba[:, :, :3] = rgb
-                rgba[:, :, 3] = 255
-                out.append(rgba)
-            return out
-        name = fourcc_c.decode("ascii", "replace")
-        raise NotImplementedError(
-            f"AVI stream is compressed (fourcc {name!r}); decoding it needs "
-            "a codec this engine lacks — BI_RGB and MJPG decode"
-        )
-    if bits not in (24, 32):
-        raise NotImplementedError(f"{bits}-bpp DIB not supported (24/32 only)")
-    bpp = bits // 8
-    stride = (w * bpp + 3) & ~3  # DIB rows pad to 4 bytes
-    out = []
-    for raw in frames_raw:
-        rows = np.frombuffer(raw, dtype=np.uint8, count=stride * h).reshape(
-            h, stride
-        )[:, : w * bpp]
-        img = rows.reshape(h, w, bpp)
-        if not top_down:
-            img = img[::-1]  # bottom-up → top-down
-        rgba = np.empty((h, w, 4), dtype=np.uint8)
-        rgba[:, :, 0] = img[:, :, 2]  # BGR → RGB
-        rgba[:, :, 1] = img[:, :, 1]
-        rgba[:, :, 2] = img[:, :, 0]
-        rgba[:, :, 3] = img[:, :, 3] if bpp == 4 else 255
-        out.append(rgba)
-    return out
-
-
-def _strip_dht(jpeg: bytes) -> bytes:
-    """Remove DHT segments from a JPEG — the MJPEG convention (frames
-    imply the Annex K standard tables). Exercises the decoder's
-    omitted-DHT fallback, which is what real MJPG files need."""
-    out = bytearray(jpeg[:2])
-    pos = 2
-    while pos < len(jpeg):
-        marker = jpeg[pos + 1]
-        if marker == 0xD9 or marker == 0xDA:
-            out += jpeg[pos:]
-            break
-        (seg_len,) = struct.unpack(">H", jpeg[pos + 2 : pos + 4])
-        if marker != 0xC4:
-            out += jpeg[pos : pos + 2 + seg_len]
-        pos += 2 + seg_len
-    return bytes(out)
-
-
-def encode_avi(
-    frames: list[np.ndarray],
-    fps: int = 10,
-    top_down: bool = False,
-    codec: str = "rgb",
-    quality: int = 85,
-) -> bytes:
-    """(h, w, 4) RGBA frames → minimal spec-valid AVI. ``codec="rgb"``
-    (default): uncompressed BI_RGB 24-bpp '00db' chunks (alpha dropped);
-    ``top_down=True`` writes negative-biHeight top-down rows (the other
-    legal DIB row order) — used to pin the reader's handling of both
-    variants. ``codec="mjpg"``: each frame is an independent baseline
-    JPEG '00dc' chunk (raster/jpeg.py, 4:2:0 at ``quality``) with DHT
-    segments STRIPPED per the MJPEG convention."""
-    if not frames:
-        raise ValueError("no frames")
-    if codec not in ("rgb", "mjpg"):
-        raise ValueError(f"codec must be rgb or mjpg, got {codec!r}")
-    if codec == "mjpg":
-        return _encode_avi_mjpg(frames, fps, quality)
-    h, w = frames[0].shape[:2]
-    bpp = 3
-    stride = (w * bpp + 3) & ~3
-    frame_bytes = []
-    for f in frames:
-        bgr = np.zeros((h, stride), dtype=np.uint8)
-        flipped = f if top_down else f[::-1]  # top-down → bottom-up
-        row = np.empty((h, w, 3), dtype=np.uint8)
-        row[:, :, 0] = flipped[:, :, 2]
-        row[:, :, 1] = flipped[:, :, 1]
-        row[:, :, 2] = flipped[:, :, 0]
-        bgr[:, : w * 3] = row.reshape(h, w * 3)
-        frame_bytes.append(bgr.tobytes())
-
-    def chunk(fourcc: bytes, payload: bytes) -> bytes:
-        return fourcc + struct.pack("<I", len(payload)) + payload + (
-            b"\x00" if len(payload) & 1 else b""
-        )
-
-    def lst(ltype: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", ltype + payload)
-
-    frame_sz = stride * h
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1_000_000 // fps, frame_sz * fps, 0, 0x10, len(frames), 0, 1,
-        frame_sz, w, h, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", struct.pack("<I", 0), 0, 0, 0, 0, 1, fps, 0, len(frames),
-        frame_sz, 0xFFFFFFFF & -1, 0, 0, 0, int(w), int(h),
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, w, -h if top_down else h, 1, 24, 0, frame_sz, 0, 0, 0, 0
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00db", fb) for fb in frame_bytes))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _encode_avi_mjpg(frames: list[np.ndarray], fps: int, quality: int) -> bytes:
-    from .jpeg import encode_jpeg
-
-    h, w = frames[0].shape[:2]
-    frame_bytes = [
-        _strip_dht(encode_jpeg(f[:, :, :3], quality=quality, subsampling="420"))
-        for f in frames
-    ]
-
-    def chunk(fourcc: bytes, payload: bytes) -> bytes:
-        return fourcc + struct.pack("<I", len(payload)) + payload + (
-            b"\x00" if len(payload) & 1 else b""
-        )
-
-    def lst(ltype: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", ltype + payload)
-
-    max_sz = max(len(fb) for fb in frame_bytes)
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1_000_000 // fps, max_sz * fps, 0, 0x10, len(frames), 0, 1,
-        max_sz, w, h, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"MJPG", 0, 0, 0, 0, 1, fps, 0, len(frames),
-        max_sz, 0xFFFFFFFF & -1, 0, 0, 0, int(w), int(h),
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII",
-        40, w, h, 1, 24, struct.unpack("<I", b"MJPG")[0],
-        max_sz, 0, 0, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", fb) for fb in frame_bytes))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body

@@ -17,9 +17,9 @@ sampling factors
 1..2 (4:4:4, 4:2:2, 4:2:0, 4:4:0), 8- and 16-bit quantization tables,
 restart markers, and the MJPEG convention of OMITTED Huffman tables
 (the Annex K standard tables are installed when a baseline scan starts
-with none defined — this is what makes MJPG-in-AVI frames decodable,
-raster/containers.py). Lossless, hierarchical, arithmetic-coded and
-12-bit frames raise NotImplementedError naming the feature. Both entry
+with none defined — real Motion-JPEG frames need this). Lossless,
+hierarchical, arithmetic-coded and 12-bit frames raise
+NotImplementedError naming the feature. Both entry
 paths share one reconstruction tail (_reconstruct: dequant → IDCT →
 upsample → color), so a fully-refined progressive stream decodes
 BIT-EXACTLY equal to the baseline encoding of the same coefficients —

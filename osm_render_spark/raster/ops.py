@@ -523,39 +523,6 @@ def decode_features(images: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Deterministic resize (training-pipeline thumbnailing): block means
-    when downscaling, nearest-neighbor when an axis upscales (block
-    boundaries degenerate to zero-width there — reduceat would divide by
-    zero)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.bytes, row.fmt).astype(np.float64)
-                h, w = img.shape[:2]
-                if out_h <= h and out_w <= w:
-                    ys = (np.arange(out_h + 1) * h) // out_h
-                    xs = (np.arange(out_w + 1) * w) // out_w
-                    # block means via reduceat (no python pixel loop)
-                    sums = np.add.reduceat(
-                        np.add.reduceat(img, ys[:-1], axis=0), xs[:-1], axis=1
-                    )
-                    counts = np.outer(np.diff(ys), np.diff(xs))[:, :, None]
-                    thumb = np.floor(sums / counts + 0.5).astype(np.uint8)
-                else:
-                    yi = (np.arange(out_h) * h) // out_h
-                    xi = (np.arange(out_w) * w) // out_w
-                    thumb = img[yi][:, xi].astype(np.uint8)
-                recs.append((row.image_id, encode_png(thumb), out_w, out_h))
-            yield pd.DataFrame(recs, columns=["image_id", "bytes", "w", "h"])
-
-    return images.mapInPandas(
-        kernel, schema="image_id string, bytes binary, w int, h int"
-    )
-
-
 def fake_audio_bytes(audio_id: int, n_samples: int = 8000, rate: int = 8000) -> bytes:
     """Deterministic stand-in for an encoded audio blob: int16 PCM of a
     few id-derived sinusoids, zlib-wrapped. (No audio codec in this
@@ -622,58 +589,3 @@ def audio_features(audios: DataFrame, frame: int = 400) -> DataFrame:
             "zcr double"
         ),
     )
-
-
-def sample_video_frames(videos: DataFrame, every_n: int) -> DataFrame:
-    """Frame sampling over opaque video blobs. REAL decode for
-    uncompressed AVI (RIFF BI_RGB) and Motion-JPEG AVI (each frame an
-    independent baseline JPEG — raster/jpeg.py, including the
-    omitted-DHT convention), plus the deterministic fake_video_bytes
-    fixture format; other compressed streams (h264/xvid/...) raise
-    NotImplementedError naming the fourcc."""
-
-    def kernel(batches):
-        from .containers import decode_avi_frames
-
-        for pdf in batches:
-            recs = []
-            for row in pdf.itertuples(index=False):
-                data = bytes(row.bytes)
-                if data[:4] == b"RIFF":
-                    frames = decode_avi_frames(data)
-                else:
-                    frames = _decode_fake_video(data)
-                for k in range(0, len(frames), every_n):
-                    recs.append((row.video_id, k, encode_png(frames[k])))
-            yield pd.DataFrame(recs, columns=["video_id", "frame_idx", "png"])
-
-    return videos.mapInPandas(kernel, schema="video_id string, frame_idx int, png binary")
-
-
-def fake_video_bytes(video_id: int, n_frames: int, w: int = 32, h: int = 32) -> bytes:
-    """Deterministic stand-in for an encoded video blob."""
-    import struct
-    import zlib
-
-    frames = []
-    for k in range(n_frames):
-        f = new_surface(w, h, ((video_id * 31 + k * 7) % 256, (k * 11) % 256, 99, 255))
-        frames.append(f)
-    raw = b"".join(f.tobytes() for f in frames)
-    return b"FVID" + struct.pack(">IIHH", video_id, n_frames, w, h) + zlib.compress(raw)
-
-
-def _decode_fake_video(data: bytes) -> list[np.ndarray]:
-    import struct
-    import zlib
-
-    if data[:4] != b"FVID":
-        raise NotImplementedError(
-            "compressed video decode requires a codec library not present "
-            "in this container; uncompressed AVI (RIFF) and "
-            "fake_video_bytes blobs are supported"
-        )
-    _vid, n, w, h = struct.unpack(">IIHH", data[4:16])
-    raw = zlib.decompress(data[16:])
-    arr = np.frombuffer(raw, dtype=np.uint8).reshape(n, h, w, 4)
-    return [arr[i] for i in range(n)]

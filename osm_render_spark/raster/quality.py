@@ -113,20 +113,3 @@ def quality_keep(
     if reject_uniform_border:
         keep = keep & (F.col("border_uniform") == 0)
     return keep
-
-
-def filter_images_by_quality(
-    images: DataFrame,
-    min_sharpness: float = 5.0,
-    min_entropy: float = 1.0,
-    max_extreme: float = 0.9,
-) -> DataFrame:
-    """Filter stage: images joined to their metrics, kept rows only.
-    The metrics scan and the predicate are one job; the semi-join back
-    to the full rows broadcasts nothing — it re-keys on image_id, the
-    table's natural partitioning."""
-    metrics = image_quality(images)
-    kept = metrics.filter(
-        quality_keep(min_sharpness, min_entropy, max_extreme)
-    ).select("image_id")
-    return images.join(kept, "image_id", "left_semi")

@@ -573,70 +573,6 @@ def contour_tiles(
     ).select(*out_cols)
 
 
-def contour_mvt_tiles(
-    segments: DataFrame, tile_px: int, *, extent: int = 4096
-) -> DataFrame:
-    """Contour segments (contour_tiles mode='segments') → one MVT blob
-    per tile: a 'contours' layer of 2-point linestring features tagged
-    with their threshold.  Tile-local integer coords quantize the ppm
-    endpoints to the MVT extent with the engine-wide floor(x+0.5)
-    (exact integer arithmetic: (v − origin·10⁶)·extent then one DIV).
-    One exchange (the per-tile group)."""
-    import pyspark.sql.functions as F
-
-    from .mvt import encode_mvt
-    from .ops import buffered_group_map
-
-    M = 1_000_000
-
-    def q_expr(col: str, origin: str) -> str:
-        # floor(x+0.5) on the rational v·extent/(tile_px·10⁶):
-        # floor(a/b + 1/2) = (2a + b) DIV (2b) for b > 0
-        return (
-            f"(2 * ({col} - {origin} * {M}) * {extent}"
-            f" + {tile_px} * {M}) DIV (2 * {tile_px} * {M})"
-        )
-
-    local = segments.selectExpr(
-        "tx",
-        "ty",
-        "thr",
-        q_expr("x1_ppm", "tx") + " AS qx1",
-        q_expr("y1_ppm", "ty") + " AS qy1",
-        q_expr("x2_ppm", "tx") + " AS qx2",
-        q_expr("y2_ppm", "ty") + " AS qy2",
-    ).withColumn("gkey", F.expr("concat(tx, ':', ty)"))
-
-    def render_group(g: pd.DataFrame):
-        feats = [
-            {
-                "id": i + 1,
-                "kind": "line",
-                "xs": [int(r.qx1), int(r.qx2)],
-                "ys": [int(r.qy1), int(r.qy2)],
-                "tags": {"thr": int(r.thr)},
-            }
-            for i, r in enumerate(
-                g.sort_values(
-                    ["thr", "qx1", "qy1", "qx2", "qy2"], kind="mergesort"
-                ).itertuples()
-            )
-        ]
-        r0 = g.iloc[0]
-        return (
-            int(r0["tx"]), int(r0["ty"]), len(feats),
-            encode_mvt({"contours": feats}, extent=extent),
-        )
-
-    return buffered_group_map(
-        local,
-        "gkey",
-        render_group,
-        ["tile_x", "tile_y", "n_features", "mvt"],
-        "tile_x long, tile_y long, n_features long, mvt binary",
-    )
-
-
 def dem_to_tiles(dem: np.ndarray, tile_px: int) -> list[tuple[int, int, bytes]]:
     """Split a full DEM (h,w multiples of tile_px) into operator rows —
     driver-side fixture helper; the distributed source is

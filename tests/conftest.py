@@ -7,5 +7,7 @@ from osm_render_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("osm_render_spark_tests", cpus=8, shuffle_partitions=8)
+    # sized to the host (SPARK_GRAFT_CPUS or the CPU affinity set): one
+    # task wave per Arrow stage
+    s = get_spark("osm_render_spark_tests")
     yield s

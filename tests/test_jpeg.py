@@ -1,7 +1,7 @@
 """Baseline JPEG codec (osm_render_spark/raster/jpeg.py): roundtrip
 quality, spec-feature coverage (subsampling, restarts, grayscale,
-16-bit DQT, MJPEG omitted-DHT), loud rejection of unsupported profiles,
-and the MJPG-in-AVI end-to-end path through sample_video_frames."""
+16-bit DQT, MJPEG omitted-DHT) and loud rejection of unsupported
+profiles."""
 
 from __future__ import annotations
 
@@ -353,59 +353,39 @@ def test_corrupt_restart_structure_raises():
 
 
 # ---------------------------------------------------------------------------
-# MJPEG-in-AVI (container + codec composed)
+# MJPEG convention: omitted Huffman tables
 # ---------------------------------------------------------------------------
 
-def _mjpg_frames(n=3):
-    frames = []
-    for k in range(n):
-        f = np.empty((32, 48, 4), np.uint8)
-        f[:, :, :3] = _smooth(48, 32, k)
-        f[:, :, 3] = 255
-        frames.append(f)
-    return frames
+def _strip_dht(jpeg: bytes) -> bytes:
+    """Remove every DHT (0xFFC4) header segment, as Motion-JPEG frames
+    do: they imply the Annex K standard tables."""
+    out = bytearray(jpeg[:2])
+    pos = 2
+    while pos < len(jpeg):
+        if jpeg[pos + 1] in (0xD9, 0xDA):
+            out += jpeg[pos:]
+            break
+        (seg_len,) = struct.unpack(">H", jpeg[pos + 2 : pos + 4])
+        if jpeg[pos + 1] != 0xC4:
+            out += jpeg[pos : pos + 2 + seg_len]
+        pos += 2 + seg_len
+    return bytes(out)
 
 
 def test_mjpg_avi_roundtrip_strips_dht_and_decodes():
-    from osm_render_spark.raster.containers import decode_avi_frames, encode_avi
-
-    frames = _mjpg_frames()
-    avi = encode_avi(frames, fps=5, codec="mjpg", quality=90)
-    assert avi.count(b"\xff\xc4") == 0  # MJPEG convention: no DHT
-    dec = decode_avi_frames(avi)
-    assert len(dec) == len(frames)
-    for d, f in zip(dec, frames):
-        assert d.shape == f.shape
-        assert (d[:, :, 3] == 255).all()
-        assert psnr(f[:, :, :3], d[:, :, :3]) >= 27.0
-
-
-def test_unknown_compressed_fourcc_still_raises():
-    from osm_render_spark.raster.containers import decode_avi_frames, encode_avi
-
-    avi = bytearray(encode_avi(_mjpg_frames(1), codec="mjpg").replace(b"MJPG", b"H264"))
-    with pytest.raises(NotImplementedError, match="H264"):
-        decode_avi_frames(bytes(avi))
-
-
-def test_sample_video_frames_mjpg_end_to_end(spark):
-    """The Spark operator path: MJPG AVI blobs → sampled frames as PNG,
-    Arrow-batched, PSNR-checked against the pre-encode frames."""
-    from osm_render_spark.raster.codec import decode_png
-    from osm_render_spark.raster.containers import encode_avi
-    from osm_render_spark.raster.ops import sample_video_frames
-
-    frames = _mjpg_frames(6)
-    avi = encode_avi(frames, fps=5, codec="mjpg", quality=90)
-    videos = spark.createDataFrame(
-        [("vM", bytearray(avi))], "video_id string, bytes binary"
-    )
-    out = sample_video_frames(videos, every_n=2).orderBy("frame_idx").collect()
-    assert [r["frame_idx"] for r in out] == [0, 2, 4]
-    for r in out:
-        got = decode_png(bytes(r["png"]))
-        want = frames[r["frame_idx"]]
-        assert psnr(want[:, :, :3], got[:, :, :3]) >= 27.0
+    """The decoder's omitted-DHT fallback: a baseline stream with its DHT
+    segments stripped decodes exactly like the stream that carries them,
+    because the encoder writes the Annex K tables the fallback installs."""
+    for k in range(3):
+        img = _smooth(48, 32, k)
+        full = encode_jpeg(img, quality=90, subsampling="420")
+        stripped = _strip_dht(full)
+        assert b"\xff\xc4" in full
+        assert stripped.count(b"\xff\xc4") == 0
+        dec = decode_jpeg(stripped)
+        assert dec.shape == img.shape
+        assert (dec == decode_jpeg(full)).all()
+        assert psnr(img, dec) >= 27.0
 
 
 def test_hand_crafted_stream_decodes_bit_exact():

@@ -1,11 +1,11 @@
-"""kNN operators: broadcast vs cell-pruned agreement, circular metric."""
+"""kNN operators: map-side prune bound, circular metric."""
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from osm_render_spark.operators.knn import knn_join, knn_join_celled
+from osm_render_spark.operators.knn import knn_join
 
 
 def _frames(spark, spread=0.5):
@@ -28,19 +28,6 @@ def _frames(spark, spread=0.5):
     return q, c
 
 
-def test_celled_knn_matches_broadcast_knn(spark):
-    """When the k-th neighbor is inside the 3×3 cell ring (candidates
-    within 0.5° of each query, zoom-7 cells ≈ 2.8°), the cell-pruned plan
-    must be exact."""
-    q, c = _frames(spark)
-    a = {(r["query_id"], r["rank"]): r["cand_id"] for r in knn_join(q, c, 5).collect()}
-    b = {
-        (r["query_id"], r["rank"]): r["cand_id"]
-        for r in knn_join_celled(q, c, 5, zoom=7).collect()
-    }
-    assert a == b
-
-
 def test_local_topk_prune_bounds_prewindow_rows(spark):
     """The VERDICT r1 scale fix: rows reaching the rank window must be
     bounded by k × |queries| × n_batches, never |candidates| × |queries|
@@ -55,80 +42,6 @@ def test_local_topk_prune_bounds_prewindow_rows(spark):
     # size) = 120, and strictly below the 1080-row cross product
     assert n <= 5 * 6 * 4
     assert n < 180 * 6
-
-
-def test_celled_fallback_makes_knn_exact_at_any_zoom(spark):
-    """Exactness fallback (VERDICT r1 #8): at zoom 10 a cell is ~0.35° so
-    the true k-th neighbor regularly falls outside the 3×3 ring; the
-    certificate + brute-force second pass must restore exactness on
-    random point sets."""
-    import numpy as np
-
-    for seed in (0, 1, 2):
-        rng = np.random.default_rng(seed)
-        qpts = [
-            (i, float(lon), float(lat))
-            for i, (lon, lat) in enumerate(
-                zip(rng.uniform(-179, 179, 8), rng.uniform(-80, 80, 8))
-            )
-        ]
-        # spread candidates widely so ring-local results are INcomplete
-        cands = [
-            (j, float(lon), float(lat))
-            for j, (lon, lat) in enumerate(
-                zip(rng.uniform(-179, 179, 120), rng.uniform(-80, 80, 120))
-            )
-        ]
-        q = spark.createDataFrame(qpts, "query_id long, qlon double, qlat double")
-        c = spark.createDataFrame(cands, "cand_id long, lon double, lat double")
-        brute = {
-            (r["query_id"], r["rank"]): r["cand_id"]
-            for r in knn_join(q, c, 3).collect()
-        }
-        celled = {
-            (r["query_id"], r["rank"]): r["cand_id"]
-            for r in knn_join_celled(q, c, 3, zoom=10).collect()
-        }
-        assert celled == brute, f"seed {seed}"
-
-
-def test_celled_fallback_size_gate_kernel_cartesian_free(spark):
-    """VERDICT r2 #6: with sparse candidates at zoom 10 the 3×3 ring is
-    ~1° and nearly EVERY query fails the certificate — the fallback set
-    is large, the regime where the old expression fallback shipped every
-    candidate to one reducer per unsafe query. With the size gate tripped
-    (fallback_threshold=0 forces the kernel form) the result must still
-    equal brute force AND the plan must carry no CartesianProduct /
-    BroadcastNestedLoopJoin."""
-    rng = np.random.default_rng(7)
-    qpts = [
-        (i, float(lon), float(lat))
-        for i, (lon, lat) in enumerate(
-            zip(rng.uniform(-179, 179, 12), rng.uniform(-80, 80, 12))
-        )
-    ]
-    cands = [
-        (j, float(lon), float(lat))
-        for j, (lon, lat) in enumerate(
-            zip(rng.uniform(-179, 179, 200), rng.uniform(-80, 80, 200))
-        )
-    ]
-    q = spark.createDataFrame(qpts, "query_id long, qlon double, qlat double")
-    c = spark.createDataFrame(cands, "cand_id long, lon double, lat double")
-    brute = {
-        (r["query_id"], r["rank"]): r["cand_id"] for r in knn_join(q, c, 3).collect()
-    }
-    # a clean plan also proves the gate tripped: were the unsafe set
-    # empty, auto would take the expr form whose plan still contains the
-    # BroadcastNestedLoopJoin operator
-    gated = knn_join_celled(q, c, 3, zoom=10, fallback="auto", fallback_threshold=0)
-    plan = gated._sc._jvm.PythonSQLUtils.explainString(
-        gated._jdf.queryExecution(), "formatted"
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    got = {(r["query_id"], r["rank"]): r["cand_id"] for r in gated.collect()}
-    assert got == brute
 
 
 def test_knn_circular_metric_plugs_in(spark):

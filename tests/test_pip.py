@@ -97,60 +97,3 @@ def test_pip_join_matches_bruteforce(spark, zoom):
         inside = raycast_even_odd(pts[:, 0], pts[:, 1], xs, ys)
         want |= {(int(i), aid) for i in np.flatnonzero(inside)}
     assert got == want
-
-
-def test_pip_join_large_matches_broadcast_form(spark):
-    """The large x large plan (shuffle prefilter + cogroup refine) must
-    produce exactly the broadcast plan's matches."""
-    import numpy as np
-
-    from osm_render_spark.operators.pip import POLY_SCHEMA, pip_join, pip_join_large
-
-    rng = np.random.default_rng(17)
-    pts = spark.createDataFrame(
-        [(int(i), float(lon), float(lat)) for i, (lon, lat) in enumerate(
-            zip(rng.uniform(-80, 80, 800), rng.uniform(-60, 60, 800)))],
-        "point_id long, lon double, lat double",
-    )
-    polys = spark.createDataFrame(
-        [
-            (0, [0.0, 50.0, 25.0], [0.0, 0.0, 40.0]),
-            (1, [-70.0, -10.0, -10.0, -70.0], [-50.0, -50.0, -5.0, -5.0]),
-            (2, [10.0, 60.0, 60.0, 10.0], [-55.0, -55.0, -20.0, -20.0]),
-        ],
-        POLY_SCHEMA,
-    )
-    a = {(r["point_id"], r["area_id"]) for r in pip_join(pts, polys, zoom=6).collect()}
-    b = {(r["point_id"], r["area_id"])
-         for r in pip_join_large(pts, polys, zoom=6).collect()}
-    assert a == b and len(a) > 0
-
-
-def test_pip_join_large_plan_has_no_broadcast_of_big_sides(spark):
-    """With broadcast disabled (the 10^9-polygon regime), the plan must
-    still be shuffle joins + cogroup — no BroadcastNestedLoopJoin or
-    cartesian blowup."""
-    from osm_render_spark.operators.pip import POLY_SCHEMA, pip_join_large
-
-    from pyspark.sql import functions as F
-
-    pts = spark.range(1000).select(
-        F.col("id").alias("point_id"),
-        (F.col("id") % 100 * 1.0).alias("lon"),
-        (F.col("id") % 80 * 1.0).alias("lat"),
-    )
-    polys = spark.createDataFrame(
-        [(0, [0.0, 50.0, 25.0], [0.0, 0.0, 40.0])], POLY_SCHEMA
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        df = pip_join_large(pts, polys, zoom=6)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-        assert "FlatMapCoGroupsInPandas" in plan or "CoGroup" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

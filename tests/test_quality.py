@@ -1,5 +1,5 @@
 """Image-quality heuristics: closed-form metric checks on constructed
-images, ordering properties, and the Spark operator + filter stage."""
+images, ordering properties, and the Spark operator + keep predicate."""
 
 from __future__ import annotations
 
@@ -7,8 +7,8 @@ import numpy as np
 
 from osm_render_spark.raster.codec import encode_png
 from osm_render_spark.raster.quality import (
-    filter_images_by_quality,
     image_quality,
+    quality_keep,
     quality_metrics,
 )
 
@@ -109,12 +109,10 @@ def test_operator_matches_pure_function(spark):
 
 def test_filter_stage(spark):
     df, _ = _df(spark)
-    kept = {r["image_id"] for r in filter_images_by_quality(
-        df, min_sharpness=5.0, min_entropy=1.0, max_extreme=0.9
-    ).collect()}
+    # the pipeline's quality stage: metrics, then the JVM-side predicate
+    kept = {r["image_id"] for r in image_quality(df).where(quality_keep(
+        min_sharpness=5.0, min_entropy=1.0, max_extreme=0.9
+    )).collect()}
     # noise survives; solid (entropy 0), gradient (sharpness ~0),
     # checker (100% extreme), poison (decode_ok=0) are dropped
     assert kept == {"noise"}
-    # filter output keeps the full row shape
-    out = filter_images_by_quality(df, 5.0, 1.0, 0.9)
-    assert out.columns == ["image_id", "bytes", "fmt"]

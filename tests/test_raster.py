@@ -20,6 +20,7 @@ from osm_render_spark.raster.kernels import (
     fill_polygon,
     new_surface,
     stroke_polyline,
+    unpack_argb,
 )
 
 
@@ -82,6 +83,11 @@ def test_phash_deterministic_and_sensitive():
 # ---------------------------------------------------------------------------
 # kernels
 # ---------------------------------------------------------------------------
+
+def test_unpack_argb():
+    """R12: packed 0xAARRGGBB unpacks to (r, g, b, a)."""
+    assert unpack_argb(0x80FF4020) == (255, 64, 32, 128)
+
 
 def test_fill_even_odd_hole():
     surf = new_surface(20, 20)

@@ -1,11 +1,11 @@
 """Gopher repetition metrics: planted documents with hand-computed
-counts, the filter form, and plan-shape checks."""
+counts, the pass flag, and plan-shape checks."""
 
 from __future__ import annotations
 
 import pytest
 
-from osm_render_spark.operators.repetition import gopher_filter, repetition_metrics
+from osm_render_spark.operators.repetition import repetition_metrics
 
 
 @pytest.fixture(scope="module")
@@ -97,7 +97,10 @@ def test_bigram_tiebreak_deterministic(spark):
 
 
 def test_gopher_filter_keeps_clean_docs(docs):
-    kept = {r["doc_id"] for r in gopher_filter(docs).collect()}
+    kept = {
+        r["doc_id"]
+        for r in repetition_metrics(docs).where("gopher_pass = 1").collect()
+    }
     assert 0 in kept and 5 in kept
     assert 2 not in kept and 3 not in kept and 4 not in kept
 

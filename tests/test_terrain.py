@@ -350,49 +350,6 @@ def test_contour_endpoints_interpolate_to_threshold(spark):
             assert abs(v - 7) <= abs(z1 - z0) / 1e6 + 1e-9
 
 
-def test_contour_mvt_roundtrip(spark):
-    """Contours → MVT: every tile blob decodes back to the same
-    quantized 2-point linestrings the formula predicts."""
-    from osm_render_spark.raster.mvt import decode_geometry, decode_mvt
-    from osm_render_spark.raster.terrain import contour_mvt_tiles
-
-    dem = RNG.integers(-30, 30, (128, 128)).astype(np.int32)
-    segs = contour_tiles(_tiles_df(spark, dem), T, [0])
-    seg_rows = segs.collect()
-    tiles = {
-        (r.tile_x, r.tile_y): r
-        for r in contour_mvt_tiles(segs, T, extent=4096).collect()
-    }
-    per_tile = {}
-    for r in seg_rows:
-        per_tile.setdefault((r.tx, r.ty), []).append(r)
-    assert set(tiles) == set(per_tile)
-    M, E = 1_000_000, 4096
-
-    def q(v, o):
-        return (2 * (v - o * M) * E + T * M) // (2 * T * M)
-
-    for key, rows in per_tile.items():
-        blob = tiles[key]
-        assert blob.n_features == len(rows)
-        dec = decode_mvt(bytes(blob.mvt))
-        got = sorted(
-            tuple(
-                xy
-                for _op, pts in decode_geometry(f["geometry"])
-                for pt in pts
-                for xy in pt
-            )
-            for f in dec["contours"]["features"]
-        )
-        want = sorted(
-            (q(r.x1_ppm, r.tx), q(r.y1_ppm, r.ty),
-             q(r.x2_ppm, r.tx), q(r.y2_ppm, r.ty))
-            for r in rows
-        )
-        assert got == want, key
-
-
 def test_dem_overview_matches_numpy_pooling(spark):
     """factor-2 and factor-4 overviews == whole-array F6 mean pooling,
     including negative halves (floor(x+0.5), not banker's)."""
