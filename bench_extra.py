@@ -7,6 +7,7 @@ without a 8-minute full run. Usage:
 
     python bench_extra.py snap viterbi
     python bench_extra.py all
+    python bench_extra.py jpeg     # driver-only: starts no Spark session
 """
 
 from __future__ import annotations
@@ -176,24 +177,65 @@ def bench_geotiff(spark) -> dict:
     }
 
 
+def bench_jpeg(spark) -> dict:
+    """Driver-only codec microbench (``spark`` is unused): best-of-3 ms
+    per image to encode and decode baseline, multi-scan and progressive
+    streams of 60 ``image_pixels`` 48x48 images at q90 4:4:4, the size
+    and settings of the training_curate corpus. Each pass walks the
+    whole corpus, so a progressive image's own Huffman tables are
+    decoded cold, as in a corpus read."""
+    from osm_render_spark.fixtures.images import image_pixels
+    from osm_render_spark.raster.jpeg import (
+        decode_jpeg,
+        encode_jpeg,
+        encode_progressive_jpeg,
+    )
+
+    imgs = [image_pixels(j, 48, 48) for j in range(60)]
+    encoders = {
+        "baseline": lambda im: encode_jpeg(im, 90, "444"),
+        "multiscan": lambda im: encode_jpeg(im, 90, "444", multi_scan=True),
+        "progressive": lambda im: encode_progressive_jpeg(im, 90, "444"),
+    }
+
+    def best_ms(fn, items):
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            for it in items:
+                fn(it)
+            best = min(best, time.perf_counter() - t0)
+        return round(1000.0 * best / len(items), 3)
+
+    out = {}
+    for kind, enc in encoders.items():
+        out[f"jpeg_encode_{kind}_ms"] = best_ms(enc, imgs)
+        blobs = [enc(im) for im in imgs]
+        out[f"jpeg_decode_{kind}_ms"] = best_ms(decode_jpeg, blobs)
+    return out
+
+
 SECTIONS = {
     "snap": bench_snap,
     "viterbi": bench_viterbi,
     "pipeline": bench_pipeline,
     "geotiff": bench_geotiff,
+    "jpeg": bench_jpeg,
 }
+DRIVER_ONLY = {"jpeg"}  # sections that never touch the session
 
 
 def main() -> int:
     names = sys.argv[1:] or ["all"]
     if names == ["all"]:
         names = list(SECTIONS)
-    spark = _spark()
+    spark = _spark() if set(names) - DRIVER_ONLY else None
     out = {"cpus": CPUS, "sf_dir": SF_DIR}
     for nm in names:
         out.update(SECTIONS[nm](spark))
         print(json.dumps(out))
-    spark.stop()
+    if spark is not None:
+        spark.stop()
     return 0
 
 

@@ -6,14 +6,13 @@ none).
 
 Decoder: baseline sequential Huffman DCT (SOF0, and SOF1 which decodes
 identically at 8-bit precision) — single interleaved scan AND
-MULTI-SCAN sequential (several SOS per frame, one component each, the
-progressive path's component-grid traversal with baseline's full-band
-block loop; subset-interleaved partial scans raise by name) — AND
-progressive (SOF2: spectral selection, successive approximation, EOB
-runs, interleaved DC + non-interleaved AC scans, restarts inside any
-scan — a large share of real web JPEGs are progressive, so a multimodal
-corpus reader can't skip it). Grayscale or 3-component YCbCr with any
-sampling factors
+MULTI-SCAN sequential (several SOS per frame, one component each;
+subset-interleaved partial scans raise by name), both through one
+sequential scan decoder — AND progressive (SOF2: spectral selection,
+successive approximation, EOB runs, interleaved DC + non-interleaved AC
+scans, restarts inside any scan — a large share of real web JPEGs are
+progressive, so a multimodal corpus reader can't skip it). Grayscale or
+3-component YCbCr with any sampling factors
 1..2 (4:4:4, 4:2:2, 4:2:0, 4:4:0), 8- and 16-bit quantization tables,
 restart markers, and the MJPEG convention of OMITTED Huffman tables
 (the Annex K standard tables are installed when a baseline scan starts
@@ -23,7 +22,9 @@ NotImplementedError naming the feature. Both entry
 paths share one reconstruction tail (_reconstruct: dequant → IDCT →
 upsample → color), so a fully-refined progressive stream decodes
 BIT-EXACTLY equal to the baseline encoding of the same coefficients —
-pinned by tests.
+pinned by tests. Every scan, decoded or encoded, takes its block order
+from one helper (_scan_walk, T.81 A.2): a scan naming one component is
+non-interleaved whatever the frame's sampling factors.
 
 Encoder: quality-scaled Annex K quantization tables (the public libjpeg
 scaling formula), the Annex K standard Huffman tables, optional 4:2:0
@@ -31,6 +32,8 @@ subsampling and restart intervals; encode_progressive_jpeg emits a
 libjpeg-style scan script (DC first/refine, spectral AC bands,
 successive approximation) with per-scan frequency-optimized canonical
 Huffman tables (progressive needs EOBn symbols the Annex K tables lack).
+Both encoders share one front-end (_encode_front: color conversion,
+subsampling, FDCT, quantization) and one header writer (_jfif_header).
 Exists so tests and fixtures are self-contained (no image library in
 the container) and to give the decoder a spec-honest adversary: every
 decoder feature above is pinned by decoding encoder output plus
@@ -47,6 +50,7 @@ of the image.
 
 from __future__ import annotations
 
+import itertools
 import re
 import struct
 
@@ -157,6 +161,8 @@ HUFF_AC_CHROMA = (
         0xF9, 0xFA,
     ],
 )
+_HUFF_DC = (HUFF_DC_LUMA, HUFF_DC_CHROMA)  # by table class: luma, chroma
+_HUFF_AC = (HUFF_AC_LUMA, HUFF_AC_CHROMA)
 
 # orthonormal 8-point DCT-II basis: D[u, x] = c(u)/2 * cos((2x+1)uπ/16)
 _D = np.empty((8, 8))
@@ -255,9 +261,13 @@ def _encode_map(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     return hit
 
 
-def _dht_payload(tc: int, th: int, table: tuple[list[int], list[int]]) -> bytes:
+def _segment(marker: int, payload: bytes) -> bytes:
+    return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
+
+
+def _dht_segment(tc: int, th: int, table: tuple[list[int], list[int]]) -> bytes:
     bits, vals = table
-    return bytes([tc << 4 | th]) + bytes(bits) + bytes(vals)
+    return _segment(0xC4, bytes([tc << 4 | th]) + bytes(bits) + bytes(vals))
 
 
 # --- bit I/O ---------------------------------------------------------------
@@ -285,6 +295,12 @@ class _BitWriter:
         if self.n:
             self.write((1 << (8 - self.n)) - 1, 8 - self.n)  # pad with 1s
 
+    def drain(self, out: bytearray) -> None:
+        """End an entropy segment: pad, move the bytes to ``out``."""
+        self.flush()
+        out += self.buf
+        self.buf = bytearray()
+
 
 # --- decoder ----------------------------------------------------------------
 
@@ -304,7 +320,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     restart_interval = 0
     frame = None  # (h, w, [(comp_id, hi, vi, tq)])
     progressive = False
-    grids = None  # progressive coef stores, per frame comp: (bv, bh, 64)
+    grids = None  # coef stores of every scan, per frame comp: (bv, bh, 64)
 
     while pos < len(data):
         if data[pos] != 0xFF:
@@ -374,47 +390,50 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             if frame is None:
                 raise ValueError("SOS before SOF")
             ns = body[0]
-            scan_comps = []
+            ids = [cid for cid, _hi, _vi, _tq in frame[2]]
+            scan_comps = []  # (frame comp index, DC table, AC table)
             for si in range(ns):
                 cs, tdta = body[1 + 2 * si], body[2 + 2 * si]
-                scan_comps.append((cs, tdta >> 4, tdta & 15))
+                if cs not in ids:
+                    raise ValueError(
+                        f"scan names component {cs}, which the frame "
+                        "does not define"
+                    )
+                scan_comps.append((ids.index(cs), tdta >> 4, tdta & 15))
+            full = ns == len(ids)
             if not progressive:
                 if not huff_dc and not huff_ac:
                     # MJPEG convention: frames carry no DHT; the standard
                     # Annex K tables are implied
-                    huff_dc = {0: HUFF_DC_LUMA, 1: HUFF_DC_CHROMA}
-                    huff_ac = {0: HUFF_AC_LUMA, 1: HUFF_AC_CHROMA}
-                if len(scan_comps) == len(frame[2]):
-                    if grids is not None:
-                        raise ValueError(
-                            "interleaved all-component scan after partial "
-                            "scans in a sequential stream"
-                        )
-                    return _decode_scan(
-                        data, pos, frame, scan_comps, qt, huff_dc, huff_ac,
-                        restart_interval,
+                    huff_dc = dict(enumerate(_HUFF_DC))
+                    huff_ac = dict(enumerate(_HUFF_AC))
+                if full and grids is not None:
+                    raise ValueError(
+                        "interleaved all-component scan after partial "
+                        "scans in a sequential stream"
                     )
-                # MULTI-SCAN sequential baseline (T.81 allows several SOS
-                # per SOF0 frame, one subset of components each): decode
-                # each non-interleaved scan into the shared grids — the
-                # progressive path's component-grid traversal with
-                # baseline's full-band block loop — and reconstruct at EOI
-                if len(scan_comps) != 1:
+                if not full and ns != 1:
                     raise NotImplementedError(
                         "multi-component PARTIAL scan in a sequential "
                         "JPEG (subset-interleaved); one-component scans "
                         "and full-component scans are supported"
                     )
-                if grids is None:
-                    _hm, _vm, mcu_cols, mcu_rows = _mcu_geometry(frame)
-                    grids = [
-                        np.zeros((mcu_rows * vi, mcu_cols * hi, 64), np.int32)
-                        for _cid, hi, vi, _tq in frame[2]
-                    ]
-                pos = _decode_baseline_ni_scan(
-                    data, pos, frame, scan_comps[0], grids,
+            # every scan of the frame lands in these grids: a multi-scan
+            # sequential stream (several SOS per SOF0 frame, one
+            # component each) and a progressive one reconstruct at EOI
+            if grids is None:
+                _hm, _vm, mcu_cols, mcu_rows = _mcu_geometry(frame)
+                grids = [
+                    np.zeros((mcu_rows * vi, mcu_cols * hi, 64), np.int32)
+                    for _cid, hi, vi, _tq in frame[2]
+                ]
+            if not progressive:
+                pos = _decode_sequential_scan(
+                    data, pos, frame, scan_comps, grids,
                     huff_dc, huff_ac, restart_interval,
                 )
+                if full:  # the one scan of a single-scan stream
+                    return _reconstruct(frame, grids, qt)
                 continue
             # progressive: accumulate this scan's band into the shared
             # coefficient grids, keep parsing — reconstruction at EOI
@@ -424,13 +443,6 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 body[3 + 2 * ns] >> 4,
                 body[3 + 2 * ns] & 15,
             )  # Ss, Se, Ah, Al
-            if grids is None:
-                _h, _w, comps = frame
-                _hm, _vm, mcu_cols, mcu_rows = _mcu_geometry(frame)
-                grids = [
-                    np.zeros((mcu_rows * vi, mcu_cols * hi, 64), np.int32)
-                    for _cid, hi, vi, _tq in comps
-                ]
             pos = _decode_progressive_scan(
                 data, pos, frame, scan_comps, band, grids,
                 huff_dc, huff_ac, restart_interval,
@@ -453,43 +465,104 @@ def _mcu_geometry(frame):
     return hmax, vmax, mcu_cols, mcu_rows
 
 
-def _decode_baseline_ni_scan(
-    data, pos, frame, scan_comp, grids, huff_dc, huff_ac, dri
-):
-    """One NON-interleaved sequential-baseline scan (multi-scan SOF0:
-    one component per SOS, the full 0..63 band per block) into the
-    shared per-component grids. The traversal is the progressive path's
-    component-grid geometry (ceil of the component's scaled dims, not
-    the MCU-padded grid); the block loop is baseline's DC+AC decode.
-    Returns the stream position of the marker ending the scan."""
+def _scan_walk(frame, comp_idx):
+    """T.81 A.2 traversal of one scan over the frame components
+    ``comp_idx`` — the one place that knows it, shared by every decoder
+    and encoder. A scan naming more than one component is interleaved
+    and walks MCUs, each hi×vi blocks per component in raster order; a
+    one-component scan is non-interleaved (whatever the frame's
+    component count or sampling factors) and walks the component's own
+    block grid (ceil of its scaled dims), not the MCU-padded grid.
+    Returns (unit count, blocks per unit, iterator over the blocks in
+    coding order as (scan slot, by, bx) in component block-grid
+    coordinates); a unit is an MCU, or one block, and restart intervals
+    count units. The iterator is lazy (one MCU row at a time), so a
+    frame header claiming huge dimensions costs no block list before
+    its scan data runs out."""
     img_h, img_w, comps = frame
-    hmax, vmax, _mc, _mr = _mcu_geometry(frame)
-    by_id = {cid: (i, hi, vi) for i, (cid, hi, vi, _tq) in enumerate(comps)}
-    cs, td, ta = scan_comp
-    ci, hi, vi = by_id[cs]
-    cbh = -(-(-(-img_w * hi // hmax)) // 8)
-    cbv = -(-(-(-img_h * vi // vmax)) // 8)
-    n_units = cbv * cbh
-    if td not in huff_dc:
-        raise ValueError(f"missing DC Huffman table {td}")
-    if ta not in huff_ac:
-        raise ValueError(f"missing AC Huffman table {ta}")
-    dc_sym, dc_len = _decode_lut(*huff_dc[td])
-    ac_sym, ac_len = _decode_lut(*huff_ac[ta])
-    g = grids[ci]
-    segments, end = _scan_segments(data, pos, n_units, dri)
-    unit = 0
-    for seg in segments:
-        # inlined bit-reader state (same idiom as _decode_scan)
-        buf = seg
+    hmax, vmax, mcu_cols, mcu_rows = _mcu_geometry(frame)
+    if len(comp_idx) == 1:
+        _cid, hi, vi, _tq = comps[comp_idx[0]]
+        rows, cols = (
+            -(-(-(-n * f // fmax)) // 8)
+            for n, f, fmax in ((img_h, vi, vmax), (img_w, hi, hmax))
+        )
+        return rows * cols, 1, itertools.product((0,), range(rows), range(cols))
+    offs = [  # (slot, v, u, vi, hi) of each block of an MCU
+        (si, v, u, vi, hi)
+        for si, (_cid, hi, vi, _tq) in enumerate(comps[ci] for ci in comp_idx)
+        for v in range(vi)
+        for u in range(hi)
+    ]
+
+    def walk():
+        for r in range(mcu_rows):
+            yield from [
+                (si, r * vi + v, c * hi + u)
+                for c in range(mcu_cols)
+                for si, v, u, vi, hi in offs
+            ]
+
+    return mcu_rows * mcu_cols, len(offs), walk()
+
+
+def _scan_segments(data, pos, walk, dri):
+    """Isolate one scan's entropy bytes (ends at the first marker that
+    is neither byte-stuffing nor RSTn), split on restarts, unstuff.
+    ``walk`` is what _scan_walk returns. Returns ([(segment, its
+    blocks)], end_pos); a restart interval counts the scan's units."""
+    m = _SCAN_END.search(data, pos)
+    end = m.start() if m else len(data)
+    scan_bytes = data[pos:end]
+    segments = [
+        s.replace(b"\xff\x00", b"\xff") for s in _RST_SPLIT.split(scan_bytes)
+    ]
+    n_units, per_unit, blocks = walk
+    expected = -(-n_units // dri) if dri else 1
+    if len(segments) != expected:
+        raise ValueError(
+            f"restart structure mismatch: {len(segments)} entropy "
+            f"segments for {n_units} units at restart interval {dri}"
+        )
+    # the segments are decoded in order, each taking the next dri units
+    seg_blocks = dri * per_unit
+    return [
+        (seg, itertools.islice(blocks, seg_blocks) if dri else blocks)
+        for seg in segments
+    ], end
+
+
+def _decode_sequential_scan(
+    data, pos, frame, scan_comps, grids, huff_dc, huff_ac, dri
+):
+    """One sequential (SOF0/SOF1) scan, interleaved or not, the full
+    0..63 band per block, into the shared per-component grids. Returns
+    the stream position of the marker ending the scan."""
+    slots = []
+    for ci, td, ta in scan_comps:
+        if td not in huff_dc:
+            raise ValueError(f"missing DC Huffman table {td}")
+        if ta not in huff_ac:
+            raise ValueError(f"missing AC Huffman table {ta}")
+        slots.append(
+            (*_decode_lut(*huff_dc[td]), *_decode_lut(*huff_ac[ta]), grids[ci])
+        )
+    walk = _scan_walk(frame, [ci for ci, _td, _ta in scan_comps])
+    segments, end = _scan_segments(data, pos, walk, dri)
+    for buf, seg_blocks in segments:
+        # bit-reader state inlined as locals: the per-symbol
+        # peek16/skip/read method calls were ~70% of baseline decode
+        # wall (guide §4.2 — per-row python overhead; measured 4.7 ms →
+        # 2.1 ms per 64px image after inlining, bit-identical output)
         bend = len(buf)
         i = 0
         acc = 0
         n = 0
-        pred = 0  # restarts reset the DC predictor
-        for _ in range(min(dri, n_units - unit) if dri else n_units):
-            by, bx = divmod(unit, cbh)
+        preds = [0] * len(slots)  # restarts reset the DC predictors
+        for si, by, bx in seg_blocks:
+            dc_sym, dc_len, ac_sym, ac_len, g = slots[si]
             row = g[by, bx]
+            # DC
             while n < 16:
                 acc = (acc << 8) | (buf[i] if i < bend else 0xFF)
                 i += 1
@@ -509,8 +582,9 @@ def _decode_baseline_ni_scan(
                 n -= s
                 v = acc >> n
                 acc &= (1 << n) - 1
-                pred += v - (1 << s) + 1 if v < (1 << (s - 1)) else v
-            row[0] = pred
+                preds[si] += v - (1 << s) + 1 if v < (1 << (s - 1)) else v
+            row[0] = preds[si]
+            # AC
             k = 1
             while k < 64:
                 while n < 16:
@@ -542,139 +616,7 @@ def _decode_baseline_ni_scan(
                 acc &= (1 << n) - 1
                 row[k] = v - (1 << s) + 1 if v < (1 << (s - 1)) else v
                 k += 1
-            unit += 1
     return end
-
-
-def _decode_scan(data, pos, frame, scan_comps, qt, huff_dc, huff_ac, dri):
-    img_h, img_w, comps = frame
-    if len(scan_comps) != len(comps):
-        # decode_jpeg routes partial scans to _decode_baseline_ni_scan
-        raise ValueError("interleaved decoder fed a partial scan")
-    by_id = {cid: (hi, vi, tq) for cid, hi, vi, tq in comps}
-    hmax, vmax, mcu_cols, mcu_rows = _mcu_geometry(frame)
-    n_mcus = mcu_cols * mcu_rows
-
-    # per scan-component: LUTs, coefficient stores, block counts
-    luts = []
-    coefs = []
-    blocks_per_mcu = []
-    for cs, td, ta in scan_comps:
-        hi, vi, _tq = by_id[cs]
-        luts.append((_decode_lut(*huff_dc[td]), _decode_lut(*huff_ac[ta])))
-        blocks_per_mcu.append(hi * vi)
-        coefs.append(np.zeros((n_mcus * hi * vi, 64), dtype=np.int32))
-
-    # isolate the entropy stream: ends at the first marker that is not
-    # byte-stuffing and not RSTn; split on RSTn, unstuff each segment
-    m = _SCAN_END.search(data, pos)
-    scan_bytes = data[pos : m.start() if m else len(data)]
-    segments = [
-        s.replace(b"\xff\x00", b"\xff") for s in _RST_SPLIT.split(scan_bytes)
-    ]
-    expected_segments = (
-        -(-n_mcus // dri) if dri else 1
-    )
-    if len(segments) != expected_segments:
-        raise ValueError(
-            f"restart structure mismatch: {len(segments)} entropy segments "
-            f"for {n_mcus} MCUs at restart interval {dri}"
-        )
-
-    mcu = 0
-    n_sc = len(scan_comps)
-    for seg in segments:
-        # bit-reader state inlined as locals: the per-symbol
-        # peek16/skip/read method calls were ~70% of baseline decode
-        # wall (guide §4.2 — per-row python overhead; measured 4.7 ms →
-        # 2.1 ms per 64px image after inlining, bit-identical output)
-        buf = seg
-        end = len(buf)
-        i = 0
-        acc = 0
-        n = 0
-        preds = [0] * n_sc
-        seg_mcus = min(dri, n_mcus - mcu) if dri else n_mcus
-        for _ in range(seg_mcus):
-            for ci in range(n_sc):
-                (dc_sym, dc_len), (ac_sym, ac_len) = luts[ci]
-                nb = blocks_per_mcu[ci]
-                store = coefs[ci]
-                base = mcu * nb
-                for b in range(nb):
-                    row = store[base + b]
-                    # DC
-                    while n < 16:
-                        acc = (acc << 8) | (buf[i] if i < end else 0xFF)
-                        i += 1
-                        n += 8
-                    p = (acc >> (n - 16)) & 0xFFFF
-                    ln = dc_len[p]
-                    if ln == 0:
-                        raise ValueError("invalid DC Huffman code")
-                    n -= ln
-                    acc &= (1 << n) - 1
-                    s = dc_sym[p]
-                    if s:
-                        while n < s:
-                            acc = (acc << 8) | (buf[i] if i < end else 0xFF)
-                            i += 1
-                            n += 8
-                        n -= s
-                        v = acc >> n
-                        acc &= (1 << n) - 1
-                        preds[ci] += (
-                            v - (1 << s) + 1 if v < (1 << (s - 1)) else v
-                        )
-                    row[0] = preds[ci]
-                    # AC
-                    k = 1
-                    while k < 64:
-                        while n < 16:
-                            acc = (acc << 8) | (buf[i] if i < end else 0xFF)
-                            i += 1
-                            n += 8
-                        p = (acc >> (n - 16)) & 0xFFFF
-                        ln = ac_len[p]
-                        if ln == 0:
-                            raise ValueError("invalid AC Huffman code")
-                        n -= ln
-                        acc &= (1 << n) - 1
-                        rs = ac_sym[p]
-                        s = rs & 15
-                        if s == 0:
-                            if rs == 0xF0:  # ZRL: 16 zeros
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += rs >> 4
-                        if k > 63:
-                            raise ValueError("AC run past block end")
-                        while n < s:
-                            acc = (acc << 8) | (buf[i] if i < end else 0xFF)
-                            i += 1
-                            n += 8
-                        n -= s
-                        v = acc >> n
-                        acc &= (1 << n) - 1
-                        row[k] = (
-                            v - (1 << s) + 1 if v < (1 << (s - 1)) else v
-                        )
-                        k += 1
-            mcu += 1
-
-    # MCU-ordered stores → per-component block grids, shared tail.
-    # Scan-comp order equals frame-comp order here (interleaved scan).
-    grids = []
-    for ci, (cs, _td, _ta) in enumerate(scan_comps):
-        hi, vi, _tq = by_id[cs]
-        grids.append(
-            coefs[ci]
-            .reshape(mcu_rows, mcu_cols, vi, hi, 64)
-            .transpose(0, 2, 1, 3, 4)
-            .reshape(mcu_rows * vi, mcu_cols * hi, 64)
-        )
-    return _reconstruct(frame, grids, qt)
 
 
 def _reconstruct(frame, grids, qt):
@@ -739,25 +681,6 @@ def _reconstruct(frame, grids, qt):
 
 # --- progressive (SOF2) entropy decode -------------------------------------
 
-def _scan_segments(data, pos, n_units, dri):
-    """Isolate one scan's entropy bytes (ends at the first marker that
-    is neither byte-stuffing nor RSTn), split on restarts, unstuff.
-    Returns (segments, end_pos)."""
-    m = _SCAN_END.search(data, pos)
-    end = m.start() if m else len(data)
-    scan_bytes = data[pos:end]
-    segments = [
-        s.replace(b"\xff\x00", b"\xff") for s in _RST_SPLIT.split(scan_bytes)
-    ]
-    expected = -(-n_units // dri) if dri else 1
-    if len(segments) != expected:
-        raise ValueError(
-            f"restart structure mismatch: {len(segments)} entropy "
-            f"segments for {n_units} units at restart interval {dri}"
-        )
-    return segments, end
-
-
 def _decode_progressive_scan(
     data, pos, frame, scan_comps, band, grids, huff_dc, huff_ac, dri
 ):
@@ -767,128 +690,89 @@ def _decode_progressive_scan(
     single-component AC scans (spectral bands, successive approximation,
     EOB runs), with restarts resetting predictors and the EOB run."""
     ss, se, ah, al = band
-    img_h, img_w, comps = frame
-    hmax, vmax, mcu_cols, mcu_rows = _mcu_geometry(frame)
-    by_id = {cid: (i, hi, vi) for i, (cid, hi, vi, _tq) in enumerate(comps)}
     if ss == 0 and se != 0:
         raise ValueError("progressive scan mixes DC and AC (Ss=0, Se>0)")
     if ss > 0 and len(scan_comps) != 1:
         raise ValueError("progressive AC scan must be single-component")
-    interleaved = len(scan_comps) > 1
-
-    if not interleaved:
-        cs0, _td0, _ta0 = scan_comps[0]
-        _ci0, hi0, vi0 = by_id[cs0]
-        # non-interleaved traversal covers the COMPONENT's own block
-        # grid (ceil of its scaled dims), not the MCU-padded grid
-        cbh = -(-(-(-img_w * hi0 // hmax)) // 8)
-        cbv = -(-(-(-img_h * vi0 // vmax)) // 8)
-        n_units = cbv * cbh
-    else:
-        n_units = mcu_rows * mcu_cols
-
-    segments, end = _scan_segments(data, pos, n_units, dri)
+    walk = _scan_walk(frame, [ci for ci, _td, _ta in scan_comps])
+    segments, end = _scan_segments(data, pos, walk, dri)
 
     if ss == 0:  # DC scan (first or refinement), any component count
         luts = []
-        for _cs, td, _ta in scan_comps:
+        for _ci, td, _ta in scan_comps:
             if ah == 0:
                 if td not in huff_dc:
                     raise ValueError(f"missing DC Huffman table {td}")
                 luts.append(_decode_lut(*huff_dc[td]))
             else:
                 luts.append(None)  # refinement reads raw bits only
-        unit = 0
-        for seg in segments:
+        gs = [grids[ci] for ci, _td, _ta in scan_comps]
+        for buf, seg_blocks in segments:
             # bit-reader state inlined as locals, same idiom (and same
-            # past-the-end 0xFF padding) as the baseline _decode_scan —
+            # past-the-end 0xFF padding) as _decode_sequential_scan —
             # the per-symbol peek16/skip/read method calls dominated
             # progressive decode wall (guide §4.2)
-            buf = seg
             bend = len(buf)
             i = 0
             acc = 0
             n = 0
             preds = [0] * len(scan_comps)
-            for _ in range(min(dri, n_units - unit) if dri else n_units):
-                for si, (cs, _td, _ta) in enumerate(scan_comps):
-                    ci, hi, vi = by_id[cs]
-                    g = grids[ci]
-                    if interleaved:
-                        mr, mc = divmod(unit, mcu_cols)
-                        blocks = [
-                            (mr * vi + v, mc * hi + h)
-                            for v in range(vi)
-                            for h in range(hi)
-                        ]
-                    else:
-                        blocks = [divmod(unit, cbh)]
-                    for by, bx in blocks:
-                        if ah == 0:
-                            dc_sym, dc_len = luts[si]
-                            while n < 16:
-                                acc = (acc << 8) | (
-                                    buf[i] if i < bend else 0xFF
-                                )
-                                i += 1
-                                n += 8
-                            p = (acc >> (n - 16)) & 0xFFFF
-                            ln = dc_len[p]
-                            if ln == 0:
-                                raise ValueError("invalid DC Huffman code")
-                            n -= ln
-                            acc &= (1 << n) - 1
-                            s = dc_sym[p]
-                            if s:
-                                while n < s:
-                                    acc = (acc << 8) | (
-                                        buf[i] if i < bend else 0xFF
-                                    )
-                                    i += 1
-                                    n += 8
-                                n -= s
-                                v = acc >> n
-                                acc &= (1 << n) - 1
-                                preds[si] += (
-                                    v - (1 << s) + 1
-                                    if v < (1 << (s - 1))
-                                    else v
-                                )
-                            g[by, bx, 0] = preds[si] << al
-                        else:
-                            if n < 1:
-                                acc = (acc << 8) | (
-                                    buf[i] if i < bend else 0xFF
-                                )
-                                i += 1
-                                n += 8
-                            n -= 1
-                            bit = acc >> n
-                            acc &= (1 << n) - 1
-                            if bit:
-                                g[by, bx, 0] |= 1 << al
-                unit += 1
+            for si, by, bx in seg_blocks:
+                g = gs[si]
+                if ah == 0:
+                    dc_sym, dc_len = luts[si]
+                    while n < 16:
+                        acc = (acc << 8) | (buf[i] if i < bend else 0xFF)
+                        i += 1
+                        n += 8
+                    p = (acc >> (n - 16)) & 0xFFFF
+                    ln = dc_len[p]
+                    if ln == 0:
+                        raise ValueError("invalid DC Huffman code")
+                    n -= ln
+                    acc &= (1 << n) - 1
+                    s = dc_sym[p]
+                    if s:
+                        while n < s:
+                            acc = (acc << 8) | (
+                                buf[i] if i < bend else 0xFF
+                            )
+                            i += 1
+                            n += 8
+                        n -= s
+                        v = acc >> n
+                        acc &= (1 << n) - 1
+                        preds[si] += (
+                            v - (1 << s) + 1 if v < (1 << (s - 1)) else v
+                        )
+                    g[by, bx, 0] = preds[si] << al
+                else:
+                    if n < 1:
+                        acc = (acc << 8) | (buf[i] if i < bend else 0xFF)
+                        i += 1
+                        n += 8
+                    n -= 1
+                    bit = acc >> n
+                    acc &= (1 << n) - 1
+                    if bit:
+                        g[by, bx, 0] |= 1 << al
         return end
 
     # AC scan: single component
-    cs, _td, ta = scan_comps[0]
-    ci, _hi, _vi = by_id[cs]
+    ci, _td, ta = scan_comps[0]
     if ta not in huff_ac:
         raise ValueError(f"missing AC Huffman table {ta}")
     ac_sym, ac_len = _decode_lut(*huff_ac[ta])
     g = grids[ci]
     p1, n1 = 1 << al, -(1 << al)
-    unit = 0
-    for seg in segments:
+    for buf, seg_blocks in segments:
         # same inlined bit-reader idiom as the DC loop above
-        buf = seg
         bend = len(buf)
         i = 0
         acc = 0
         n = 0
         eobrun = 0
-        for _ in range(min(dri, n_units - unit) if dri else n_units):
-            by, bx = divmod(unit, cbh)
+        for _si, by, bx in seg_blocks:
             row = g[by, bx]
             if ah == 0:
                 # --- first scan for this band (G.1.2.2) ---
@@ -1030,7 +914,6 @@ def _decode_progressive_scan(
                                 row[k] = rv + (p1 if rv >= 0 else n1)
                         k += 1
                     eobrun -= 1
-            unit += 1
     return end
 
 
@@ -1066,25 +949,83 @@ def _subsample(plane: np.ndarray, fy: int, fx: int) -> np.ndarray:
     return plane.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
 
 
-def _blockify(plane: np.ndarray, mcu_rows: int, mcu_cols: int, vi: int, hi: int) -> np.ndarray:
-    """Pad (edge) to the MCU grid and emit blocks in MCU order,
-    shape (mcu_rows*mcu_cols*vi*hi, 8, 8)."""
-    th, tw = mcu_rows * vi * 8, mcu_cols * hi * 8
-    h, w = plane.shape
-    if th != h or tw != w:
-        plane = np.pad(plane, ((0, th - h), (0, tw - w)), mode="edge")
-    return (
-        plane.reshape(mcu_rows, vi, 8, mcu_cols, hi, 8)
-        .transpose(0, 3, 1, 4, 2, 5)
-        .reshape(-1, 8, 8)
-    )
+def _encode_front(img: np.ndarray, quality: int, subsampling: str):
+    """Front-end shared by both encoders: validation, YCbCr conversion
+    and 4:2:0 subsampling, then FDCT + quantize. Returns (frame, qtabs,
+    grids): the frame as decode_jpeg parses it, (h, w, [(comp_id, hi,
+    vi, tq)]), where tq also selects the component's Huffman tables;
+    the quality-scaled tables (luma[, chroma]); and per-component
+    [by][bx][64] zigzag coefficient grids (nested lists of ints) over
+    the MCU-padded block grid (edge-replicated padding)."""
+    if img.ndim == 2:
+        img = img[:, :, None]
+    h, w, c = img.shape
+    if c not in (1, 3, 4):
+        raise ValueError(f"unsupported channel count {c}")
+    if subsampling not in ("444", "420"):
+        raise ValueError(f"subsampling must be 444 or 420, got {subsampling!r}")
+    qtabs = [_scaled_qtable(QT_LUMA, quality)]
+    if c == 1:
+        planes = [img[:, :, 0].astype(np.float64)]
+        factors = [(1, 1)]  # (hi, vi)
+    else:
+        qtabs.append(_scaled_qtable(QT_CHROMA, quality))
+        y, cb, cr = _to_ycbcr(img)
+        if subsampling == "420":
+            factors = [(2, 2), (1, 1), (1, 1)]
+            planes = [y, _subsample(cb, 2, 2), _subsample(cr, 2, 2)]
+        else:
+            factors = [(1, 1)] * 3
+            planes = [y, cb, cr]
+    # component ids 1.., table class 0 for luma and 1 for chroma
+    comps = [(i + 1, hi, vi, min(i, 1)) for i, (hi, vi) in enumerate(factors)]
+    frame = (h, w, comps)
+    _hm, _vm, mcu_cols, mcu_rows = _mcu_geometry(frame)
+    grids = []
+    for plane, (_cid, hi, vi, tq) in zip(planes, comps):
+        bv, bh = mcu_rows * vi, mcu_cols * hi
+        ph, pw = plane.shape
+        if (ph, pw) != (8 * bv, 8 * bh):
+            plane = np.pad(plane, ((0, 8 * bv - ph), (0, 8 * bh - pw)), "edge")
+        blocks = (
+            plane.reshape(bv, 8, bh, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
+            - 128.0
+        )
+        F = np.matmul(np.matmul(_D, blocks), _D.T)
+        qn = F.reshape(-1, 64)[:, ZIGZAG] / qtabs[tq][ZIGZAG]
+        q = np.where(qn >= 0, np.floor(qn + 0.5), -np.floor(-qn + 0.5))
+        grids.append(q.astype(np.int64).reshape(bv, bh, 64).tolist())
+    return frame, qtabs, grids
+
+
+def _jfif_header(frame, qtabs, sof: int, restart_interval: int) -> bytearray:
+    """SOI, JFIF APP0, DQT, SOFn, the Annex K Huffman tables and DRI —
+    the header both encoders write. A progressive frame (SOF2) gets the
+    DC tables only: each of its AC scans carries its own table."""
+    h, w, comps = frame
+    out = bytearray(b"\xff\xd8")
+    out += _segment(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    for tq, qtab in enumerate(qtabs):
+        zz = qtab[ZIGZAG].astype(np.uint8).tobytes()
+        out += _segment(0xDB, bytes([tq]) + zz)
+    sof_body = struct.pack(">BHHB", 8, h, w, len(comps))
+    for cid, hi, vi, tq in comps:
+        sof_body += bytes([cid, hi << 4 | vi, tq])
+    out += _segment(sof, sof_body)
+    for th in range(len(qtabs)):
+        out += _dht_segment(0, th, _HUFF_DC[th])
+        if sof == 0xC0:
+            out += _dht_segment(1, th, _HUFF_AC[th])
+    if restart_interval:
+        out += _segment(0xDD, struct.pack(">H", restart_interval))
+    return out
 
 
 def _emit_block(bw, row, pred: int, dc_map, ac_map) -> int:
     """Entropy-code one zigzag block (DC diff + AC RLE); returns the new
-    DC predictor. Shared by the interleaved and multi-scan writers."""
-    diff = int(row[0]) - pred
-    pred = int(row[0])
+    DC predictor."""
+    diff = row[0] - pred
+    pred = row[0]
     s = abs(diff).bit_length()
     mag = diff + (1 << s) - 1 if diff < 0 else diff
     code, ln = dc_map[s]
@@ -1092,8 +1033,7 @@ def _emit_block(bw, row, pred: int, dc_map, ac_map) -> int:
     if s:
         bw.write(mag, s)
     run = 0
-    for k in range(1, 64):
-        v = int(row[k])
+    for v in row[1:]:
         if v == 0:
             run += 1
             continue
@@ -1129,143 +1069,37 @@ def encode_jpeg(
     ``multi_scan`` emits one NON-interleaved SOS per component (T.81
     multi-scan sequential — the same quantized coefficients, so the
     decode is bit-exactly equal to the single-scan encoding)."""
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, c = img.shape
-    if c not in (1, 3, 4):
-        raise ValueError(f"unsupported channel count {c}")
-    if subsampling not in ("444", "420"):
-        raise ValueError(f"subsampling must be 444 or 420, got {subsampling!r}")
-    gray = c == 1
-    qt0 = _scaled_qtable(QT_LUMA, quality)
-    qt1 = _scaled_qtable(QT_CHROMA, quality)
-
-    if gray:
-        planes = [img[:, :, 0].astype(np.float64)]
-        factors = [(1, 1)]
-        qtabs = [qt0]
-        tsel = [0]  # huffman/quant table class per component
-    else:
-        y, cb, cr = _to_ycbcr(img)
-        if subsampling == "420":
-            factors = [(2, 2), (1, 1), (1, 1)]  # (hi, vi)
-            planes = [y, _subsample(cb, 2, 2), _subsample(cr, 2, 2)]
-        else:
-            factors = [(1, 1), (1, 1), (1, 1)]
-            planes = [y, cb, cr]
-        qtabs = [qt0, qt1, qt1]
-        tsel = [0, 1, 1]
-
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    mcu_cols = -(-w // (8 * hmax))
-    mcu_rows = -(-h // (8 * vmax))
-    n_mcus = mcu_cols * mcu_rows
-
-    # DCT + quantize, all blocks per component at once
-    zz_all = []
-    for plane, (hi, vi), qtab in zip(planes, factors, qtabs):
-        blocks = _blockify(plane, mcu_rows, mcu_cols, vi, hi) - 128.0
-        F = np.matmul(np.matmul(_D, blocks), _D.T)
-        qn = F.reshape(-1, 64)[:, ZIGZAG] / qtab[ZIGZAG]
-        q = np.where(qn >= 0, np.floor(qn + 0.5), -np.floor(-qn + 0.5))
-        zz_all.append(q.astype(np.int64))
-
-    dc_maps = [_encode_map(*HUFF_DC_LUMA), _encode_map(*HUFF_DC_CHROMA)]
-    ac_maps = [_encode_map(*HUFF_AC_LUMA), _encode_map(*HUFF_AC_CHROMA)]
-
-    out = bytearray()
-    out += b"\xff\xd8"  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    # DQT
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + bytes([0]) + bytes(
-        int(v) for v in qt0[ZIGZAG]
-    )
-    if not gray:
-        out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + bytes([1]) + bytes(
-            int(v) for v in qt1[ZIGZAG]
-        )
-    # SOF0
-    nc = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for i in range(nc):
-        hi, vi = factors[i]
-        sof += bytes([i + 1, hi << 4 | vi, tsel[i]])
-    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-    # DHT
-    tables = [(0, 0, HUFF_DC_LUMA), (1, 0, HUFF_AC_LUMA)]
-    if not gray:
-        tables += [(0, 1, HUFF_DC_CHROMA), (1, 1, HUFF_AC_CHROMA)]
-    for tc, th, tbl in tables:
-        payload = _dht_payload(tc, th, tbl)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(payload)) + payload
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    if multi_scan and nc > 1:
-        # one NON-interleaved SOS per component, raster over the
-        # component's own block grid (ceil of its scaled dims — MCU
-        # padding blocks are NOT coded in a non-interleaved scan);
-        # restart_interval counts component blocks here (T.81: MCU =
-        # one data unit in a non-interleaved scan)
-        for ci in range(nc):
-            hi, vi = factors[ci]
-            cbh = -(-(-(-w * hi // hmax)) // 8)
-            cbv = -(-(-(-h * vi // vmax)) // 8)
-            sos = bytes([1, ci + 1, tsel[ci] << 4 | tsel[ci]]) + b"\x00\x3f\x00"
-            out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-            dc_map, ac_map = dc_maps[tsel[ci]], ac_maps[tsel[ci]]
-            nb = hi * vi
-            bw = _BitWriter()
-            pred = 0
-            rst = 0
-            for unit in range(cbv * cbh):
-                if restart_interval and unit and unit % restart_interval == 0:
-                    bw.flush()
-                    out += bw.buf
-                    bw = _BitWriter()
-                    out += bytes([0xFF, 0xD0 + rst])
-                    rst = (rst + 1) & 7
-                    pred = 0
-                by, bx = divmod(unit, cbh)
-                # zz_all is MCU-ordered: (mcu, v, h) → flat index
-                idx = ((by // vi) * mcu_cols + bx // hi) * nb + (
-                    by % vi
-                ) * hi + bx % hi
-                pred = _emit_block(bw, zz_all[ci][idx], pred, dc_map, ac_map)
-            bw.flush()
-            out += bw.buf
-        out += b"\xff\xd9"  # EOI
-        return bytes(out)
-
-    # SOS
-    sos = bytes([nc])
-    for i in range(nc):
-        sos += bytes([i + 1, tsel[i] << 4 | tsel[i]])
-    sos += b"\x00\x3f\x00"
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-
-    # entropy-coded scan
-    bw = _BitWriter()
-    preds = [0] * nc
-    rst = 0
-    for mcu in range(n_mcus):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            bw.flush()
-            out += bw.buf
-            bw = _BitWriter()
-            out += bytes([0xFF, 0xD0 + rst])
-            rst = (rst + 1) & 7
-            preds = [0] * nc
-        for ci in range(nc):
-            hi, vi = factors[ci]
-            dc_map, ac_map = dc_maps[tsel[ci]], ac_maps[tsel[ci]]
-            nb = hi * vi
-            for b in range(nb):
-                preds[ci] = _emit_block(
-                    bw, zz_all[ci][mcu * nb + b], preds[ci], dc_map, ac_map
-                )
-    bw.flush()
-    out += bw.buf
+    frame, qtabs, grids = _encode_front(img, quality, subsampling)
+    comps = frame[2]
+    out = _jfif_header(frame, qtabs, 0xC0, restart_interval)
+    dc_maps = [_encode_map(*t) for t in _HUFF_DC]
+    ac_maps = [_encode_map(*t) for t in _HUFF_AC]
+    every = list(range(len(comps)))
+    # one interleaved scan, or one non-interleaved scan per component
+    # (its raster skips the MCU padding blocks, and its restart
+    # interval counts blocks: T.81's MCU of a one-component scan)
+    for comp_idx in [[ci] for ci in every] if multi_scan else [every]:
+        sos = bytes([len(comp_idx)])
+        slots = []
+        for ci in comp_idx:
+            tq = comps[ci][3]
+            sos += bytes([ci + 1, tq << 4 | tq])
+            slots.append((grids[ci], dc_maps[tq], ac_maps[tq]))
+        out += _segment(0xDA, sos + b"\x00\x3f\x00")
+        _n, per_unit, blocks = _scan_walk(frame, comp_idx)
+        rst_blocks = restart_interval * per_unit
+        bw = _BitWriter()
+        preds = [0] * len(slots)
+        rst = 0
+        for b, (si, by, bx) in enumerate(blocks):
+            if rst_blocks and b and b % rst_blocks == 0:
+                bw.drain(out)
+                out += bytes([0xFF, 0xD0 + rst])
+                rst = (rst + 1) & 7
+                preds = [0] * len(slots)
+            g, dc_map, ac_map = slots[si]
+            preds[si] = _emit_block(bw, g[by][bx], preds[si], dc_map, ac_map)
+        bw.drain(out)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
@@ -1380,8 +1214,7 @@ def _tokens_ac_first(row, ss, se, al, out, eob):
     """One block of an AC first scan (T.81 G.1.2.2) → tokens. The point
     transform for AC is magnitude shift (truncate toward zero)."""
     vals = []
-    for k in range(ss, se + 1):
-        v = int(row[k])
+    for v in row[ss : se + 1]:
         t = abs(v) >> al
         vals.append(-t if v < 0 else t)
     if not any(vals):
@@ -1414,7 +1247,7 @@ def _tokens_ac_refine(row, ss, se, al, out, eob):
     by mirroring the decoder's walk exactly: ZRLs pass 16 zero-history
     positions, correction bits for nonzero-history positions follow the
     symbol that passes them, sign bit precedes them."""
-    a = [abs(int(row[k])) >> al for k in range(ss, se + 1)]
+    a = [abs(v) >> al for v in row[ss : se + 1]]
     sig = [i for i, t in enumerate(a) if t == 1]  # newly significant
     if not sig:
         eob.run += 1
@@ -1437,7 +1270,7 @@ def _tokens_ac_refine(row, ss, se, al, out, eob):
                 i += 1
             r -= 16
         out.append(("sym", r << 4 | 1))
-        out.append(("bits", 1 if int(row[ss + sp]) > 0 else 0, 1))
+        out.append(("bits", 1 if row[ss + sp] > 0 else 0, 1))
         while i < sp:
             if a[i] > 1:
                 out.append(("bits", a[i] & 1, 1))
@@ -1448,6 +1281,7 @@ def _tokens_ac_refine(row, ss, se, al, out, eob):
         eob.bits.extend(t & 1 for t in a[i:] if t > 1)
         if eob.run == 32767:
             eob.flush(out)
+
 
 
 def encode_progressive_jpeg(
@@ -1465,149 +1299,52 @@ def encode_progressive_jpeg(
     DC scans use the Annex K DC tables; each AC scan carries its own
     frequency-optimized table (progressive EOBn symbols aren't in the
     Annex K AC tables)."""
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, c = img.shape
-    if c not in (1, 3, 4):
-        raise ValueError(f"unsupported channel count {c}")
-    if subsampling not in ("444", "420"):
-        raise ValueError(f"subsampling must be 444 or 420, got {subsampling!r}")
-    gray = c == 1
-    qt0 = _scaled_qtable(QT_LUMA, quality)
-    qt1 = _scaled_qtable(QT_CHROMA, quality)
-    if gray:
-        planes = [img[:, :, 0].astype(np.float64)]
-        factors = [(1, 1)]
-        qtabs = [qt0]
-        tsel = [0]
-    else:
-        y, cb, cr = _to_ycbcr(img)
-        if subsampling == "420":
-            factors = [(2, 2), (1, 1), (1, 1)]
-            planes = [y, _subsample(cb, 2, 2), _subsample(cr, 2, 2)]
-        else:
-            factors = [(1, 1)] * 3
-            planes = [y, cb, cr]
-        qtabs = [qt0, qt1, qt1]
-        tsel = [0, 1, 1]
+    frame, qtabs, grids = _encode_front(img, quality, subsampling)
+    comps = frame[2]
     if scans is None:
-        scans = _PROG_SCRIPT_GRAY if gray else _PROG_SCRIPT_COLOR
-
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    mcu_cols = -(-w // (8 * hmax))
-    mcu_rows = -(-h // (8 * vmax))
-
-    # forward DCT + quantize with the IDENTICAL expression tree the
-    # baseline encoder uses (same _blockify + batched-matmul shapes — a
-    # different contraction order perturbs the float sums enough to
-    # flip a coefficient at the +0.5 rounding boundary, which broke the
-    # progressive==baseline bit-exactness), then reorder the MCU-ordered
-    # blocks onto per-component (by, bx) grids both traversals share
-    grids = []
-    for plane, (hi, vi), qtab in zip(planes, factors, qtabs):
-        blocks = _blockify(plane, mcu_rows, mcu_cols, vi, hi) - 128.0
-        F = np.matmul(np.matmul(_D, blocks), _D.T)
-        qn = F.reshape(-1, 64)[:, ZIGZAG] / qtab[ZIGZAG]
-        q = np.where(qn >= 0, np.floor(qn + 0.5), -np.floor(-qn + 0.5))
-        grids.append(
-            q.astype(np.int64)
-            .reshape(mcu_rows, mcu_cols, vi, hi, 64)
-            .transpose(0, 2, 1, 3, 4)
-            .reshape(mcu_rows * vi, mcu_cols * hi, 64)
-        )
-
-    dc_maps = [_encode_map(*HUFF_DC_LUMA), _encode_map(*HUFF_DC_CHROMA)]
-
-    out = bytearray()
-    out += b"\xff\xd8"
-    out += (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    )
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + bytes([0]) + bytes(
-        int(v) for v in qt0[ZIGZAG]
-    )
-    if not gray:
-        out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + bytes([1]) + bytes(
-            int(v) for v in qt1[ZIGZAG]
-        )
-    nc = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for i in range(nc):
-        hi, vi = factors[i]
-        sof += bytes([i + 1, hi << 4 | vi, tsel[i]])
-    out += b"\xff\xc2" + struct.pack(">H", 2 + len(sof)) + sof
-    dc_tables = [(0, 0, HUFF_DC_LUMA)]
-    if not gray:
-        dc_tables.append((0, 1, HUFF_DC_CHROMA))
-    for tc, th_, tbl in dc_tables:
-        payload = _dht_payload(tc, th_, tbl)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(payload)) + payload
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
+        scans = _PROG_SCRIPT_GRAY if len(comps) == 1 else _PROG_SCRIPT_COLOR
+    out = _jfif_header(frame, qtabs, 0xC2, restart_interval)
+    dc_maps = [_encode_map(*t) for t in _HUFF_DC]
 
     for comp_idx, ss, se, ah, al in scans:
         if ss == 0 and se != 0:
             raise ValueError("scan mixes DC and AC")
         if ss > 0 and len(comp_idx) != 1:
             raise ValueError("AC scan must be single-component")
-        interleaved = len(comp_idx) > 1
-        if interleaved:
-            n_units = mcu_rows * mcu_cols
-        else:
-            ci0 = comp_idx[0]
-            hi0, vi0 = factors[ci0]
-            cbh = -(-(-(-w * hi0 // hmax)) // 8)
-            cbv = -(-(-(-h * vi0 // vmax)) // 8)
-            n_units = cbv * cbh
+        _n, per_unit, blocks = _scan_walk(frame, comp_idx)
+        rst_blocks = restart_interval * per_unit
 
         # token pass: ("sym", symbol) / ("sym2", class, symbol) for DC /
         # ("bits", value, n) / ("rst",)
         toks: list = []
         if ss == 0:
             preds = [0] * len(comp_idx)
-            for unit in range(n_units):
-                if restart_interval and unit and unit % restart_interval == 0:
+            for b, (si, by, bx) in enumerate(blocks):
+                if rst_blocks and b and b % rst_blocks == 0:
                     toks.append(("rst",))
                     preds = [0] * len(comp_idx)
-                for si, ci in enumerate(comp_idx):
-                    hi, vi = factors[ci]
-                    g = grids[ci]
-                    if interleaved:
-                        mr, mc = divmod(unit, mcu_cols)
-                        blocks = [
-                            (mr * vi + v, mc * hi + hh)
-                            for v in range(vi)
-                            for hh in range(hi)
-                        ]
-                    else:
-                        blocks = [divmod(unit, cbh)]
-                    for by, bx in blocks:
-                        v = int(g[by, bx, 0])
-                        if ah == 0:
-                            t = v >> al  # DC point transform: arithmetic
-                            diff = t - preds[si]
-                            preds[si] = t
-                            s = abs(diff).bit_length()
-                            mag = diff + (1 << s) - 1 if diff < 0 else diff
-                            toks.append(("sym2", tsel[ci], s))
-                            if s:
-                                toks.append(("bits", mag, s))
-                        else:
-                            toks.append(("bits", (v >> al) & 1, 1))
+                ci = comp_idx[si]
+                v = grids[ci][by][bx][0]
+                if ah == 0:
+                    t = v >> al  # DC point transform: arithmetic
+                    diff = t - preds[si]
+                    preds[si] = t
+                    s = abs(diff).bit_length()
+                    mag = diff + (1 << s) - 1 if diff < 0 else diff
+                    toks.append(("sym2", comps[ci][3], s))
+                    if s:
+                        toks.append(("bits", mag, s))
+                else:
+                    toks.append(("bits", (v >> al) & 1, 1))
         else:
-            ci = comp_idx[0]
-            g = grids[ci]
+            g = grids[comp_idx[0]]
             eob = _EobState()
             block_fn = _tokens_ac_first if ah == 0 else _tokens_ac_refine
-            for unit in range(n_units):
-                if restart_interval and unit and unit % restart_interval == 0:
+            for b, (_si, by, bx) in enumerate(blocks):
+                if rst_blocks and b and b % rst_blocks == 0:
                     eob.flush(toks)
                     toks.append(("rst",))
-                by, bx = divmod(unit, cbh)
-                block_fn(g[by, bx], ss, se, al, toks, eob)
+                block_fn(g[by][bx], ss, se, al, toks, eob)
             eob.flush(toks)
 
         # table pass (AC scans carry a scan-local optimized table)
@@ -1617,27 +1354,22 @@ def encode_progressive_jpeg(
                 if t[0] == "sym":
                     freqs[t[1]] = freqs.get(t[1], 0) + 1
             tbl = _build_huffman(freqs) if freqs else ([1] + [0] * 15, [0])
-            payload = _dht_payload(1, 0, tbl)
-            out += b"\xff\xc4" + struct.pack(">H", 2 + len(payload)) + payload
+            out += _dht_segment(1, 0, tbl)
             ac_map = _encode_map(*tbl)
         else:
             ac_map = None
 
         sos = bytes([len(comp_idx)])
         for ci in comp_idx:
-            td = tsel[ci] if ss == 0 and ah == 0 else 0
-            ta = 0 if ss > 0 else 0
-            sos += bytes([ci + 1, td << 4 | ta])
-        sos += bytes([ss, se, ah << 4 | al])
-        out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
+            td = comps[ci][3] if ss == 0 and ah == 0 else 0
+            sos += bytes([ci + 1, td << 4])  # AC table 0: the scan's own
+        out += _segment(0xDA, sos + bytes([ss, se, ah << 4 | al]))
 
         bw = _BitWriter()
         rst = 0
         for t in toks:
             if t[0] == "rst":
-                bw.flush()
-                out += bw.buf
-                bw = _BitWriter()
+                bw.drain(out)
                 out += bytes([0xFF, 0xD0 + rst])
                 rst = (rst + 1) & 7
             elif t[0] == "sym":
@@ -1648,8 +1380,7 @@ def encode_progressive_jpeg(
                 bw.write(code, ln)
             else:
                 bw.write(t[1], t[2])
-        bw.flush()
-        out += bw.buf
+        bw.drain(out)
 
     out += b"\xff\xd9"
     return bytes(out)

@@ -3,18 +3,10 @@ false-negative-free guarantee, exact-size batches, hand-worked tiny
 case, and parity with a single-window reference enumeration."""
 
 import numpy as np
-import pytest
 
 from osm_render_spark.operators.contrastive import contrastive_batches
 
 RNG = np.random.default_rng(99)
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from osm_render_spark.session import get_spark
-
-    yield get_spark("test_contrastive", cpus=4, shuffle_partitions=4)
 
 
 def _run(spark, rows, **kw):

@@ -594,3 +594,108 @@ def test_subset_interleaved_partial_scan_rejected_by_name():
     )
     with pytest.raises(NotImplementedError, match="subset-interleaved"):
         decode_jpeg(jpg)
+
+
+def _pin_images(h, w, k):
+    """Deterministic smooth-plus-noise test image (noise makes q100
+    carry large AC coefficients and long ZRL runs)."""
+    rng = np.random.default_rng(1000 * h + w + k)
+    noise = rng.integers(-40, 41, (h, w, 3))
+    rgb = np.clip(_smooth(w, h, k).astype(np.int64) + noise, 0, 255)
+    rgb = rgb.astype(np.uint8)
+    alpha = rng.integers(0, 256, (h, w, 1)).astype(np.uint8)
+    return {1: rgb[:, :, 0], 3: rgb, 4: np.concatenate([rgb, alpha], axis=2)}
+
+
+_PIN_PREFIX = {
+    1: [((0,), 0, 0, 0, 1), ((0,), 1, 63, 0, 2)],
+    3: [
+        ((0, 1, 2), 0, 0, 0, 1),
+        ((0,), 1, 5, 0, 2),
+        ((1,), 1, 63, 0, 1),
+        ((2,), 1, 63, 0, 1),
+    ],
+}
+
+
+def test_jpeg_encoder_bytes_pinned():
+    """Encoder output over gray/RGB/RGBA × 4:4:4/4:2:0 × q × restart
+    interval × image size, for the single-scan and multi-scan baseline
+    writers and the progressive writer (default and a prefix script),
+    pinned (sha256 prefix of the concatenated streams) so refactors of
+    the shared front-end and scan writers cannot change written bytes."""
+    import hashlib
+
+    digests = {}
+    for c in (1, 3, 4):
+        hs = {k: hashlib.sha256() for k in ("one", "multi", "prog", "prefix")}
+        for (h, w) in ((17, 23), (48, 48)):
+            img = _pin_images(h, w, c)[c]
+            for sub in ("444", "420"):
+                for q in (10, 50, 90, 100):
+                    for dri in (0, 3):
+                        for kind, data in (
+                            ("one", encode_jpeg(img, q, sub, dri)),
+                            ("multi", encode_jpeg(img, q, sub, dri, True)),
+                            ("prog", encode_progressive_jpeg(
+                                img, q, sub, restart_interval=dri)),
+                            ("prefix", encode_progressive_jpeg(
+                                img, q, sub, _PIN_PREFIX[min(c, 3)], dri)),
+                        ):
+                            hs[kind].update(struct.pack(">I", len(data)))
+                            hs[kind].update(data)
+        for kind, hsh in hs.items():
+            digests[(c, kind)] = hsh.hexdigest()[:16]
+    assert digests == {
+        (1, "one"): "2cedebb64db32fae",
+        (1, "multi"): "2cedebb64db32fae",  # one component: one scan
+        (1, "prog"): "b63a80109a44dc93",
+        (1, "prefix"): "fec03d53a1ac7d9b",
+        (3, "one"): "890b4ce9200a792b",
+        (3, "multi"): "e8251f003e9c43ae",
+        (3, "prog"): "a69420311f93966a",
+        (3, "prefix"): "36882728cccaac41",
+        (4, "one"): "405b1a4d4a2f4b1a",
+        (4, "multi"): "04e722d8f25f47c8",
+        (4, "prog"): "ed1380227abb525b",
+        (4, "prefix"): "6dee60626736e458",
+    }
+
+
+@pytest.mark.parametrize(
+    "encode,sof",
+    [(encode_jpeg, 0xC0), (encode_progressive_jpeg, 0xC2)],
+    ids=["SOF0", "SOF2"],
+)
+def test_one_component_scan_is_non_interleaved(encode, sof):
+    """T.81 A.2.2: a scan naming one component is non-interleaved, so it
+    walks the component's own block grid whatever its sampling factors.
+    A gray frame that declares 2x2 sampling (legal: hmax = vmax = 2)
+    codes the same 3x3 blocks as the 1x1 frame, not 2x2 MCUs of four
+    blocks each."""
+    data = encode(_smooth(23, 17)[:, :, 0], 85)
+    at = data.index(bytes([0xFF, sof])) + 11  # SOFn, Lf, P, Y, X, Nf, C1
+    assert data[at] == 0x11
+    patched = data[:at] + b"\x22" + data[at + 1 :]
+    assert (decode_jpeg(patched) == decode_jpeg(data)).all()
+
+
+@pytest.mark.parametrize("defect", ["table", "component"])
+@pytest.mark.parametrize("kind", ["baseline", "multi_scan", "progressive"])
+def test_malformed_scan_header_raises_value_error(kind, defect):
+    """A scan whose Huffman table selector names an undefined table, or
+    whose component id is not in the frame, is malformed input: the
+    codec raises ValueError naming it (never KeyError)."""
+    img = _smooth(16, 16)
+    data = {
+        "baseline": lambda: encode_jpeg(img, 85),
+        "multi_scan": lambda: encode_jpeg(img, 85, multi_scan=True),
+        "progressive": lambda: encode_progressive_jpeg(img, 85),
+    }[kind]()
+    sos = data.index(b"\xff\xda")  # first scan: FF DA, Ls, Ns, Cs1, TdTa1
+    at, new, match = {
+        "table": (sos + 6, 0x33, "Huffman table 3"),
+        "component": (sos + 5, 9, "component 9"),
+    }[defect]
+    with pytest.raises(ValueError, match=match):
+        decode_jpeg(data[:at] + bytes([new]) + data[at + 1 :])

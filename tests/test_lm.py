@@ -2,16 +2,7 @@
 scores on a tiny corpus (both branches + multiplicities + the
 OOV-unigram zero), and a Python-free plan pin."""
 
-import pytest
-
 from osm_render_spark.operators.lm import bigram_lm_scores
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from osm_render_spark.session import get_spark
-
-    yield get_spark("test_lm", cpus=4, shuffle_partitions=4)
 
 
 def _scores(spark, docs, train_filter="doc_id % 2 = 0"):

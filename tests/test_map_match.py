@@ -4,18 +4,10 @@ random data incl. NEGATIVE coordinates, cell-boundary candidates, and
 plan pins (no Python, bounded exchanges)."""
 
 import numpy as np
-import pytest
 
 from osm_render_spark.operators.map_match import snap_points_to_segments
 
 RNG = np.random.default_rng(8)
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from osm_render_spark.session import get_spark
-
-    yield get_spark("test_map_match", cpus=4, shuffle_partitions=4)
 
 
 def _run(spark, pts, segs, **kw):

@@ -39,10 +39,7 @@ def test_roundtrip_decode():
         assert (rx, ry) == (tx, ty)
 
 
-def test_sql_matches_python_twin():
-    from osm_render_spark.session import get_spark
-
-    spark = get_spark("test_quadkey", cpus=2, shuffle_partitions=2)
+def test_sql_matches_python_twin(spark):
     z = 6
     df = spark.range(500).selectExpr(
         f"CAST(id % {1 << z} AS BIGINT) AS tx",

@@ -27,14 +27,6 @@ RNG = np.random.default_rng(46)
 T = 64
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from osm_render_spark.session import get_spark
-
-    s = get_spark("test_terrain", cpus=4, shuffle_partitions=4)
-    yield s
-
-
 def _mosaic(h=128, w=192):
     return RNG.integers(-500, 4000, (h, w)).astype(np.int32)
 

@@ -13,13 +13,6 @@ RNG = np.random.default_rng(17)
 T = 64
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from osm_render_spark.session import get_spark
-
-    yield get_spark("test_zonal", cpus=4, shuffle_partitions=4)
-
-
 def _dem():
     return RNG.integers(-100, 100, (128, 192)).astype(np.int32)
 
