@@ -8,6 +8,7 @@ without a 8-minute full run. Usage:
     python bench_extra.py snap viterbi
     python bench_extra.py all
     python bench_extra.py jpeg     # driver-only: starts no Spark session
+    python bench_extra.py groups   # driver-only: the group run splitter
 """
 
 from __future__ import annotations
@@ -215,14 +216,69 @@ def bench_jpeg(spark) -> dict:
     return out
 
 
+def group_batches(n_groups: int, group_rows: int, list_col: bool) -> list:
+    """Key-sorted pandas batches of 4,096 rows (the session's Arrow batch
+    size): ``n_groups`` keys of ``group_rows`` rows each, optionally with a
+    list column (an object column of small arrays, like geometry)."""
+    import numpy as np
+    import pandas as pd
+
+    n = n_groups * group_rows
+    cols = {
+        "key": np.repeat(np.arange(n_groups, dtype=np.int64), group_rows),
+        "v": np.arange(n, dtype=np.int64),
+    }
+    if list_col:
+        xs = np.empty(n, dtype=object)
+        xs[:] = [np.arange(4, dtype=np.float64)] * n
+        cols["xs"] = xs
+    pdf = pd.DataFrame(cols)
+    return [
+        pdf.iloc[i : i + 4096].reset_index(drop=True)
+        for i in range(0, n, 4096)
+    ]
+
+
+GROUP_CASES = {
+    "groups_25k_x4_list": (25_000, 4, True),
+    "groups_1x400k": (1, 400_000, False),
+    "groups_1x800k": (1, 800_000, False),
+}
+
+
+def bench_groups(spark) -> dict:
+    """Driver-only (``spark`` is unused): best-of-3 ms for
+    ``raster/ops.split_sorted_runs`` to hand every group of the
+    GROUP_CASES inputs to a trivial kernel, plus µs per group."""
+    from osm_render_spark.raster.ops import split_sorted_runs
+
+    out = {}
+    for name, (n_groups, group_rows, list_col) in GROUP_CASES.items():
+        batches = group_batches(n_groups, group_rows, list_col)
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            seen = sum(
+                len(g["v"])
+                for runs in split_sorted_runs(batches, "key")
+                for g in runs
+            )
+            best = min(best, time.perf_counter() - t0)
+        assert seen == n_groups * group_rows
+        out[f"{name}_ms"] = round(1000.0 * best, 2)
+        out[f"{name}_us_per_group"] = round(1e6 * best / n_groups, 2)
+    return out
+
+
 SECTIONS = {
     "snap": bench_snap,
     "viterbi": bench_viterbi,
     "pipeline": bench_pipeline,
     "geotiff": bench_geotiff,
     "jpeg": bench_jpeg,
+    "groups": bench_groups,
 }
-DRIVER_ONLY = {"jpeg"}  # sections that never touch the session
+DRIVER_ONLY = {"jpeg", "groups"}  # sections that never touch the session
 
 
 def main() -> int:

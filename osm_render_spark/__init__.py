@@ -11,7 +11,8 @@ Layout:
   sources     — table catalog over the driver's parquet testdata
   functions   — columnar expression builders (projection, tiles, predicates)
   operators   — distributed operators (spatial join, PIP, kNN, dedup, ...)
-  raster      — numpy raster kernels behind applyInPandas/mapInArrow
+  raster      — numpy raster kernels behind mapInPandas, and the one
+                sorted-run group primitive (raster/ops.py)
   fixtures    — deterministic synthetic scene/image generators (FIXTURES.md)
   plans       — checkpoint / lineage / resume layer
 """

@@ -23,8 +23,9 @@ Semantics re-expressed from the survey (not translated):
   reference just logs "Drats!" (OsmRender.m:281).
 
 Distribution: the walk is inherently sequential per tile but tiles are
-independent — the Spark form is a per-tile ``applyInPandas`` group kernel
-(path counts per tile are small; SURVEY.md A3/A4).
+independent — the Spark form is a per-tile kernel on the engine's
+sorted-run group primitive (path counts per tile are small; SURVEY.md
+A3/A4).
 """
 
 from __future__ import annotations
@@ -182,25 +183,25 @@ def merge_coast_df(paths_df, rect: Rect):
     tile (sequential within a tile, parallel across tiles — SURVEY A3/A4).
     Input paths within a tile are processed in path_id order (the
     deterministic stand-in for the reference's file order)."""
-    import pandas as pd
+    from ..raster.ops import buffered_group_flatmap  # ops imports this module
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("path_id", kind="mergesort")
+    def merge_group(g) -> list[tuple]:
+        order = np.argsort(g["path_id"], kind="stable")
         paths = [
             np.column_stack([np.asarray(xs), np.asarray(ys)])
-            for xs, ys in zip(pdf["xs"], pdf["ys"])
+            for xs, ys in zip(g["xs"][order], g["ys"][order])
         ]
         polys = merge_coast_paths(paths, rect)
-        tile = pdf["tile_key"].iloc[0]
-        return pd.DataFrame(
-            [
-                (tile, i, [float(x) for x in p[:, 0]], [float(y) for y in p[:, 1]])
-                for i, p in enumerate(polys)
-            ],
-            columns=["tile_key", "poly_id", "xs", "ys"],
-        )
+        tile = g["tile_key"][0]
+        return [
+            (tile, i, [float(x) for x in p[:, 0]], [float(y) for y in p[:, 1]])
+            for i, p in enumerate(polys)
+        ]
 
-    return paths_df.groupBy("tile_key").applyInPandas(
-        kernel,
-        schema="tile_key long, poly_id long, xs array<double>, ys array<double>",
+    return buffered_group_flatmap(
+        paths_df,
+        "tile_key",
+        merge_group,
+        ["tile_key", "poly_id", "xs", "ys"],
+        "tile_key long, poly_id long, xs array<double>, ys array<double>",
     )

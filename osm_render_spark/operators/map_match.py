@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import arrow_stage_partitions
+from ..raster.ops import buffered_group_flatmap
 
 # shifts coordinates non-negative so integer DIV == floor division
 # (Spark DIV truncates toward zero); bounds the exact-arithmetic proof
@@ -265,11 +265,10 @@ def match_trajectories(
     the same deterministic top-k set the old row_number window
     produced, without the window sort, and one row per POINT crosses
     the shuffle instead of top_k rows) → broadcast n_seq join → the
-    Viterbi DP in a single streaming mapInPandas kernel over
-    traj_id-sorted partitions (many trajectories per Arrow batch). The
-    old one-applyInPandas-group-per-trajectory shape paid ~4 ms of
-    per-group overhead, which at 25k bench trajectories was ~100 s of
-    pure overhead (guide §4.5); the rows are identical."""
+    Viterbi DP as the group kernel of the engine's sorted-run primitive
+    (raster/ops.buffered_group_flatmap: many trajectories per Arrow
+    batch, ~1.2 µs of per-group slicing instead of ~4 ms per
+    applyInPandas group)."""
     cand = _snap_candidates(
         points.selectExpr("traj_id", "seq", "x", "y"),
         segments,
@@ -292,11 +291,10 @@ def match_trajectories(
     )
     full = topk.join(F.broadcast(n_points), "traj_id")
 
-    def viterbi_rows(
-        traj: int, n_seq: int, group: list[tuple]
-    ) -> list[tuple]:
-        if len(group) != n_seq:  # some point had zero candidates
+    def viterbi_rows(g) -> list[tuple]:
+        if len(g["seq"]) != int(g["n_seq"][0]):  # a point had no candidate
             return []
+        traj = int(g["traj_id"][0])
         # per-seq candidate lists (wid, sidx, d2) — cands arrive sorted
         # by (d2, way, seg); the DP takes min over ALL (prev, cand)
         # combinations by (cost, prefix), so iteration order is free
@@ -308,55 +306,19 @@ def match_trajectories(
                     for c in cl
                 ],
             )
-            for s, cl in group
+            for s, cl in zip(g["seq"], g["cands"])
         )
         cost, path = _viterbi_path([c for _s, c in by_seq], switch_penalty)
         return [
             (traj, s, *cands[i], cost) for (s, cands), i in zip(by_seq, path)
         ]
 
-    # single-pass streaming kernel over traj_id-sorted partitions:
-    # groups are consecutive, so one python zip-iteration flushes each
-    # trajectory's buffered rows on key change — no per-group pandas
-    # sub-frame (~0.4 ms each, the residual cost of the generic
-    # buffered_group_flatmap measured at 25k groups; guide §4.2: keep
-    # the per-row python to plain tuples)
-    import pandas as pd
-
-    n_part = arrow_stage_partitions(full.sparkSession)
-    arranged = full.repartition(n_part, "traj_id").sortWithinPartitions(
-        "traj_id"
-    )
-    out_cols = ["traj_id", "seq", "way_id", "seg_idx", "d2_milli",
-                "total_cost"]
-
-    def kernel(batches):
-        cur_key = None
-        cur_n = 0
-        buf: list[tuple] = []
-        out: list[tuple] = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for traj, s, cl, ns in zip(
-                pdf["traj_id"], pdf["seq"], pdf["cands"], pdf["n_seq"]
-            ):
-                if traj != cur_key:
-                    if cur_key is not None:
-                        out.extend(viterbi_rows(int(cur_key), cur_n, buf))
-                    cur_key, cur_n, buf = traj, int(ns), []
-                buf.append((s, cl))
-            if len(out) > 8192:
-                yield pd.DataFrame(out, columns=out_cols)
-                out = []
-        if cur_key is not None:
-            out.extend(viterbi_rows(int(cur_key), cur_n, buf))
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return arranged.mapInPandas(
-        kernel,
-        schema=(
+    return buffered_group_flatmap(
+        full,
+        "traj_id",
+        viterbi_rows,
+        ["traj_id", "seq", "way_id", "seg_idx", "d2_milli", "total_cost"],
+        (
             "traj_id long, seq long, way_id long, seg_idx long, "
             "d2_milli long, total_cost long"
         ),

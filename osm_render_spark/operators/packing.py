@@ -4,12 +4,13 @@ into fixed-budget training sequences (token/char budget per sequence).
 Scale shape (10^12 docs): greedy packing is inherently sequential, so
 the parallel unit is a deterministic BUCKET — an explicit bucket column,
 or ``n_buckets`` hash groups — and each bucket packs independently
-inside an applyInPandas kernel; sequence ids are (bucket, seq_idx) pairs
-so no cross-bucket coordination exists. ``n_buckets`` is the
+inside a group kernel on the engine's sorted-run primitive
+(``raster/ops.buffered_group_flatmap``); sequence ids are (bucket,
+seq_idx) pairs so no cross-bucket coordination exists. ``n_buckets`` is the
 packing-quality dial: more buckets = smaller groups and slightly worse
 packing (greedy never sees docs in other buckets) — exactly the
 tradeoff production packers make. It does NOT set the partition count:
-the one shuffle in front of the kernel takes an EXPLICIT count from
+the primitive's one shuffle takes an EXPLICIT count from
 ``session.arrow_stage_partitions`` (one Python task per core; AQE would
 coalesce a small shuffle to one partition and serialize every bucket
 kernel), and a partition holds as many buckets as hash to it. Within a
@@ -17,8 +18,8 @@ bucket the order is (id) ascending, so output is reproducible under any
 partitioning, and a single document larger than the budget gets its own
 sequence (never silently dropped or truncated).
 
-applyInPandas materializes WHOLE groups (CLAUDE.md), so bucket size
-bounds executor memory: ``max_bucket_rows`` (default 2M) counts buckets
+The group kernel sees WHOLE buckets (CLAUDE.md), so bucket size bounds
+executor memory: ``max_bucket_rows`` (default 2M) counts buckets
 JVM-side at call time and raises with the worst offender before any
 kernel can OOM — size n_buckets so corpus/n_buckets stays under it, or
 pass None to skip the (one-action) guard on trusted inputs.
@@ -33,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import arrow_stage_partitions
+from ..raster.ops import buffered_group_flatmap
 
 
 def pack_sequences(
@@ -54,7 +55,7 @@ def pack_sequences(
     pass an explicit column to control co-packing (e.g. same-language
     buckets) or to share bucketing with an oracle. NULL sizes raise a
     clear validation error naming the offending ids."""
-    import pandas as pd
+    import numpy as np
 
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
@@ -68,8 +69,8 @@ def pack_sequences(
         bucket_expr.alias("_bucket"),
     )
     if max_bucket_rows is not None:
-        # JVM-side guard BEFORE the kernel: applyInPandas materializes
-        # the whole group, so an oversized bucket OOMs the executor —
+        # JVM-side guard BEFORE the kernel: the group kernel sees the
+        # whole bucket at once, so an oversized bucket OOMs the executor —
         # fail loudly at call time instead (one extra aggregation)
         worst = (
             work.groupBy("_bucket")
@@ -88,40 +89,32 @@ def pack_sequences(
     id_t = work.schema["_id"].dataType.simpleString()
     bucket_t = work.schema["_bucket"].dataType.simpleString()
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["_size"].isna().any():
-            bad = pdf.loc[pdf["_size"].isna(), "_id"].head(5).tolist()
+    def pack(g) -> list[tuple]:
+        sizes = g["_size"]
+        null = np.isnan(sizes.astype(np.float64))
+        if null.any():
+            bad = g["_id"][null][:5].tolist()
             raise ValueError(f"NULL size for ids {bad}: filter or impute first")
-        pdf = pdf.sort_values("_id").reset_index(drop=True)
-        seq_idx, pos, fill = [], [], []
+        order = np.argsort(g["_id"], kind="stable")
+        bucket = g["_bucket"][0]
+        out = []
         cur_seq, cur_pos, cur_fill = 0, 0, 0
-        for s in pdf["_size"]:
+        for doc, s in zip(g["_id"][order].tolist(), sizes[order].tolist()):
             s = int(s)
             if cur_pos > 0 and cur_fill + s > budget:
                 cur_seq += 1
                 cur_pos, cur_fill = 0, 0
-            seq_idx.append(cur_seq)
-            pos.append(cur_pos)
             cur_fill += s
-            fill.append(cur_fill)
+            out.append((doc, bucket, cur_seq, cur_pos, cur_fill))
             cur_pos += 1
-        return pd.DataFrame(
-            {
-                "_id": pdf["_id"],
-                "_bucket": pdf["_bucket"],
-                "seq_idx": seq_idx,
-                "pos_in_seq": pos,
-                "seq_fill": fill,
-            }
-        )
+        return out
 
-    # explicit partition count: rows here are pointers to whole-group
-    # kernel work, exactly the case AQE's small-shuffle coalescing to
-    # ONE partition would serialize
-    n_parts = arrow_stage_partitions(df.sparkSession)
-    out = work.repartition(n_parts, "_bucket").groupBy("_bucket").applyInPandas(
+    out = buffered_group_flatmap(
+        work,
+        "_bucket",
         pack,
-        schema=(
+        ["_id", "_bucket", "seq_idx", "pos_in_seq", "seq_fill"],
+        (
             f"_id {id_t}, _bucket {bucket_t}, "
             f"seq_idx long, pos_in_seq long, seq_fill long"
         ),

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..raster.ops import buffered_group_flatmap
+
 N_PLANES = 8
 PLANE_PRIMES = (3, 7, 11, 13, 17, 19, 23, 29)
 # independent hyperplane sets per LSH band (band 0 = the original set, so
@@ -197,8 +199,8 @@ def cosine_near_dups(
       candidate sets stay bucket-bounded). Pairs found by several bands
       are deduplicated by a (a, b) group-by.
     * **capped**: bucket populations are counted JVM-side FIRST and
-      buckets over ``bucket_cap`` rows are dropped BEFORE applyInPandas
-      materializes them — peak executor memory is bounded by
+      buckets over ``bucket_cap`` rows are dropped BEFORE the group
+      kernel materializes them — peak executor memory is bounded by
       bucket_cap × dim regardless of corpus skew. Dropped buckets are
       accounted: with ``return_stats=True`` returns (pairs, dropped)
       where dropped = (band, bucket, n_rows) of every capped bucket.
@@ -213,24 +215,23 @@ def cosine_near_dups(
     mass where "near-dup pairs" are quadratically many anyway).
     """
     import numpy as np
-    import pandas as pd
 
     bucketed = banded_lsh_buckets(embeddings, n_bands, id_col)
     sizes = bucketed.groupBy("band", "bucket").agg(F.count("*").alias("n_rows"))
     dropped = sizes.where(F.col("n_rows") > bucket_cap)
     kept = bucketed.join(
         F.broadcast(dropped.select("band", "bucket")), ["band", "bucket"], "left_anti"
+    ).withColumn(
+        # one long key per (band, bucket): bucket ids are < 2^N_PLANES
+        "_bkey", F.shiftleft(F.col("band").cast("long"), 32) + F.col("bucket")
     )
 
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"a": pd.Series(dtype="int64"), "b": pd.Series(dtype="int64"),
-                 "cos": pd.Series(dtype="float64")}
-            )
-        pdf = pdf.sort_values("vid", kind="mergesort")
-        ids = pdf["vid"].to_numpy()
-        m = np.array(list(pdf["embedding"]), dtype=np.float64)
+    def pairs_group(g) -> list[tuple]:
+        if len(g["vid"]) < 2:
+            return []
+        order = np.argsort(g["vid"], kind="stable")
+        ids = g["vid"][order]
+        m = np.array(list(g["embedding"][order]), dtype=np.float64)
         norms = np.linalg.norm(m, axis=1)
         norms[norms == 0] = 1.0  # zero-norm row → cos ≡ 0 < threshold
         n = len(ids)
@@ -248,16 +249,16 @@ def cosine_near_dups(
                 out_a.append(ids[gi[sel]])
                 out_b.append(ids[gj[sel]])
                 out_c.append(cos[ii[sel], jj[sel]])
-        return pd.DataFrame(
-            {
-                "a": np.concatenate(out_a) if out_a else np.array([], dtype=np.int64),
-                "b": np.concatenate(out_b) if out_b else np.array([], dtype=np.int64),
-                "cos": np.concatenate(out_c) if out_c else np.array([], dtype=np.float64),
-            }
+        return list(
+            zip(
+                np.concatenate(out_a).tolist(),
+                np.concatenate(out_b).tolist(),
+                np.concatenate(out_c).tolist(),
+            )
         )
 
-    per_band = kept.groupBy("band", "bucket").applyInPandas(
-        kernel, schema="a long, b long, cos double"
+    per_band = buffered_group_flatmap(
+        kept, "_bkey", pairs_group, ["a", "b", "cos"], "a long, b long, cos double"
     )
     # a pair colliding in several bands carries the same cos value (a pure
     # function of the pair) — max() is the dedup, not a choice
@@ -288,7 +289,7 @@ def semantic_dedup(
        broadcast Arrow kernel — NO shuffle of the corpus for
        assignment, exactly the paper's "cluster then dedup within
        clusters" trick that avoids any corpus-wide pair surface.
-    2. **within-cluster near-dups**: one applyInPandas per cluster,
+    2. **within-cluster near-dups**: one group kernel per cluster,
        blocked ≤ block² cosine tiles (the cosine_near_dups kernel
        shape) — never an all-pairs m @ m.T over the cluster.
     3. **canonical keep**: a vector is dropped iff its cluster contains
@@ -299,19 +300,18 @@ def semantic_dedup(
 
     Returns (``id_col``, cluster_id, keep) for every input vector.
     Clusters larger than ``cluster_cap`` are NOT materialized into the
-    kernel (applyInPandas would buffer the whole group — CLAUDE.md):
+    kernel (the group kernel buffers the whole group — CLAUDE.md):
     their rows pass through with keep=true and the cluster is reported
     via ``return_stats=True`` as (cluster_id, n_rows) — an over-cap
     cluster means the quantizer is too coarse; raise n_clusters (the
     paper uses ~50k clusters at LAION scale).
 
     100 TB shape: two exchanges (the cluster-size count and the
-    per-cluster applyInPandas), both on the narrow (id, embedding)
+    per-cluster group kernel), both on the narrow (id, embedding)
     projection; centroids are broadcast; the quadratic surface is
     bounded by cluster_cap² per task and blocked into block² tiles.
     """
     import numpy as np
-    import pandas as pd
 
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
@@ -324,11 +324,11 @@ def semantic_dedup(
         F.broadcast(over_cap.select("list_id")), "list_id", "left_anti"
     )
 
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        lid = int(key[0])
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        ids = pdf[id_col].to_numpy()
-        m = np.array(list(pdf["embedding"]), dtype=np.float64)
+    def dedup_group(g) -> list[tuple]:
+        lid = int(g["list_id"][0])
+        order = np.argsort(g[id_col], kind="stable")
+        ids = g[id_col][order]
+        m = np.array(list(g["embedding"][order]), dtype=np.float64)
         norms = np.linalg.norm(m, axis=1)
         norms[norms == 0] = 1.0  # zero-norm row → cos ≡ 0, never a dup
         n = len(ids)
@@ -343,12 +343,14 @@ def semantic_dedup(
                 ii, jj = np.nonzero(cos >= threshold)
                 gi, gj = ii + i0, jj + j0
                 drop[gj[gi < gj]] = True  # some smaller-id near-dup exists
-        return pd.DataFrame(
-            {id_col: ids, "cluster_id": lid, "keep": ~drop}
-        )
+        return [(i, lid, k) for i, k in zip(ids.tolist(), (~drop).tolist())]
 
-    decided = in_cap.groupBy("list_id").applyInPandas(
-        kernel, schema=f"{id_col} {id_t}, cluster_id long, keep boolean"
+    decided = buffered_group_flatmap(
+        in_cap,
+        "list_id",
+        dedup_group,
+        [id_col, "cluster_id", "keep"],
+        f"{id_col} {id_t}, cluster_id long, keep boolean",
     )
     passed = assigned.join(
         F.broadcast(over_cap.select("list_id")), "list_id", "left_semi"

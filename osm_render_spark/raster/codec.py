@@ -7,10 +7,7 @@ five standard filters.
 
 JPEG: REAL baseline codec in raster/jpeg.py (pure numpy Huffman + DCT —
 see that module's docstring for the supported profile). fmt='jpeg' rows
-encode/decode through it; the earlier deterministic stand-in
-(`encode_fake_jpeg`/`decode_fake_jpeg`, FJPG magic) is kept only so
-blobs written by older fixtures still decode — `decode_image` dispatches
-on the leading bytes.
+encode/decode through it; a blob without the SOI marker raises.
 """
 
 from __future__ import annotations
@@ -109,33 +106,6 @@ def decode_png(data: bytes) -> np.ndarray:
     return img.reshape(h, w, c)
 
 
-# ---------------------------------------------------------------------------
-# deterministic lossy stand-in ("jpeg" rows)
-# ---------------------------------------------------------------------------
-
-_FAKE_JPEG_MAGIC = b"FJPG"
-_QUANT = 4  # 2 bits of channel loss → PSNR ≈ 44 dB on typical content
-
-
-def encode_fake_jpeg(img: np.ndarray) -> bytes:
-    """DETERMINISTIC LOSSY STAND-IN for JPEG (no libjpeg in container)."""
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, c = img.shape
-    q = (img.astype(np.uint16) // _QUANT).astype(np.uint8)
-    header = _FAKE_JPEG_MAGIC + struct.pack(">IIB", w, h, c)
-    return header + zlib.compress(q.tobytes(), 6)
-
-
-def decode_fake_jpeg(data: bytes) -> np.ndarray:
-    if data[:4] != _FAKE_JPEG_MAGIC:
-        raise ValueError("not a fake-jpeg blob")
-    w, h, c = struct.unpack(">IIB", data[4:13])
-    q = np.frombuffer(zlib.decompress(data[13:]), dtype=np.uint8).reshape(h, w, c)
-    # dequantize to bin centers (deterministic)
-    return (q.astype(np.uint16) * _QUANT + _QUANT // 2).clip(0, 255).astype(np.uint8)
-
-
 def encode_image(img: np.ndarray, fmt: str) -> bytes:
     if fmt == "png":
         return encode_png(img)
@@ -157,11 +127,9 @@ def decode_image(data: bytes, fmt: str) -> np.ndarray:
     if fmt == "png":
         return decode_png(data)
     if fmt == "jpeg":
-        if data[:2] == b"\xff\xd8":
-            from .jpeg import decode_jpeg
+        from .jpeg import decode_jpeg
 
-            return decode_jpeg(bytes(data))
-        return decode_fake_jpeg(data)  # legacy FJPG blobs
+        return decode_jpeg(bytes(data))
     if fmt == "gif":
         from .gif import decode_gif
 

@@ -26,7 +26,6 @@ points, so DuckDB states it without building histograms.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -38,7 +37,7 @@ from ..functions.projection import (
     tile_y_sql,
 )
 from .codec import encode_png
-from .ops import buffered_group_map
+from .ops import buffered_group_flatmap
 
 
 def pixel_bin_sql(lon: str, lat: str, zoom: int, tile_px: int) -> str:
@@ -85,9 +84,9 @@ def density_tiles(
         F.count(F.lit(1)).alias("n")
     )
 
-    def render_group(g: pd.DataFrame):
-        bins = g["bin"].to_numpy(dtype=np.int64)
-        ns = g["n"].to_numpy(dtype=np.int64)
+    def render_group(g) -> list[tuple]:
+        bins = np.asarray(g["bin"], dtype=np.int64)
+        ns = np.asarray(g["n"], dtype=np.int64)
         grid = np.zeros(tile_px * tile_px, dtype=np.int64)
         grid[bins] = ns
         max_bin = int(ns.max())
@@ -102,17 +101,17 @@ def density_tiles(
             .reshape(tile_px, tile_px)
             .T
         )
-        return (
-            int(g["tile_key"].iloc[0]),
-            int(g["tile_x"].iloc[0]),
-            int(g["tile_y"].iloc[0]),
+        return [(
+            int(g["tile_key"][0]),
+            int(g["tile_x"][0]),
+            int(g["tile_y"][0]),
             encode_png(img),
             int(ns.sum()),
             max_bin,
             int((bins * ns).sum()),
-        )
+        )]
 
-    return buffered_group_map(
+    return buffered_group_flatmap(
         counts,
         "tile_key",
         render_group,

@@ -36,12 +36,11 @@ coord_digest) ride along for the DuckDB oracle.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.pbf import _encode_varint, _len_field, _varint_field, scan_fields
-from .ops import buffered_group_map
+from .ops import buffered_group_flatmap
 
 MOVE_TO, LINE_TO, CLOSE_PATH = 1, 2, 7
 TYPE_POINT, TYPE_LINESTRING, TYPE_POLYGON = 1, 2, 3
@@ -293,11 +292,14 @@ def vector_tiles(
         ).alias("qy"),
     )
 
-    def render_group(g: pd.DataFrame):
-        g = g.sort_values("way_id", kind="mergesort")
+    def render_group(g) -> list[tuple]:
+        order = np.argsort(g["way_id"], kind="stable")
         feats = []
         digest = 0
-        for wid, kind, qx, qy in zip(g["way_id"], g["kind"], g["qx"], g["qy"]):
+        for wid, kind, qx, qy in zip(
+            g["way_id"][order], g["kind"][order], g["qx"][order],
+            g["qy"][order],
+        ):
             feats.append(
                 {
                     "id": int(wid),
@@ -312,16 +314,16 @@ def vector_tiles(
                  + np.asarray(qy, dtype=np.int64)).sum()
             )
         blob = encode_mvt({layer: feats}, extent)
-        return (
-            int(g["tile_key"].iloc[0]),
-            int(g["tile_x"].iloc[0]),
-            int(g["tile_y"].iloc[0]),
+        return [(
+            int(g["tile_key"][0]),
+            int(g["tile_x"][0]),
+            int(g["tile_y"][0]),
             blob,
             len(feats),
             digest,
-        )
+        )]
 
-    return buffered_group_map(
+    return buffered_group_flatmap(
         local,
         "tile_key",
         render_group,

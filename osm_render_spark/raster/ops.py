@@ -1,10 +1,11 @@
 """Raster↔vector Spark operators (SURVEY.md J8-J11, A5/A6, R1-R12, M5).
 
 All imperative pixel work lives in numpy kernels invoked from
-``applyInPandas`` / ``mapInPandas`` over Arrow batches — never per-row
-Python. DataFrame plumbing (grouping, joins, fan-out) is pure Spark, so
-Catalyst handles partitioning; the per-scene/per-tile group kernels are
-embarrassingly parallel across groups.
+``mapInPandas`` over Arrow batches — per-key kernels through the one
+sorted-run group primitive (:func:`buffered_group_flatmap`), never
+per-row Python. DataFrame plumbing (grouping, joins, fan-out) is pure
+Spark, so Catalyst handles partitioning; the per-scene/per-tile group
+kernels are embarrassingly parallel across groups.
 
 Scale notes: tiles are the unit of parallelism (co-partition by tile/scene
 key before the kernels — one shuffle); sprite fan-out is a crossJoin
@@ -44,75 +45,102 @@ AREA_COLORS = {
 }
 
 
+def split_sorted_runs(batches, key_col: str):
+    """Split batches sorted on ``key_col`` into runs of one key. Yields,
+    per input batch, the list of runs that batch completes; each run is
+    a dict of column name → numpy array (views into the batch).
+
+    Run boundaries come from one vectorized compare on the key column.
+    Only the run that spans a batch boundary is buffered: its pieces go
+    into a list that is concatenated once, when the run ends, so a group
+    costs time linear in its size whatever the batch count. NULL keys
+    (None/NaN after the Arrow→pandas conversion) form one run, as in
+    ``applyInPandas``."""
+    pending: list[dict] = []
+    pending_key, pending_null = None, False
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+        k = cols[key_col]
+        null = pd.isna(k)
+        change = (k[1:] != k[:-1]) & ~(null[1:] & null[:-1])
+        bounds = [0, *(np.flatnonzero(change) + 1).tolist(), n]
+        runs = []
+        if pending:
+            if (pending_null and null[0]) or (
+                not (pending_null or null[0]) and k[0] == pending_key
+            ):
+                pending.append({c: a[: bounds[1]] for c, a in cols.items()})
+                if len(bounds) == 2:  # the whole batch continues the run
+                    continue
+                del bounds[0]
+            runs.append(_concat_run(pending))
+        for s, e in zip(bounds[:-2], bounds[1:-1]):
+            runs.append({c: a[s:e] for c, a in cols.items()})
+        s = bounds[-2]
+        pending = [{c: a[s:] for c, a in cols.items()}]
+        pending_key, pending_null = k[s], bool(null[s])
+        yield runs
+    if pending:
+        yield [_concat_run(pending)]
+
+
+def _concat_run(pieces: list[dict]) -> dict:
+    if len(pieces) == 1:
+        return pieces[0]
+    return {c: np.concatenate([p[c] for p in pieces]) for c in pieces[0]}
+
+
 def buffered_group_flatmap(df, key_col: str, group_rows, cols, schema):
-    """The engine's one sorted-run group kernel. Many groups per Arrow
-    batch: repartition on ``key_col`` (one task per core) + sort within
-    partitions, then iterate groups inside mapInPandas, buffering the
-    group that spans a batch boundary. One applyInPandas group per key
-    costs ~4 ms of per-group overhead — at millions of tiles that
-    dominates; this shape amortizes it across whole batches (guide §4.5).
+    """The engine's one sorted-run group kernel: every per-key Python
+    kernel crosses the Python boundary here. Repartition on ``key_col``
+    (one task per core) + sort within partitions, then split each
+    partition's Arrow batches into key runs (:func:`split_sorted_runs`),
+    many groups per batch.
 
-    ``group_rows(pdf) -> list[tuple]`` emits ZERO OR MORE output rows
-    (``cols`` order) per key group; groups arrive sorted by key."""
-    import pandas as pd  # noqa: F811 — kernel-local import for executors
-
+    ``group_rows(g) -> list[tuple]`` emits ZERO OR MORE output rows
+    (``cols`` order) per key group. ``g`` maps column name → numpy
+    array: kernels read it only as ``g[c]`` and ``c in g`` (a pandas
+    frame is such a mapping too), never ``len(g)``. A group costs ~1.2 µs
+    of slicing, against ~22 µs for a pandas ``groupby`` sub-frame
+    (``bench_extra.py groups``: 25k four-row groups with a list column,
+    4 vCPU) and ~4 ms for one ``applyInPandas`` call."""
     n_part = arrow_stage_partitions(df.sparkSession)
     arranged = df.repartition(n_part, key_col).sortWithinPartitions(key_col)
 
-    def emit(pdf):
-        out: list = []
-        for _k, g in pdf.groupby(key_col, sort=True):
-            out.extend(group_rows(g))
-        return pd.DataFrame(out, columns=cols)
-
     def kernel(batches):
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            last_key = pdf[key_col].iloc[-1]
-            head = pdf[pdf[key_col] != last_key]
-            pending = pdf[pdf[key_col] == last_key]
-            if len(head):
-                yield emit(head)
-        if pending is not None and len(pending):
-            yield emit(pending)
+        for runs in split_sorted_runs(batches, key_col):
+            out = [row for g in runs for row in group_rows(g)]
+            if out:
+                yield pd.DataFrame(out, columns=cols)
 
     return arranged.mapInPandas(kernel, schema=schema)
-
-
-def buffered_group_map(df, key_col: str, render_group, cols, schema):
-    """:func:`buffered_group_flatmap` with exactly one output row
-    (``render_group(pdf) -> tuple``) per key group."""
-    return buffered_group_flatmap(
-        df, key_col, lambda g: [render_group(g)], cols, schema
-    )
 
 
 # ---------------------------------------------------------------------------
 # map rendering (OsmRenderMap analog, OsmRender.m:430-537)
 # ---------------------------------------------------------------------------
 
-def render_map_kernel(
-    pdf: pd.DataFrame, w: int, h: int
-) -> np.ndarray:
+def render_map_kernel(g, w: int, h: int) -> np.ndarray:
     """One scene/tile: land base, merged-coast water fill, water-body
-    fill, bridge DEST_OUT erase. pdf columns: way_id, kind, xs, ys."""
+    fill, bridge DEST_OUT erase. ``g`` maps columns (kind, xs, ys and
+    optionally way_id) to arrays — a group view or a pandas frame."""
+    kinds, xss, yss = (np.asarray(g[c]) for c in ("kind", "xs", "ys"))
     # shuffle arrival order is nondeterministic; the coast concat/walk is
     # order-sensitive, so pin way_id order (the engine's canonical stand-in
     # for the reference's file order, SURVEY O4)
-    if "way_id" in pdf.columns:
-        pdf = pdf.sort_values("way_id", kind="mergesort")
+    if "way_id" in g:
+        order = np.argsort(np.asarray(g["way_id"]), kind="stable")
+        kinds, xss, yss = kinds[order], xss[order], yss[order]
     surf = new_surface(w, h, LAND_COLOR)
     rect = (0.0, 0.0, float(w), float(h))
 
     coast_subpaths: list[np.ndarray] = []
     water_rings: list[np.ndarray] = []
     bridges: list[np.ndarray] = []
-    for kind, xs, ys in zip(pdf["kind"], pdf["xs"], pdf["ys"]):
+    for kind, xs, ys in zip(kinds, xss, yss):
         path = np.column_stack([np.asarray(xs), np.asarray(ys)])
         if kind == "coast":
             coast_subpaths.extend(clip_polyline(path, rect))
@@ -141,19 +169,16 @@ def render_map_tiles(scene_ways: DataFrame, w: int, h: int) -> DataFrame:
     """scene_ways(scene_id, way_id, kind, xs, ys — pixel space) →
     (scene_id, bytes, w, h) one rendered base tile per scene."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        surf = render_map_kernel(pdf, w, h)
-        return pd.DataFrame(
-            {
-                "scene_id": [pdf["scene_id"].iloc[0]],
-                "bytes": [encode_png(surf)],
-                "w": [w],
-                "h": [h],
-            }
-        )
+    def render_group(g) -> list[tuple]:
+        surf = render_map_kernel(g, w, h)
+        return [(g["scene_id"][0], encode_png(surf), w, h)]
 
-    return scene_ways.groupBy("scene_id").applyInPandas(
-        kernel, schema="scene_id long, bytes binary, w int, h int"
+    return buffered_group_flatmap(
+        scene_ways,
+        "scene_id",
+        render_group,
+        ["scene_id", "bytes", "w", "h"],
+        "scene_id long, bytes binary, w int, h int",
     )
 
 
@@ -219,24 +244,25 @@ def pack_atlas(sprites: DataFrame) -> DataFrame:
     """A5/R10: per-scene atlas of all sprites, deterministic order
     (area_id, mode). Single group per scene — bounded by sprite count."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .kernels import atlas
+    from .kernels import atlas
 
-        pdf = pdf.sort_values(["area_id", "mode"], kind="mergesort")
-        imgs = [decode_image(b, "png") for b in pdf["sprite"]]
+    def atlas_group(g) -> list[tuple]:
+        # stable two-pass argsort = lexicographic (area_id, mode) order
+        order = np.argsort(g["mode"], kind="stable")
+        order = order[np.argsort(g["area_id"][order], kind="stable")]
+        imgs = [decode_image(b, "png") for b in g["sprite"][order]]
         packed = atlas(imgs)
-        return pd.DataFrame(
-            {
-                "scene_id": [pdf["scene_id"].iloc[0]],
-                "atlas": [encode_png(packed)],
-                "w": [packed.shape[1]],
-                "h": [packed.shape[0]],
-                "n_sprites": [len(imgs)],
-            }
-        )
+        return [
+            (g["scene_id"][0], encode_png(packed), packed.shape[1],
+             packed.shape[0], len(imgs))
+        ]
 
-    return sprites.groupBy("scene_id").applyInPandas(
-        kernel, schema="scene_id long, atlas binary, w int, h int, n_sprites int"
+    return buffered_group_flatmap(
+        sprites,
+        "scene_id",
+        atlas_group,
+        ["scene_id", "atlas", "w", "h", "n_sprites"],
+        "scene_id long, atlas binary, w int, h int, n_sprites int",
     )
 
 
@@ -339,22 +365,22 @@ def render_slippy_tiles(
         ).alias("ys"),
     )
 
-    def render_group(g: pd.DataFrame):
+    def render_group(g) -> list[tuple]:
         surf = render_map_kernel(g, tile_px, tile_px)
         # n_ways/way_sum: engine-independent per-tile manifest digests
         # (each way appears exactly once per covered tile) — the
         # slippy_render oracle recomputes them from the fan-out
         # arithmetic in DuckDB
-        return (
-            int(g["tile_key"].iloc[0]),
-            int(g["tile_x"].iloc[0]),
-            int(g["tile_y"].iloc[0]),
+        return [(
+            int(g["tile_key"][0]),
+            int(g["tile_x"][0]),
+            int(g["tile_y"][0]),
             encode_png(surf),
-            len(g),
+            len(g["way_id"]),
             int(g["way_id"].sum()),
-        )
+        )]
 
-    return buffered_group_map(
+    return buffered_group_flatmap(
         local,
         "tile_key",
         render_group,

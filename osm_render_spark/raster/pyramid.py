@@ -31,13 +31,12 @@ driver's value-hash).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import arrow_stage_partitions
 from .codec import decode_png, encode_png
-from .ops import LAND_COLOR, buffered_group_map
+from .ops import LAND_COLOR, buffered_group_flatmap
 
 
 def downsample2x(img: np.ndarray) -> np.ndarray:
@@ -108,22 +107,21 @@ def rollup_level(tiles: DataFrame, zoom: int, tile_px: int = 256) -> DataFrame:
         "way_sum",
     )
 
-    def render_group(g: pd.DataFrame):
+    def render_group(g) -> list[tuple]:
         png = _compose_parent(
             list(zip(g["qx"], g["qy"], g["bytes"])), tile_px
         )
-        return (
-            int(g["parent_key"].iloc[0]),
-            int(g["px"].iloc[0]),
-            int(g["py"].iloc[0]),
+        return [(
+            int(g["parent_key"][0]),
+            int(g["px"][0]),
+            int(g["py"][0]),
             png,
             int(g["n_ways"].sum()),
             int(g["way_sum"].sum()),
-            len(g),
-        )
+            len(g["qx"]),
+        )]
 
-    # group-buffered mapInPandas (shared shape — raster/ops.py)
-    return buffered_group_map(
+    return buffered_group_flatmap(
         prepared,
         "parent_key",
         render_group,
@@ -154,8 +152,6 @@ def rollup_levels(
     at 4^n_levels tiles."""
     if zoom < n_levels:
         raise ValueError("cannot roll up below zoom 0")
-    from .ops import buffered_group_flatmap
-
     n_anc = 1 << (zoom - n_levels)
     prepared = tiles.select(
         (
@@ -169,7 +165,7 @@ def rollup_levels(
         "way_sum",
     )
 
-    def subtree_rows(g: pd.DataFrame) -> list[tuple]:
+    def subtree_rows(g) -> list[tuple]:
         cur = {
             (int(x), int(y)): (png, int(nw), int(ws))
             for x, y, png, nw, ws in zip(

@@ -16,7 +16,8 @@ tile computes alone:
 
   stage 1 (narrow mapInPandas): every tile emits its full core to
     itself plus 8 border parts addressed to its neighbors;
-  stage 2 (ONE exchange, groupBy tile + applyInPandas): assemble the
+  stage 2 (ONE exchange, the sorted-run group kernel keyed by tile —
+    raster/ops.buffered_group_flatmap): assemble the
     (tile_px+2)² padded array, replicate edges where a neighbor is
     absent (= global clamp-to-edge), run the numpy kernel on the core.
 
@@ -163,24 +164,34 @@ def _halo_parts_df(src: DataFrame, tile_px: int, keyed: bool) -> DataFrame:
     return core.unionByName(strips)
 
 
+def _halo_parts(g) -> dict[tuple[int, int], bytes]:
+    """A tile group's parts keyed by their (dx, dy) position."""
+    return {
+        (int(dx), int(dy)): part
+        for dx, dy, part in zip(g["dx"], g["dy"], g["part"])
+    }
+
+
 def _assemble_flags(
-    group: pd.DataFrame, tile_px: int
+    g, tile_px: int
 ) -> tuple[np.ndarray, bool, bool] | None:
     """_assemble plus (has_east, has_south) neighbor-presence flags —
     contour cells on the last row/column exist only when the neighbor
     does (the cell grid is one smaller than the pixel grid)."""
-    parts = {(int(r.dx), int(r.dy)) for r in group.itertuples()}
-    p = _assemble(group, tile_px)
+    parts = _halo_parts(g)
+    p = _assemble(parts, tile_px)
     if p is None:
         return None
     return p, (1, 0) in parts, (0, 1) in parts
 
 
-def _assemble(group: pd.DataFrame, tile_px: int) -> np.ndarray | None:
-    """Padded (tile_px+2)² array from a tile's core + neighbor strips;
-    absent neighbors replicate the nearest filled edge (global clamp).
-    None when the group is halo-only (an address off the tile grid)."""
-    parts = {(int(r.dx), int(r.dy)): r.part for r in group.itertuples()}
+def _assemble(
+    parts: dict[tuple[int, int], bytes], tile_px: int
+) -> np.ndarray | None:
+    """Padded (tile_px+2)² array from a tile's core + neighbor strips
+    (:func:`_halo_parts`); absent neighbors replicate the nearest filled
+    edge (global clamp). None when the group is halo-only (an address
+    off the tile grid)."""
     if (0, 0) not in parts:
         return None
     core = np.frombuffer(parts[0, 0], dtype=_I32).reshape(tile_px, tile_px)
@@ -253,35 +264,32 @@ def terrain_tiles(
 
     import pyspark.sql.functions as F
 
-    from .ops import buffered_group_map
+    from .ops import buffered_group_flatmap
 
     parts = _halo_parts_df(src, tile_px, keyed).withColumn(
         "gkey", F.concat_ws(":", "raster", "tx", "ty")
     )
     key_sel = (["raster"] if keyed else []) + ["tx", "ty"]
 
-    # buffered_group_map (many tiles per Arrow batch) instead of one
-    # applyInPandas call per tile: per-group Python overhead is ~4 ms,
-    # which at a million tiles would dwarf the numpy kernel
     if mode == "hillshade":
         cols = ["raster", "tx", "ty", "shade"]
         schema = "raster string, tx long, ty long, shade binary"
 
-        def render_group(g: pd.DataFrame):
-            p = _assemble(g, tile_px)
-            r = g.iloc[0]
-            if p is None:  # halo-only address off the grid → dropped below
-                return (r["raster"], int(r["tx"]), int(r["ty"]), None)
+        def render_group(g) -> list[tuple]:
+            p = _assemble(_halo_parts(g), tile_px)
+            if p is None:  # halo-only address off the grid
+                return []
             hs = hillshade(
                 p,
                 cellsize=cellsize,
                 azimuth_deg=azimuth_deg,
                 altitude_deg=altitude_deg,
             )
-            return (r["raster"], int(r["tx"]), int(r["ty"]), hs.tobytes())
+            return [(g["raster"][0], int(g["tx"][0]), int(g["ty"][0]),
+                     hs.tobytes())]
 
-        out = buffered_group_map(parts, "gkey", render_group, cols, schema)
-        return out.where(F.col("shade").isNotNull()).select(*key_sel, "shade")
+        out = buffered_group_flatmap(parts, "gkey", render_group, cols, schema)
+        return out.select(*key_sel, "shade")
 
     # stats mode: PIXEL BYTES NEVER SHUFFLE.  Stage A reduces each
     # tile's interior (rows/cols 1..t−2, whose Horn stencils stay
@@ -341,11 +349,10 @@ def terrain_tiles(
         "sum_z long, sum_abs_gx long, sum_abs_gy long"
     )
 
-    def render_group(g: pd.DataFrame):
-        r = g.iloc[0]
-        parts_map = {(int(p.dx), int(p.dy)): p.part for p in g.itertuples()}
+    def render_group(g) -> list[tuple]:
+        parts_map = _halo_parts(g)
         if (2, 2) not in parts_map:  # halo-only address off the grid
-            return (r["raster"], int(r["tx"]), int(r["ty"]), None, None, None)
+            return []
         psum = np.frombuffer(parts_map[2, 2], dtype=np.int64)
         frame = np.frombuffer(parts_map[0, 0], dtype=_I32)
         p = np.zeros((t + 2, t + 2), dtype=np.int64)
@@ -385,17 +392,15 @@ def terrain_tiles(
         p[-1, 0] = corner(-1, 1, -1, 0)
         p[-1, -1] = corner(1, 1, -1, -1)
         gx, gy = horn_gradients(p)
-        return (
-            r["raster"], int(r["tx"]), int(r["ty"]),
+        return [(
+            g["raster"][0], int(g["tx"][0]), int(g["ty"][0]),
             int(psum[0]),
             int(psum[1] + np.abs(gx)[ring].sum()),
             int(psum[2] + np.abs(gy)[ring].sum()),
-        )
+        )]
 
-    out = buffered_group_map(parts_s, "gkey", render_group, cols, schema)
-    return out.where(F.col("sum_z").isNotNull()).select(
-        *key_sel, "sum_z", "sum_abs_gx", "sum_abs_gy"
-    )
+    out = buffered_group_flatmap(parts_s, "gkey", render_group, cols, schema)
+    return out.select(*key_sel, "sum_z", "sum_abs_gx", "sum_abs_gy")
 
 
 # marching-squares segment table: corner bits TL=8 TR=4 BR=2 BL=1
@@ -524,9 +529,8 @@ def contour_tiles(
         if got is None:
             return None
         p, has_e, has_s = got
-        r0 = g.iloc[0]
         m = _cell_mask(tile_px, has_e, has_s)
-        return p, m, r0["raster"], int(r0["tx"]), int(r0["ty"])
+        return p, m, g["raster"][0], int(g["tx"][0]), int(g["ty"][0])
 
     if mode == "stats":
         def group_rows(g):
@@ -614,7 +618,7 @@ def dem_overview(
         raise ValueError("tile_px must be divisible by factor")
     import pyspark.sql.functions as F
 
-    from .ops import buffered_group_map
+    from .ops import buffered_group_flatmap
 
     keyed = raster_col is not None
     src = (
@@ -645,23 +649,22 @@ def dem_overview(
 
     sub = tile_px // f
 
-    def render_group(g: pd.DataFrame):
-        r0 = g.iloc[0]
+    def render_group(g) -> list[tuple]:
         out = np.zeros((tile_px, tile_px), dtype=np.int64)
-        for r in g.itertuples(index=False):
-            a = np.frombuffer(r.dem, dtype=_I32).reshape(tile_px, tile_px)
+        for dem, sx, sy in zip(g["dem"], g["sx"], g["sy"]):
+            a = np.frombuffer(dem, dtype=_I32).reshape(tile_px, tile_px)
             s = a.astype(np.int64).reshape(tile_px // f, f, tile_px // f, f)
             sums = s.sum(axis=(1, 3))
             # floor(sum/f² + 1/2) — exact, negative-safe
             pooled = (2 * sums + f * f) // (2 * f * f)
-            y0, x0 = int(r.sy) * sub, int(r.sx) * sub
+            y0, x0 = int(sy) * sub, int(sx) * sub
             out[y0 : y0 + sub, x0 : x0 + sub] = pooled
-        return (
-            r0["raster"], int(r0["otx"]), int(r0["oty"]),
+        return [(
+            g["raster"][0], int(g["otx"][0]), int(g["oty"][0]),
             out.astype(_I32).tobytes(),
-        )
+        )]
 
-    res = buffered_group_map(
+    res = buffered_group_flatmap(
         parts,
         "gkey",
         render_group,

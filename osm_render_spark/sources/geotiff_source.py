@@ -157,18 +157,20 @@ def read_geotiff_tiles(
 
     import pyspark.sql.functions as F
 
-    from ..raster.ops import buffered_group_map
+    from ..raster.ops import buffered_group_flatmap
 
-    def assemble(group: pd.DataFrame):
+    def assemble(g) -> list[tuple]:
         tile = np.zeros((tile_px, tile_px), dtype=_I32)
-        for r in group.itertuples():
-            a = np.frombuffer(r.px, dtype=_I32).reshape(r.sh, r.sw)
-            tile[r.oy : r.oy + r.sh, r.ox : r.ox + r.sw] = a
-        r0 = group.iloc[0]
-        return (r0["raster"], int(r0["tx"]), int(r0["ty"]), tile.tobytes())
+        for px, *box in zip(g["px"], g["oy"], g["ox"], g["sh"], g["sw"]):
+            oy, ox, sh, sw = map(int, box)
+            a = np.frombuffer(px, dtype=_I32).reshape(sh, sw)
+            tile[oy : oy + sh, ox : ox + sw] = a
+        return [
+            (g["raster"][0], int(g["tx"][0]), int(g["ty"][0]), tile.tobytes())
+        ]
 
     keyed = parts.withColumn("gkey", F.concat_ws(":", "raster", "tx", "ty"))
-    return buffered_group_map(
+    return buffered_group_flatmap(
         keyed,
         "gkey",
         assemble,

@@ -995,7 +995,6 @@ def read_pbf(
     spark,
     path: str,
     use_index: bool = True,
-    cache_index: bool = True,
     split_bytes: int | None = 128 << 20,
 ):
     """``.osm.pbf`` → (nodes, ways, relations) DataFrames in the
@@ -1017,14 +1016,13 @@ def read_pbf(
     non-seekable sources and as the differential-testing twin — both
     paths produce identical DataFrames.
 
-    ``cache_index=True`` (index mode only): persist the pointer index
-    after its shuffle, so the three returned DataFrames — and repeated
-    actions on any of them — share ONE header scan instead of re-scanning
-    per action. The index is ~30 bytes/blob (an 80 GB planet ≈ 2.5 MB),
-    so the cache is always driver-trivial; Spark evicts it LRU like any
-    cached plan. The cache is private to the call: a later ``read_pbf``
-    of the same path (e.g. after the file was rewritten) scans afresh.
-    Pass False for strict no-side-effect plan building.
+    Index mode persists the pointer index after its shuffle, so the
+    three returned DataFrames — and repeated actions on any of them —
+    share ONE header scan instead of re-scanning per action. The index
+    is ~30 bytes/blob (an 80 GB planet ≈ 2.5 MB), so the cache is always
+    driver-trivial; Spark evicts it LRU like any cached plan. The cache
+    is private to the call: a later ``read_pbf`` of the same path (e.g.
+    after the file was rewritten) scans afresh.
 
     ``split_bytes`` (index mode only, default 128 MiB): files larger
     than this are indexed in PARALLEL byte-range splits — each split
@@ -1138,13 +1136,12 @@ def read_pbf(
         bad_row = F.when(
             F.col("prev_end").isNull(), F.col("offset") != 0
         ).otherwise(F.col("prev_end") != F.col("offset"))
-        if cache_index:
-            # one header walk TOTAL: the guard's broadcast job (driver
-            # builds broadcast relations before submitting the main
-            # stage) populates this cache, and every later reference —
-            # the data branch plus all actions on the three returned
-            # DataFrames — reads it. ~30 bytes/blob, driver-trivial.
-            idx = idx.persist()
+        # one header walk TOTAL: the guard's broadcast job (driver builds
+        # broadcast relations before submitting the main stage) populates
+        # this cache, and every later reference — the data branch plus all
+        # actions on the three returned DataFrames — reads it. ~30
+        # bytes/blob, driver-trivial.
+        idx = idx.persist()
         # ONE aggregation pass folds every integrity counter (the r3 code
         # ran gaps/overruns/tails/missing as separate subplans, so a
         # single action re-walked the headers ~5×; on a remote store each
@@ -1205,9 +1202,8 @@ def read_pbf(
             .unionByName(carrier)
             .repartition(n_part, "path", "blob_idx")
             .crossJoin(F.broadcast(guard))
+            .persist()
         )
-        if cache_index:
-            blobs = blobs.persist()
 
         def fetch(pdf):
             if len(pdf):

@@ -385,18 +385,16 @@ def _write_nodes_pbf(path, n):
 def test_read_pbf_after_rewrite_sees_new_file(spark, tmp_path, first, second):
     """A read persists its blob index; a later read of the same path must
     never be served that index after the file was rewritten. Growing the
-    file used to return the old node count silently (even with
-    cache_index=False); shrinking it made the decode read past the new
-    file's end."""
+    file used to return the old node count silently; shrinking it made
+    the decode read past the new file's end."""
     path = str(tmp_path / "rewritten.osm.pbf")
     _write_nodes_pbf(path, first)
     nodes, _w, _r = read_pbf(spark, path)
     assert nodes.count() == first
     _write_nodes_pbf(path, second)
-    for cache_index in (False, True):
-        nodes, _w, _r = read_pbf(spark, path, cache_index=cache_index)
-        assert nodes.count() == second
-        assert {r["id"] for r in nodes.collect()} == set(range(1, second + 1))
+    nodes, _w, _r = read_pbf(spark, path)
+    assert nodes.count() == second
+    assert {r["id"] for r in nodes.collect()} == set(range(1, second + 1))
 
 
 def test_ways_in_rect_over_pbf_matches_fixture_tables(spark):

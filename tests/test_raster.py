@@ -60,17 +60,8 @@ def test_jpeg_lossy_psnr_above_40db():
     assert dec.shape == (396, 396, 3)
     p = psnr(img[:, :, :3], dec)
     assert p >= 40.0, f"JPEG PSNR {p:.1f} dB < 40"
-
-
-def test_legacy_fake_jpeg_blobs_still_decode():
-    """decode_image dispatches on magic: FJPG blobs written by older
-    fixture parquet keep decoding after the real-codec switch."""
-    from osm_render_spark.raster.codec import encode_fake_jpeg
-
-    img = _img(4, 32, 32)
-    dec = decode_image(encode_fake_jpeg(img), "jpeg")
-    assert dec.shape == img.shape
-    assert psnr(img, dec) >= 40.0
+    with pytest.raises(ValueError, match="missing SOI"):
+        decode_image(encode_png(img), "jpeg")
 
 
 def test_phash_deterministic_and_sensitive():
